@@ -128,11 +128,26 @@ object Multimodal {
   def synthesizePngs(spark: SparkSession, docs: DataFrame, idCol: String): DataFrame = {
     import spark.implicits._
     docs.select(col(idCol).cast("long")).as[Long]
-      .mapPartitions { it =>
-        val writer = javax.imageio.ImageIO.getImageWritersByFormatName("png").next()
-        it.grouped(BatchSize).flatMap(_.iterator.map(id => (id, synthPngWith(id, writer))))
-      }
+      .mapPartitions(encodePartition("png", _)(synthPngWith))
       .toDF(idCol, "media")
+  }
+
+  /** Encode a partition's ids through ONE writer of `format`, disposed
+    * when the iterator is exhausted and, defensively, at task completion
+    * (an abandoned iterator must not keep the writer's state alive).
+    */
+  private def encodePartition(format: String, ids: Iterator[Long])(
+      encode: (Long, javax.imageio.ImageWriter) => Array[Byte]): Iterator[(Long, Array[Byte])] = {
+    val writer = javax.imageio.ImageIO.getImageWritersByFormatName(format).next()
+    var live = true
+    def dispose(): Unit = if (live) { live = false; writer.dispose() }
+    val ctx = org.apache.spark.TaskContext.get()
+    if (ctx != null) ctx.addTaskCompletionListener[Unit](_ => dispose())
+    val out = ids.grouped(BatchSize).flatMap(_.iterator.map(id => (id, encode(id, writer))))
+    new Iterator[(Long, Array[Byte])] {
+      def hasNext: Boolean = out.hasNext || { dispose(); false }
+      def next(): (Long, Array[Byte]) = out.next()
+    }
   }
 
   /** REAL image decode through the batched partition shape: javax.imageio
@@ -297,10 +312,7 @@ object Multimodal {
   def synthesizeGifs(spark: SparkSession, docs: DataFrame, idCol: String): DataFrame = {
     import spark.implicits._
     docs.select(col(idCol).cast("long")).as[Long]
-      .mapPartitions { it =>
-        val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-        it.grouped(BatchSize).flatMap(_.iterator.map(id => (id, synthGifWith(id, writer))))
-      }
+      .mapPartitions(encodePartition("gif", _)(synthGifWith))
       .toDF(idCol, "media")
   }
 

@@ -35,4 +35,18 @@ private[graft] object FsUtil {
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
       .map(_.getPath.getName).toSet
   }
+
+  /** `key=<value>` partition directories directly under `dir`, as
+    * (value, full path) pairs, from one driver-side listing (empty when
+    * `dir` doesn't exist yet).
+    */
+  def listPartitionDirs(s: SparkSession, dir: String, key: String): Seq[(String, String)] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val prefix = key + "="
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith(prefix))
+      .map(st => (st.getPath.getName.stripPrefix(prefix), st.getPath.toString))
+  }
 }

@@ -14,8 +14,11 @@ import org.apache.spark.sql.functions._
   * neighborhood, and a coarse prefix becomes a directory partition.
   *
   * Read side: a query window prunes three times —
-  *   1. directory pruning: `z2p IN (covering cells)` → PartitionFilters,
-  *      unmatched directories are never listed;
+  *   1. directory pruning: one driver-side listing of the layout root
+  *      names the `z2p=` directories, and only the covered ones (plus
+  *      the spill directory) are handed to Spark, so unmatched
+  *      directories are never listed for files; `z2p IN (covering
+  *      cells)` stays as the PartitionFilters over what was listed;
   *   2. row-group pruning: SpatialFilterPushdown rewrites
   *      `st_intersects(extent, window)` into field ranges → PushedFilters
   *      against the sorted row-group stats;
@@ -63,11 +66,34 @@ object SpatialLayout {
   def readWindow(spark: SparkSession, path: String,
                  xmin: Double, ymin: Double, xmax: Double, ymax: Double,
                  dirLevel: Int = 4, geomCol: String = "geom"): DataFrame = {
-    val cells = (Z2.coverEnvelope(xmin, ymin, xmax, ymax, dirLevel) :+ SpillKey).map(Long.box)
+    val cells = Z2.coverEnvelope(xmin, ymin, xmax, ymax, dirLevel) :+ SpillKey
     val window = st.makeBBOX(lit(xmin), lit(ymin), lit(xmax), lit(ymax))
-    spark.read.parquet(path)
-      .filter(col("z2p").isin(cells.toIndexedSeq: _*))
+    spark.read.option("basePath", path).parquet(windowDirs(spark, path, cells.toSet): _*)
+      .filter(col("z2p").isin(cells.map(Long.box).toIndexedSeq: _*))
       .filter(st.intersects(col("extent"), window)) // pushdown-rewritten ranges
       .filter(st.intersects(col(geomCol), window))  // exact JTS residual
+  }
+
+  /** The directories a window reads: the `z2p=` directories of `cells`
+    * that exist. Handing Spark a few paths keeps its file listing on the
+    * driver; the whole root would be listed by a Spark job with one task
+    * per directory once it holds more than 32.
+    *
+    * Spark infers `z2p`'s type from the directories it is given, so when
+    * the window covers none, or the layout holds a key past Int range
+    * (dirLevel ≥ 16), the directory with the largest key is added too:
+    * the schema then matches a read of the whole root, and the `z2p IN`
+    * PartitionFilter prunes that directory before any of its files is
+    * read. A root without `z2p=` directories is read as is.
+    */
+  private def windowDirs(spark: SparkSession, path: String, cells: Set[Long]): Seq[String] = {
+    val dirs = FsUtil.listPartitionDirs(spark, path, "z2p").map { case (v, p) => (v.toLong, p) }
+    if (dirs.isEmpty) Seq(path)
+    else {
+      val covered = dirs.filter(d => cells(d._1))
+      val widest = dirs.maxBy(_._1)
+      val witness = if (covered.isEmpty || !widest._1.isValidInt) Seq(widest) else Nil
+      (covered ++ witness).distinct.map(_._2)
+    }
   }
 }
