@@ -8,8 +8,8 @@ Usage (from anywhere inside the repository):
 Checks BASE and CHANGE out into their own `git worktree` under a temp dir
 (honours TMPDIR), then runs `python3 perfbench/run.py --seconds 30 --trace 0`
 (the benchmark's fixed run length) in N pairs. Pair i uses seed S+i on both
-sides, and the side that runs first alternates. Each checkout builds and makes its inputs on its first run;
-the metrics exclude that.
+sides, and the side that runs first alternates. Each checkout builds and
+makes its inputs on its first run; the metrics exclude that.
 
 For every end-to-end metric of BASE's BENCHMARK.json it prints each side's
 median and quartiles, BASE's relative spread (q3 - q1) / median, the pairs
