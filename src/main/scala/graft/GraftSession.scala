@@ -57,6 +57,10 @@ object GraftSession {
       .config("spark.sql.constraintPropagation.enabled",
         sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROPAGATION", "false"))
       .config("spark.ui.enabled", "false")
+      // Local writes set modes in-process instead of forking `chmod`
+      // per file and directory (no libhadoop). Hadoop caches the first
+      // `file:` filesystem, so this only takes effect at build time.
+      .config("spark.hadoop.fs.file.impl", "graft.sources.PosixLocalFileSystem")
 
   /** Register graft's UDT, SQL functions and optimizer rules on an
     * existing session.

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * Write side: every row carries `extent` (plain struct → parquet
   * min/max stats per field) and a Z2 cell key; rows are range-partitioned
-  * and sorted by the key so each row group covers a tight spatial
-  * neighborhood, and a coarse prefix becomes a directory partition.
+  * by the key and sorted by (z2p, z2) within each file, so each row group
+  * covers a tight spatial neighborhood, and a coarse prefix (`z2p`)
+  * becomes a directory partition.
   *
   * Read side: a query window prunes three times —
   *   1. directory pruning: one driver-side listing of the layout root
@@ -36,7 +37,8 @@ object SpatialLayout {
 
   /** Write `df` in the Z2-clustered layout. `level` keys row ordering
     * (finer = tighter row groups); `dirLevel` keys directory granularity
-    * (4 → up to 256 directories worldwide).
+    * (4 → up to 256 directories worldwide). Rows are sorted by
+    * (z2p, z2) within each file.
     *
     * A geometry whose envelope fits inside one dirLevel cell gets that
     * cell as its directory key; one that crosses a cell boundary goes to
@@ -56,7 +58,9 @@ object SpatialLayout {
           .otherwise(lit(SpillKey)))
       .drop("__cover")
       .repartitionByRange(col("z2"))
-      .sortWithinPartitions("z2")
+      // The partitioned write requires rows sorted by z2p and adds that
+      // sort itself, dropping a plain z2 sort; (z2p, z2) satisfies it.
+      .sortWithinPartitions("z2p", "z2")
       .write.partitionBy("z2p").mode("overwrite").parquet(path)
 
   /** Scan a Z2 layout pruned to a query window: covered directories plus

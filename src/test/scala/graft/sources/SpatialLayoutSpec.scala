@@ -90,6 +90,18 @@ class SpatialLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers 
     pruned should not be empty
   }
 
+  test("rows are z2-ordered within every part file") {
+    // Small files are read whole and in order, so collect keeps each
+    // file's row order.
+    val rows = spark.read.parquet(globalPath).select(col("_metadata.file_path"), col("z2"))
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    val byFile = rows.groupBy(_._1).values.map(_.map(_._2).toSeq)
+    byFile.size should be > 32
+    byFile.count(_.size > 1) should be > 32
+    val unordered = byFile.count(z => z != z.sorted)
+    withClue(s"$unordered of ${byFile.size} files not z2-ordered: ") { unordered shouldBe 0 }
+  }
+
   test("directory pruning: the scan touches fewer files than exist") {
     val totalFiles = spark.read.parquet(layoutPath).inputFiles.length
     val scan = scanOf(SpatialLayout.readWindow(spark, layoutPath,
