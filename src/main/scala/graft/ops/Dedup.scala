@@ -184,26 +184,6 @@ object Dedup {
     size(array_intersect(a, b)).cast("double") /
       size(array_union(a, b)).cast("double")
 
-  /** MinHash + LSH near-duplicate pairs: shingle → signature → band
-    * buckets → bucket equi-join → exact-Jaccard verify.
-    *
-    * Returns (id_a, id_b, jaccard) for candidate pairs with
-    * jaccard >= threshold. Candidate recall follows the standard LSH
-    * S-curve for `bands` bands of `numPerm/bands` rows.
-    *
-    * `maxBucket` drops band buckets holding more rows than the cap
-    * before the self-join. A bucket of m rows yields m² candidate
-    * pairs — one boilerplate-heavy key at 100 TB would otherwise dominate
-    * the whole job, and AQE can only split a skewed partition, not shrink
-    * the quadratic pair count. Run [[exact]] first: a giant bucket is
-    * near-always identical content, which exact dedup removes for the
-    * cost of a hash. Regimes (r10): maxBucket > 0 explicit cap; 0
-    * (default) the [[defaultMaxBucket]] occupancy cap computed from one
-    * count() over `df` (an extra lineage replay on a derived corpus —
-    * cache upstream or pass an explicit cap, the [[Ann.defaultNlist]]
-    * caveat); < 0 unlimited (the exact-recall regime the CORRECTNESS
-    * entries pin).
-    */
   /** (id, __sh, __sig) — the shared shingle+signature frame for
     * [[minhashLsh]] and the persisted [[graft.sources.MinhashIndex]]:
     * both MUST evaluate the identical expressions, or index probes
@@ -228,27 +208,36 @@ object Dedup {
         hash(slice(col("__sig"), j * r + 1, lit(r))))).as(Seq("__band", "__bkey")))
   }
 
+  /** MinHash + LSH near-duplicate pairs: shingle → signature → band
+    * buckets → bucket equi-join → exact-Jaccard verify.
+    *
+    * Returns (id_a, id_b, jaccard) for candidate pairs with
+    * jaccard >= threshold. Candidate recall follows the standard LSH
+    * S-curve for `bands` bands of `numPerm/bands` rows.
+    *
+    * `maxBucket` drops band buckets holding more rows than the cap
+    * before the self-join. A bucket of m rows yields m² candidate
+    * pairs — one boilerplate-heavy key at 100 TB would otherwise dominate
+    * the whole job, and AQE can only split a skewed partition, not shrink
+    * the quadratic pair count. Run [[exact]] first: a giant bucket is
+    * near-always identical content, which exact dedup removes for the
+    * cost of a hash. Regimes (r10): maxBucket > 0 explicit cap; 0
+    * (default) the [[defaultMaxBucket]] occupancy cap computed from one
+    * count() over `df` (an extra lineage replay on a derived corpus —
+    * cache upstream or pass an explicit cap, the [[Ann.defaultNlist]]
+    * caveat); < 0 unlimited (the exact-recall regime the CORRECTNESS
+    * entries pin).
+    *
+    * With a cap active the band-key postings are checkpointed into
+    * `pins`, and the result reads them lazily: the caller's [[Pins]]
+    * owns them (a per-trigger caller closes it once the pairs have
+    * materialized).
+    */
   def minhashLsh(
       df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, numPerm: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8, seed: Long = 42, maxBucket: Int = 0): DataFrame =
-    minhashLshReleasable(df, idCol, textCol, k, numPerm, bands,
-      threshold, seed, maxBucket)._1
-
-  /** [[minhashLsh]] plus the frames it localCheckpoints that the result
-    * still reads lazily (the band-key postings, materialized whenever a
-    * cap is active): one-shot callers rely on the ContextCleaner, but a
-    * long-running maintainer ([[graft.sources.MinhashIndex.probe]]'s
-    * batch-internal pass inside [[graft.streaming.NearDupStream]])
-    * releases them once the pairs are materialized — otherwise every
-    * trigger would pin one posting-sized checkpoint for the session
-    * lifetime (the mergeComponentsReleasable pattern).
-    */
-  private[graft] def minhashLshReleasable(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, numPerm: Int = 64, bands: Int = 16,
-      threshold: Double = 0.8, seed: Long = 42,
-      maxBucket: Int = 0): (DataFrame, Seq[DataFrame]) = {
+      threshold: Double = 0.8, seed: Long = 42, maxBucket: Int = 0,
+      pins: Pins = new Pins): DataFrame = {
     require(numPerm % bands == 0, "bands must divide numPerm")
     val cap = if (maxBucket == 0) defaultMaxBucket(df.count()) else maxBucket
     val withSig = sigFrame(df, idCol, textCol, k, numPerm, seed)
@@ -258,7 +247,7 @@ object Dedup {
     // shingle+signature scan (SkewBench r10: the re-pay cost 1.3× the
     // whole uncapped run on the 50k-doc skew corpus)
     val allBandKeys0 = bandKeyRows(withSig, idCol, numPerm, bands)
-    val allBandKeys = if (cap > 0) allBandKeys0.localCheckpoint() else allBandKeys0
+    val allBandKeys = if (cap > 0) pins(allBandKeys0) else allBandKeys0
     val bandKeys = dropOverCapBuckets(allBandKeys, Seq("__band", "__bkey"), cap)
     val a = bandKeys.select(col(idCol).as("id_a"), col("__band"), col("__bkey"))
     val b = bandKeys.select(col(idCol).as("id_b"), col("__band"), col("__bkey"))
@@ -269,13 +258,12 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
     val sh = withSig.select(col(idCol), col("__sh"))
-    val pairs = candidates
+    candidates
       .join(sh.select(col(idCol).as("id_a"), col("__sh").as("__sha")), "id_a")
       .join(sh.select(col(idCol).as("id_b"), col("__sh").as("__shb")), "id_b")
       .withColumn("jaccard", jaccard(col("__sha"), col("__shb")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-    (pairs, if (cap > 0) Seq(allBandKeys) else Seq.empty)
   }
 
   /** EXACT n-gram Jaccard set-similarity self-join — no cross product and
@@ -486,6 +474,22 @@ object Dedup {
     within.unionByName(cross)
   }
 
+  /** The w-bit chunk array of a 64-bit hash column — the shared banding
+    * expression for [[hammingPairs]] and the persisted
+    * [[graft.sources.HammingIndex]] (the [[sigFrame]] contract: index
+    * probes must chunk exactly as the in-flight path does, or they
+    * would miss collisions it finds). `hashColName` is interpolated
+    * into a SQL lambda because the per-element shift amount is itself
+    * the lambda variable (the Column API's shiftright takes a literal).
+    */
+  private[graft] def hammingChunks(hashColName: String, pieces: Int): Column = {
+    require(pieces >= 2 && 64 % pieces == 0, "pieces must divide 64")
+    val width = 64 / pieces
+    val mask = if (width == 64) -1L else (1L << width) - 1L
+    expr(s"transform(sequence(0, ${pieces - 1}), " +
+      s"j -> shiftright($hashColName, cast(j * $width AS int)) & ${mask}L)")
+  }
+
   /** Generic Hamming near-dup pairs over ANY 64-bit signature column
     * (SimHash, perceptual image hashes, audio fingerprints): pigeonhole
     * banding — split the word into `pieces` chunks; hamming ≤ maxDist <
@@ -522,39 +526,13 @@ object Dedup {
     * within-group expansion once per occurrence; an id spread across
     * two near hashes is guarded against surfacing as a self pair, but
     * its cross pairs are the caller's duplicate mass.
+    *
+    * The collapsed hash groups are checkpointed into `pins` and the
+    * result reads them lazily: the caller's [[Pins]] owns them.
     */
   def hammingPairs(df: DataFrame, idCol: String, hashCol: String,
-                   maxDist: Int, pieces: Int = 8,
-                   maxBucket: Int = 0): DataFrame =
-    hammingPairsReleasable(df, idCol, hashCol, maxDist, pieces, maxBucket)._1
-
-  /** The w-bit chunk array of a 64-bit hash column — the shared banding
-    * expression for [[hammingPairs]] and the persisted
-    * [[graft.sources.HammingIndex]] (the [[sigFrame]] contract: index
-    * probes must chunk exactly as the in-flight path does, or they
-    * would miss collisions it finds). `hashColName` is interpolated
-    * into a SQL lambda because the per-element shift amount is itself
-    * the lambda variable (the Column API's shiftright takes a literal).
-    */
-  private[graft] def hammingChunks(hashColName: String, pieces: Int): Column = {
-    require(pieces >= 2 && 64 % pieces == 0, "pieces must divide 64")
-    val width = 64 / pieces
-    val mask = if (width == 64) -1L else (1L << width) - 1L
-    expr(s"transform(sequence(0, ${pieces - 1}), " +
-      s"j -> shiftright($hashColName, cast(j * $width AS int)) & ${mask}L)")
-  }
-
-  /** [[hammingPairs]] plus the hash-group frame it localCheckpoints
-    * (three consumers read it lazily): one-shot callers rely on the
-    * ContextCleaner; a long-running maintainer
-    * ([[graft.sources.HammingIndex.probeReleasable]]'s batch-internal
-    * pass) frees it once the pairs are materialized — the
-    * [[minhashLshReleasable]] discipline.
-    */
-  private[graft] def hammingPairsReleasable(
-      df: DataFrame, idCol: String, hashCol: String,
-      maxDist: Int, pieces: Int = 8,
-      maxBucket: Int = 0): (DataFrame, Seq[DataFrame]) = {
+                   maxDist: Int, pieces: Int = 8, maxBucket: Int = 0,
+                   pins: Pins = new Pins): DataFrame = {
     require(pieces >= 2 && 64 % pieces == 0, "pieces must divide 64")
     require(maxDist >= 0 && maxDist < pieces,
       "pigeonhole banding needs maxDist < pieces")
@@ -562,11 +540,10 @@ object Dedup {
     // materialized once (localCheckpoint): three consumers — the
     // within-group expansion, the band postings and the candidate id
     // re-join — would otherwise each replay the collapse shuffle
-    val groups = df
+    val groups = pins(df
       .select(col(idCol).as("__id"), col(hashCol).cast("long").as("__h"))
       .filter(col("__h").isNotNull)
-      .groupBy("__h").agg(collect_list(col("__id")).as("__ids"))
-      .localCheckpoint()
+      .groupBy("__h").agg(collect_list(col("__id")).as("__ids")))
     // hash-identical members are dist-0 pairs by definition
     val within = groups.filter(size(col("__ids")) >= 2)
       .select(explode(col("__ids")).as("id_a"), col("__ids"))
@@ -605,7 +582,7 @@ object Dedup {
       .filter(col("__a") =!= col("__b"))
       .select(least(col("__a"), col("__b")).as("id_a"),
         greatest(col("__a"), col("__b")).as("id_b"), col("dist"))
-    (within.unionByName(cross), Seq(groups))
+    within.unionByName(cross)
   }
 
   // ------------------------------------------------------------ simhash
@@ -824,10 +801,8 @@ object Dedup {
     */
   private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame, idACol: String = "id_a", idBCol: String = "id_b",
-      maxIter: Int = 25, localCutoff: Long = LocalCcMaxEdges): (DataFrame, Int) = {
-    val (labels, rounds, _) = ccInternal(pairs, idACol, idBCol, maxIter, localCutoff)
-    (labels, rounds)
-  }
+      maxIter: Int = 25, localCutoff: Long = LocalCcMaxEdges): (DataFrame, Int) =
+    ccInternal(pairs, idACol, idBCol, maxIter, new Pins, localCutoff)
 
   /** Edge-count gate below which the CC fixpoint finishes as ONE driver
     * union-find instead of O(log n) alternating-star rounds. Every
@@ -846,34 +821,29 @@ object Dedup {
     */
   private[graft] val LocalCcMaxEdges: Long = 200000L
 
-  /** [[connectedComponentsWithRounds]] plus the frames it
-    * localCheckpoints that the RESULT still reads lazily (the pair
-    * frame, the node set, the fixpoint edge set) — a long-lived caller
-    * ([[mergeComponents]], [[graft.streaming.CcStream]]) releases their
-    * cached blocks once it has materialized the labels, so repeated
-    * invocations don't pin one frame copy per call for the session
-    * lifetime. Superseded PER-ROUND edge frames are released inline
-    * here (each round's signature job materializes and
+  /** [[connectedComponentsWithRounds]] with its checkpoints in `pins`:
+    * the RESULT reads the pair frame, the node set and the fixpoint
+    * edge set lazily, so [[mergeComponents]] closes its own `pins` once
+    * the labels have materialized. Superseded PER-ROUND edge frames are
+    * released inline here (each round's signature job materializes and
     * lineage-truncates the next frame, so the previous round's blocks
     * are dead the moment it returns).
     */
   private def ccInternal(
-      pairs: DataFrame, idACol: String, idBCol: String,
-      maxIter: Int, localCutoff: Long = LocalCcMaxEdges): (DataFrame, Int, Seq[DataFrame]) = {
+      pairs: DataFrame, idACol: String, idBCol: String, maxIter: Int,
+      pins: Pins, localCutoff: Long = LocalCcMaxEdges): (DataFrame, Int) = {
     // lazy-checkpoint the pair frame itself: `nodes` and the edge seed
     // both read it, and pair generation is typically the most expensive
     // upstream stage (a similarity join) — without this it would be
     // computed twice. Null endpoints are dropped edge-wise (a pair with
     // no partner is not an edge; NullSafetySpec pins it) so a stray
     // null key can't surface as a (null, null) label row.
-    val raw = pairs.select(col(idACol).cast("long").as("src"),
+    val raw = pins(pairs.select(col(idACol).cast("long").as("src"),
       col(idBCol).cast("long").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .localCheckpoint(eager = false)
+      .filter(col("src").isNotNull && col("dst").isNotNull), eager = false)
     // lazy: materializes inside the final labels join, no dedicated job
-    val nodes = raw.select(col("src").as("id"))
-      .union(raw.select(col("dst").as("id"))).distinct()
-      .localCheckpoint(eager = false)
+    val nodes = pins(raw.select(col("src").as("id"))
+      .union(raw.select(col("dst").as("id"))).distinct(), eager = false)
 
     // large-star: for each node u, hang every LARGER neighbor off
     // min(Γ(u) ∪ {u}) — emitted edges always point big → small
@@ -914,8 +884,7 @@ object Dedup {
         if (r.isNullAt(1)) 0L else r.getLong(1),
         if (r.isNullAt(2)) 0L else r.getLong(2))
     }
-    var edges = raw.filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(eager = false)
+    var edges = pins(raw.filter(col("src") =!= col("dst")).distinct(), eager = false)
     var prevSig = sig(edges)
     // LOCAL FAST PATH (see LocalCcMaxEdges): the init-sig job above
     // already materialized the distinct edge set and counted it — when
@@ -955,12 +924,12 @@ object Dedup {
       val labels = nodes
         .join(broadcast(mapping), Seq("id"), "left")
         .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-      return (labels, 0, Seq(raw, nodes, edges))
+      return (labels, 0)
     }
     var rounds = 0
     var converged = prevSig._1 == 0L
     while (rounds < maxIter && !converged) {
-      val next = smallStar(largeStar(edges)).localCheckpoint(eager = false)
+      val next = pins(smallStar(largeStar(edges)), eager = false)
       val nextSig = sig(next)
       converged = nextSig == prevSig
       // the sig job materialized (and lineage-truncated) `next`: the
@@ -974,7 +943,7 @@ object Dedup {
     val labels = nodes
       .join(edges.select(col("src").as("id"), col("dst").as("comp")), Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-    (labels, rounds, Seq(raw, nodes, edges))
+    (labels, rounds)
   }
 
   /** Incremental connected components — fold NEW near-dup edges into an
@@ -997,36 +966,31 @@ object Dedup {
     * (the q_scd2_inc oracle shape; CORRECTNESS entry
     * `dd_components_inc`).
     *
+    * The result reads three checkpoints lazily (the edge frame, the
+    * endpoint map, the merged-root map); they go to `pins`, which the
+    * caller owns — [[graft.streaming.CcStream]] closes it once the
+    * merged labeling has materialized, so a stream running for
+    * thousands of triggers holds ONE labels copy. The super-graph CC's
+    * own internals are released here (dead once `merged` is eagerly
+    * checkpointed).
+    *
     * @param labels existing labeling: (id, comp) as produced by
     *               [[connectedComponents]] (comp = min member id)
     * @return (id, comp) covering labeled ids ∪ new-edge endpoints
     */
   def mergeComponents(labels: DataFrame, newEdges: DataFrame,
-                      idACol: String = "id_a", idBCol: String = "id_b"): DataFrame =
-    mergeComponentsReleasable(labels, newEdges, idACol, idBCol)._1
-
-  /** [[mergeComponents]] plus the frames it localCheckpoints that the
-    * result still reads lazily — the per-trigger maintainer
-    * ([[graft.streaming.CcStream]]) releases them once the merged
-    * labeling is materialized, so a stream running for thousands of
-    * triggers holds ONE labels copy, not three cached frames per
-    * trigger. The super-graph CC's own internals are released inline
-    * here (dead once `merged` is eagerly checkpointed).
-    */
-  private[graft] def mergeComponentsReleasable(
-      labels: DataFrame, newEdges: DataFrame,
-      idACol: String = "id_a", idBCol: String = "id_b"): (DataFrame, Seq[DataFrame]) = {
-    val edges = newEdges.select(col(idACol).cast("long").as("__a"),
+                      idACol: String = "id_a", idBCol: String = "id_b",
+                      pins: Pins = new Pins): DataFrame = {
+    val edges = pins(newEdges.select(col(idACol).cast("long").as("__a"),
       col(idBCol).cast("long").as("__b"))
-      .filter(col("__a").isNotNull && col("__b").isNotNull)
-      .localCheckpoint(eager = false)
+      .filter(col("__a").isNotNull && col("__b").isNotNull), eager = false)
     val eps = edges.select(col("__a").as("id"))
       .union(edges.select(col("__b").as("id"))).distinct()
     // current label of every endpoint: ONE labels scan behind a
     // broadcast semi-join probe (output is endpoint-sized)
     val seen = labels.join(broadcast(eps), Seq("id"), "left_semi")
       .select(col("id"), col("comp"))
-    val epMap = seen.localCheckpoint() // small; consumed three times
+    val epMap = pins(seen) // small; consumed three times
     val superEdges = edges
       .join(broadcast(epMap.select(col("id").as("__a"), col("comp").as("__ca"))),
         Seq("__a"), "left")
@@ -1036,9 +1000,9 @@ object Dedup {
         coalesce(col("__cb"), col("__b")).as("id_b"))
     // supernode → merged root over the TINY label-level graph; the
     // CC's internal checkpoints are dead once `merged` materializes
-    val (ccLabels, _, ccFrames) = ccInternal(superEdges, "id_a", "id_b", 25)
-    val merged = ccLabels.localCheckpoint()
-    ccFrames.foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
+    val ccPins = new Pins
+    val merged = pins(ccInternal(superEdges, "id_a", "id_b", 25, ccPins)._1)
+    ccPins.close()
     // relabel the big table in one scan; untouched comps pass through
     val relabeled = labels
       .join(broadcast(merged.select(col("id").as("comp"), col("comp").as("__new"))),
@@ -1050,7 +1014,7 @@ object Dedup {
     val newIds = eps.join(broadcast(epMap.select("id")), Seq("id"), "left_anti")
     val newRows = newIds.join(broadcast(merged), Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-    (relabeled.unionByName(newRows), Seq(edges, epMap, merged))
+    relabeled.unionByName(newRows)
   }
 
   // ------------------------------------------- incremental (bloom-gated)

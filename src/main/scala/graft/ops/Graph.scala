@@ -38,8 +38,10 @@ object Graph {
     // and callers routinely derive it from a corpus-sized join — without
     // the barrier every round replays that join. Materializes on the
     // first action (the nodes count), |E| rows of two key columns.
-    val e = edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"))
-      .localCheckpoint(eager = false)
+    // Skipped when `edges` already reads a checkpoint (the Pins rule);
+    // the result reads the barrier, so the ContextCleaner frees it.
+    val e = new Pins()(edges.select(col(srcCol).as("__s"), col(dstCol).as("__t")),
+      eager = false)
     val nodes = e.select(col("__s").as("__v"))
       .union(e.select(col("__t").as("__v"))).distinct()
     val deg = e.groupBy(col("__s")).agg(count(lit(1)).as("__dg"))
@@ -88,8 +90,8 @@ object Graph {
     require(iters >= 1, s"iters $iters must be >= 1")
     // the pageRank edge barrier: e0 feeds the undirected view TWICE per
     // use (und = e0 ∪ swap(e0)) across nodes + one join per round
-    val e0 = edges.select(col(srcCol).as("__s"), col(dstCol).as("__t"))
-      .localCheckpoint(eager = false)
+    val e0 = new Pins()(edges.select(col(srcCol).as("__s"), col(dstCol).as("__t")),
+      eager = false)
     val und = e0.union(e0.select(col("__t").as("__s"), col("__s").as("__t")))
     val nodes = und.select(col("__s").as("__v")).distinct()
     var labels = nodes.select(col("__v"), col("__v").as("__l"))

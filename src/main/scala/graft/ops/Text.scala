@@ -1674,8 +1674,8 @@ object Text {
       * algebra: `bloom_agg` over the batch at THIS state's geometry,
       * byte-OR'd into the current bits (the aggregate's own merge op,
       * so filter(history ∪ batch) = filter(history) | filter(batch)
-      * bit-for-bit). The digest side is the MinhashIndex.Maintainer
-      * swap: union → distinct → localCheckpoint, then the PREVIOUS
+      * bit-for-bit). The digest side swaps generations:
+      * union → distinct → localCheckpoint, then the PREVIOUS
       * generation's blocks release — a long-lived stream pins one
       * digest table, not one per trigger. Cost is the batch's own
       * lines (one batch read feeds both jobs); history is never

@@ -1861,8 +1861,8 @@ object Pipeline {
       .agg(count(lit(1)).as("n_docs"), round(avg(col("quality")), 6).as("avg_quality"))
     // the consecutive-doc self-join materializes ONCE (lazy barrier):
     // its three consumers — the emptiness gate plus both graph legs —
-    // would otherwise each replay the corpus-sized join (and the legs'
-    // internal barriers then copy blocks instead of recomputing)
+    // would otherwise each replay the corpus-sized join (the legs'
+    // own edge barriers see a checkpoint here and skip their copy)
     val edges = hostEdges(docs.select("doc_id", "source"))
       .localCheckpoint(eager = false)
     // an edgeless graph (single-source corpus) is a legal input to the
@@ -2444,8 +2444,6 @@ object Pipeline {
     */
   // Maintainer per (JVM, index path) — the mhixMaintainers rationale:
   // cached file-count-sized metadata, per-probe file reads unchanged.
-  // Safe here because each bench/verify pass fully materializes its
-  // probe result before the next probe (the documented pin contract).
   private val lineIxMaintainers =
     new java.util.concurrent.ConcurrentHashMap[String, graft.sources.LineIndex.Maintainer]()
 

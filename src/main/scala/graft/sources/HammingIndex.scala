@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Pins}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -193,30 +193,25 @@ object HammingIndex {
     * hash count, < 0 unlimited); the guard counts HISTORY distinct-hash
     * fan-out per probed key, the batch-internal pass inherits the same
     * cap, and dist-0 pairs bypass both (the direct equality path).
+    *
+    * The returned frame reads the probe's checkpoints lazily (the batch
+    * frame, the verified hash pairs, the batch-internal pass's hash
+    * groups). They go to `pins`, which the caller owns — the
+    * [[MinhashIndex.probe]] contract.
     */
   def probe(s: SparkSession, path: String,
             batch: DataFrame, idCol: String, hashCol: String,
-            maxDist: Int, maxBucket: Int = 0): DataFrame =
-    probeReleasable(s, path, batch, idCol, hashCol, maxDist, maxBucket)._1
-
-  /** [[probe]] plus its internal checkpoints for explicit release (the
-    * batch frame and, when a cap is active, the batch-internal pass's
-    * hash-group checkpoint) — the [[MinhashIndex.probeReleasable]]
-    * discipline for long-running maintainers.
-    */
-  def probeReleasable(s: SparkSession, path: String,
-                      batch: DataFrame, idCol: String, hashCol: String,
-                      maxDist: Int,
-                      maxBucket: Int = 0): (DataFrame, Seq[DataFrame]) = {
+            maxDist: Int, maxBucket: Int = 0,
+            pins: Pins = new Pins): DataFrame = {
     val p = readParams(s, path)
     probeCore(s, path, batch, idCol, hashCol, maxDist, maxBucket,
       p.getInt(0), p.getLong(1),
       StatsManifest.manifest(s, s"$path/postings").collect().toIndexedSeq,
-      StatsManifest.manifest(s, s"$path/docs").collect().toIndexedSeq)
+      StatsManifest.manifest(s, s"$path/docs").collect().toIndexedSeq, pins)
   }
 
   /** The probe body with params + manifest ROWS supplied by the caller
-    * ([[probeReleasable]] collects them fresh — file-count-sized
+    * ([[probe]] collects them fresh — file-count-sized
     * driver metadata; [[Maintainer]] serves them from its cache).
     * File pruning over the rows is pure driver Scala
     * ([[StatsManifest.pruneLocal]]) — the r12 probe-floor fix: the two
@@ -228,7 +223,7 @@ object HammingIndex {
                         maxDist: Int, maxBucket: Int,
                         pieces: Int, nHashes: Long,
                         postRows: Seq[Row],
-                        docRows: Seq[Row]): (DataFrame, Seq[DataFrame]) = {
+                        docRows: Seq[Row], pins: Pins): DataFrame = {
     require(maxDist >= 0 && maxDist < pieces,
       "pigeonhole banding needs maxDist < pieces")
     val width = 64 / pieces
@@ -236,10 +231,10 @@ object HammingIndex {
       if (maxBucket == 0) Dedup.defaultMaxBucketFixedWidth(nHashes, width)
       else maxBucket
 
-    val b = batch
+    // consumers: chunk keys, dist-0 path, id expansion
+    val b = pins(batch
       .select(col(idCol).as("__bid"), col(hashCol).cast("long").as("__bh"))
-      .filter(col("__bh").isNotNull)
-      .localCheckpoint() // consumers: chunk keys, dist-0 path, id expansion
+      .filter(col("__bh").isNotNull))
     val bh = b.select(col("__bh").as("__h")).distinct()
     val bkeysAll = chunkKeys(bh, pieces)
       .select(col("key"), col("__h").as("__bh"))
@@ -324,7 +319,7 @@ object HammingIndex {
     // the materialized rows instead of re-running the whole
     // candidate+verify pipeline a second time (the r11 eager-dfiles
     // double-compute).
-    val pairsH = banded.unionByName(direct).localCheckpoint()
+    val pairsH = pins(banded.unionByName(direct))
     val hArr = pairsH.select(col("__h")).distinct().collect()
       .map(_.getAs[Number](0).longValue())
     val dfiles = StatsManifest.pruneLocal(docRows, hArr)
@@ -341,9 +336,9 @@ object HammingIndex {
 
     // batch-internal pairs: the in-flight pass over the (small) batch,
     // same cap regime
-    val (within, withinInternals) = Dedup.hammingPairsReleasable(
-      b, "__bid", "__bh", maxDist, pieces, maxBucket = cap)
-    (cross.unionByName(within), Seq(b, pairsH) ++ withinInternals)
+    val within = Dedup.hammingPairs(
+      b, "__bid", "__bh", maxDist, pieces, maxBucket = cap, pins = pins)
+    cross.unionByName(within)
   }
 
   /** Amortizing handle for repeated probe/append cycles against ONE
@@ -365,39 +360,16 @@ object HammingIndex {
     private val docRows = scala.collection.mutable.ArrayBuffer[Row](
       StatsManifest.manifest(s, s"$path/docs").collect().toIndexedSeq: _*)
 
-    private var probePins: Seq[DataFrame] = Nil
-
-    /** Cached-state probe — same output contract as the object-level
-      * [[HammingIndex.probe]]. Probe-internal checkpoint pins are held
-      * by this handle (the [[LineIndex.Maintainer]] discipline): call
-      * [[releaseProbe]] once the result has materialized, or let the
-      * NEXT probe release them — a long-lived probe loop pins at most
-      * one batch-sized frame, not one per trigger. Consequence: a
-      * probe result reads the pinned blocks lazily, so materialize it
-      * before the next probe/releaseProbe.
+    /** Cached-state probe — same output and pin contract as the
+      * object-level [[HammingIndex.probe]]: the probe's checkpoints go
+      * to the caller's `pins`, so a later probe never invalidates an
+      * earlier result.
       */
     def probe(batch: DataFrame, idCol: String, hashCol: String,
-              maxDist: Int, maxBucket: Int = 0): DataFrame = {
-      releaseProbe()
-      val (r, pins) =
-        probeReleasable(batch, idCol, hashCol, maxDist, maxBucket)
-      probePins = pins
-      r
-    }
-
-    /** Release the checkpoints pinned by the most recent [[probe]]
-      * (no-op after probeReleasable, whose caller owns its pins).
-      */
-    def releaseProbe(): Unit = {
-      probePins.foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
-      probePins = Nil
-    }
-
-    def probeReleasable(batch: DataFrame, idCol: String, hashCol: String,
-                        maxDist: Int,
-                        maxBucket: Int = 0): (DataFrame, Seq[DataFrame]) =
+              maxDist: Int, maxBucket: Int = 0,
+              pins: Pins = new Pins): DataFrame =
       probeCore(s, path, batch, idCol, hashCol, maxDist, maxBucket,
-        pieces, nHashes, postRows.toSeq, docRows.toSeq)
+        pieces, nHashes, postRows.toSeq, docRows.toSeq, pins)
 
     def append(batch: DataFrame, idCol: String, hashCol: String): Unit = {
       val (dRows, pRows, n) =

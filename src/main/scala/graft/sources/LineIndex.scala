@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.ops.Pins
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -131,28 +132,22 @@ object LineIndex {
     * (maybes-bounded, keeping the duplicate-row immunity) — no driver
     * collect at any batch size.
     *
-    * One-shot lifetime caveat (same as dedupLinesIncremental's one-shot
-    * form): the dup-heavy path's maybes-bounded `present` frame rides a
-    * localCheckpoint that stays pinned until the RESULT frame is GC'd —
-    * fine for a single probe, but a long-lived probe loop should use a
-    * [[Maintainer]], whose [[Maintainer.releaseProbe]] hands the pin to
-    * the caller's release lifecycle (r13 ADVICE).
+    * The dup-heavy path's maybes-bounded `present` frame is a
+    * checkpoint the result reads lazily; it goes to `pins`, which the
+    * caller owns (the [[MinhashIndex.probe]] contract). The fast and
+    * empty paths pin nothing.
     */
   def probe(s: SparkSession, path: String, batch: DataFrame,
             idCol: String, textCol: String, delim: String = "\n",
-            maxCollect: Int = 200000): DataFrame =
+            maxCollect: Int = 200000, pins: Pins = new Pins): DataFrame =
     probeCore(s, path, batch, idCol, textCol, delim, maxCollect,
       readParams(s, path).getInt(0), readBloom(s, path),
-      StatsManifest.manifest(s, s"$path/digests").collect().toIndexedSeq)._1
+      StatsManifest.manifest(s, s"$path/digests").collect().toIndexedSeq, pins)
 
-  /** Returns (probe result, the dup-heavy path's pinned checkpoint —
-    * None on the fast/empty paths). The pin must outlive the result's
-    * materialization; releasing it is the caller's job.
-    */
   private def probeCore(s: SparkSession, path: String, batch: DataFrame,
                         idCol: String, textCol: String, delim: String,
                         maxCollect: Int, numHashes: Int, bloom: Array[Byte],
-                        mrows: Seq[Row]): (DataFrame, Option[DataFrame]) = {
+                        mrows: Seq[Row], pins: Pins): DataFrame = {
     import graft.functions.FunctionDefs.call
     // the maybe minority: distinct bloom-positive batch lines,
     // materialized once (it feeds the count, then one of two paths)
@@ -172,41 +167,39 @@ object LineIndex {
     val sample = maybesDf.limit(maxCollect + 1).collect()
     val empty = s.read.parquet(s"$path/digests").filter(lit(false))
       .select(col("hh").as("__hh"))
-    val (present, pinned) =
+    val present =
       if (sample.isEmpty) {
         org.apache.spark.sql.GraftBridge.unpersistCheckpoint(maybesDf)
-        (empty, None)
+        empty
       } else if (sample.length <= maxCollect) {
         // fast path: driver-side file pruning, zero metadata jobs
         val maybes = sample
         org.apache.spark.sql.GraftBridge.unpersistCheckpoint(maybesDf)
         val files = StatsManifest.pruneLocal(mrows, maybes.map(_.getLong(0)))
-        if (files.isEmpty) (empty, None)
+        if (files.isEmpty) empty
         else {
           import s.implicits._
           val keys = maybes.map(_.getString(1)).toSeq.toDF("__hh")
           // semi + distinct: ≤ one row per maybe reaches the membership
           // join, whatever duplicate rows replayed appends left behind
-          (s.read.parquet(files.toIndexedSeq: _*).select(col("hh").as("__hh"))
+          s.read.parquet(files.toIndexedSeq: _*).select(col("hh").as("__hh"))
             .join(broadcast(keys), Seq("__hh"), "left_semi")
-            .distinct(), None)
+            .distinct()
         }
       } else {
         // dup-heavy path: distributed end to end; materialize the
         // (maybes-bounded) present set so the checkpointed maybe frame
         // releases before the main dedup job — the present checkpoint
-        // itself is the returned pin
-        val p = s.read.parquet(s"$path/digests").select(col("hh").as("__hh"))
+        // itself goes to the caller's pins
+        val p = pins(s.read.parquet(s"$path/digests").select(col("hh").as("__hh"))
           .join(maybesDf.select("__hh"), Seq("__hh"), "left_semi")
-          .distinct()
-          .localCheckpoint()
+          .distinct())
         org.apache.spark.sql.GraftBridge.unpersistCheckpoint(maybesDf)
-        (p, Some(p))
+        p
       }
     val state = graft.ops.Text.lineHistoryFrom(
       bloom, present.withColumn("__seen", lit(1)), numHashes)
-    (graft.ops.Text.dedupLinesIncremental(state, batch, idCol, textCol, delim),
-      pinned)
+    graft.ops.Text.dedupLinesIncremental(state, batch, idCol, textCol, delim)
   }
 
   /** Fold a probed batch's KEPT output back in — pass the probe result
@@ -290,42 +283,17 @@ object LineIndex {
     private val mrows = scala.collection.mutable.ArrayBuffer[Row](
       StatsManifest.manifest(s, s"$path/digests").collect().toIndexedSeq: _*)
 
-    private var probePin: Option[DataFrame] = None
-
-    /** Cached-state [[LineIndex.probe]] — same output contract. The
-      * dup-heavy path's checkpoint pin is held by this handle: call
-      * [[releaseProbe]] once the result has materialized, or let the
-      * NEXT probe release it (by which point the stream contract says
-      * the previous result was consumed) — either way a long-lived
-      * probe loop pins at most one maybes-bounded frame, not one per
-      * trigger (r13 ADVICE). HARD consequence of that contract: a
-      * probe result from the dup-heavy path reads the pinned blocks
-      * and localCheckpoint truncates lineage, so materializing probe
-      * N's result AFTER issuing probe N+1 fails unrecoverably
-      * (checkpoint block not found — there is nothing to recompute
-      * from). Consume each probe's result before the next probe, as
-      * [[graft.streaming.LineDupStream]] does; fast-path probes
-      * (maybes ≤ maxCollect) pin nothing and are unaffected — which is
-      * why misuse only surfaces on dup-heavy batches at scale.
+    /** Cached-state [[LineIndex.probe]] — same output and pin
+      * contract: the dup-heavy path's checkpoint goes to the caller's
+      * `pins`, so a later probe never invalidates an earlier result. A
+      * probe loop closes one [[Pins]] per probe once its result has
+      * materialized, as [[graft.streaming.LineDupStream]] does.
       */
     def probe(batch: DataFrame, idCol: String, textCol: String,
-              delim: String = "\n", maxCollect: Int = 200000): DataFrame = {
-      releaseProbe()
-      val (r, pin) = probeCore(s, path, batch, idCol, textCol, delim,
-        maxCollect, numHashes, bloomBytes, mrows.toSeq)
-      probePin = pin
-      r
-    }
-
-    /** Release the checkpoint blocks pinned by the most recent probe
-      * (no-op when the fast path ran). Only call after that probe's
-      * result frame has been materialized — the result plan reads the
-      * pinned blocks.
-      */
-    def releaseProbe(): Unit = {
-      probePin.foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
-      probePin = None
-    }
+              delim: String = "\n", maxCollect: Int = 200000,
+              pins: Pins = new Pins): DataFrame =
+      probeCore(s, path, batch, idCol, textCol, delim,
+        maxCollect, numHashes, bloomBytes, mrows.toSeq, pins)
 
     /** Cached-state [[LineIndex.append]] — extends the in-memory
       * manifest/bloom from the delta it just wrote.

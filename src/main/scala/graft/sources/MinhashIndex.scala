@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Pins}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -231,33 +231,26 @@ object MinhashIndex {
     * or run through a [[Maintainer]], which caches params + manifests
     * across probes and extends them in memory on append.
     *
-    * The returned frame references a batch-signature localCheckpoint;
-    * one-shot callers can rely on the ContextCleaner to reclaim it,
-    * long-running maintainers use [[probeReleasable]] and free the
-    * internals once the result is materialized (the
-    * mergeComponentsReleasable pattern).
+    * The returned frame reads the probe's checkpoints lazily (the
+    * batch signatures, the candidates and, with a cap active, the
+    * batch-internal pass's band keys). They go to `pins`, which the
+    * caller owns: a one-shot caller passes nothing and the
+    * ContextCleaner reclaims them; a probe loop closes one [[Pins]] per
+    * probe once its result has materialized.
     */
   def probe(s: SparkSession, path: String,
             batch: DataFrame, idCol: String, textCol: String,
-            threshold: Double = 0.8, maxBucket: Int = 0): DataFrame =
-    probeReleasable(s, path, batch, idCol, textCol, threshold, maxBucket)._1
-
-  /** [[probe]] plus its internal checkpoints for explicit release: the
-    * batch-signature frame AND (when a cap is active) the batch-
-    * internal LSH pass's band-key checkpoint.
-    */
-  def probeReleasable(s: SparkSession, path: String,
-                      batch: DataFrame, idCol: String, textCol: String,
-                      threshold: Double = 0.8, maxBucket: Int = 0): (DataFrame, Seq[DataFrame]) = {
+            threshold: Double = 0.8, maxBucket: Int = 0,
+            pins: Pins = new Pins): DataFrame = {
     val p = readParams(s, path)
     probeCore(s, path, batch, idCol, textCol, threshold, maxBucket,
       p.getInt(0), p.getInt(1), p.getInt(2), p.getLong(3), p.getLong(4),
       StatsManifest.manifest(s, s"$path/postings").collect().toIndexedSeq,
-      StatsManifest.manifest(s, s"$path/docs").collect().toIndexedSeq)
+      StatsManifest.manifest(s, s"$path/docs").collect().toIndexedSeq, pins)
   }
 
   /** The probe body with params + manifest ROWS supplied by the caller
-    * ([[probeReleasable]] collects them fresh — file-count-sized
+    * ([[probe]] collects them fresh — file-count-sized
     * driver metadata; [[Maintainer]] serves them from its cache). File
     * pruning over the rows is pure driver Scala
     * ([[StatsManifest.pruneLocal]]) — the r12 probe-floor fix.
@@ -267,14 +260,13 @@ object MinhashIndex {
                         threshold: Double, maxBucket: Int,
                         k: Int, numPerm: Int, bands: Int, seed: Long,
                         nDocs: Long, postRows: Seq[Row],
-                        docRows: Seq[Row]): (DataFrame, Seq[DataFrame]) = {
+                        docRows: Seq[Row], pins: Pins): DataFrame = {
     val cap =
       if (maxBucket == 0) Dedup.defaultMaxBucket(nDocs) else maxBucket
 
     // batch signatures once (two consumers: band keys + verify shingles)
-    val bsig = Dedup.sigFrame(batch, idCol, textCol, k, numPerm, seed)
-      .select(col(idCol).as("__bid"), col("__sh").as("__bsh"), col("__sig"))
-      .localCheckpoint()
+    val bsig = pins(Dedup.sigFrame(batch, idCol, textCol, k, numPerm, seed)
+      .select(col(idCol).as("__bid"), col("__sh").as("__bsh"), col("__sig")))
     val bkeys = Dedup.bandKeyRows(bsig, "__bid", numPerm, bands)
       .select(combinedKey(col("__band"), col("__bkey")).as("key"),
         col("__bid"))
@@ -315,10 +307,9 @@ object MinhashIndex {
     // the verify join reuses the materialized rows instead of
     // re-running the posting scan + candidate join a second time (the
     // r11 eager-dfiles double-compute)
-    val cands = guarded.join(broadcast(bkeys), "key")
+    val cands = pins(guarded.join(broadcast(bkeys), "key")
       .filter(col("id") =!= col("__bid"))
-      .select(col("id").as("__hid"), col("__bid")).distinct()
-      .localCheckpoint()
+      .select(col("id").as("__hid"), col("__bid")).distinct())
 
     // history shingles for candidate ids only: docs-manifest pruning on
     // the id ranges (driver-side over the cached rows), then a
@@ -344,13 +335,11 @@ object MinhashIndex {
 
     // batch-internal pairs: the plain in-flight pass over the (small)
     // batch — a second signature evaluation of batch-sized cost only.
-    // Releasable form: with a cap active the pass checkpoints its band
-    // keys, which would otherwise leak one posting-sized frame per
-    // trigger in a long-running maintainer (the r10 ADVICE leak)
-    val (within, withinInternals) = Dedup.minhashLshReleasable(
+    // With a cap active the pass checkpoints its band keys into `pins`
+    val within = Dedup.minhashLsh(
       batch, idCol, textCol, k = k, numPerm = numPerm, bands = bands,
-      threshold = threshold, seed = seed, maxBucket = cap)
-    (crossPairs.unionByName(within), Seq(bsig, cands) ++ withinInternals)
+      threshold = threshold, seed = seed, maxBucket = cap, pins = pins)
+    crossPairs.unionByName(within)
   }
 
   /** Amortizing handle for repeated probe/append cycles against ONE
@@ -379,39 +368,18 @@ object MinhashIndex {
     private val docRows = scala.collection.mutable.ArrayBuffer[Row](
       StatsManifest.manifest(s, s"$path/docs").collect().toIndexedSeq: _*)
 
-    private var probePins: Seq[DataFrame] = Nil
-
     /** Cached-state probe — same output contract as the object-level
-      * [[MinhashIndex.probe]]. The batch-signature checkpoint pins are
-      * held by this handle (the [[LineIndex.Maintainer]] discipline):
-      * call [[releaseProbe]] once the result has materialized, or let
-      * the NEXT probe release them — a long-lived probe loop pins at
-      * most one batch-sized signature frame, not one per trigger.
-      * Consequence: a probe result reads the pinned blocks lazily, so
-      * materialize it before the next probe/releaseProbe.
+      * [[MinhashIndex.probe]], and the same pin contract: the probe's
+      * checkpoints go to the caller's `pins`. This handle holds none,
+      * so a later probe never invalidates an earlier result; a probe
+      * loop closes one [[Pins]] per probe once its result has
+      * materialized.
       */
     def probe(batch: DataFrame, idCol: String, textCol: String,
-              threshold: Double = 0.8, maxBucket: Int = 0): DataFrame = {
-      releaseProbe()
-      val (r, pins) =
-        probeReleasable(batch, idCol, textCol, threshold, maxBucket)
-      probePins = pins
-      r
-    }
-
-    /** Release the checkpoints pinned by the most recent [[probe]]
-      * (no-op after probeReleasable, whose caller owns its pins).
-      */
-    def releaseProbe(): Unit = {
-      probePins.foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
-      probePins = Nil
-    }
-
-    def probeReleasable(batch: DataFrame, idCol: String, textCol: String,
-                        threshold: Double = 0.8,
-                        maxBucket: Int = 0): (DataFrame, Seq[DataFrame]) =
+              threshold: Double = 0.8, maxBucket: Int = 0,
+              pins: Pins = new Pins): DataFrame =
       probeCore(s, path, batch, idCol, textCol, threshold, maxBucket,
-        k, numPerm, bands, seed, nDocs, postRows.toSeq, docRows.toSeq)
+        k, numPerm, bands, seed, nDocs, postRows.toSeq, docRows.toSeq, pins)
 
     def append(batch: DataFrame, idCol: String, textCol: String): Unit = {
       val (dRows, pRows, n) =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, Pins}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -23,11 +23,13 @@ import org.apache.spark.sql.functions._
   */
 final class CcStream(initial: DataFrame) {
 
+  // holds the current labeling's checkpoint
+  private var statePins = new Pins
   @volatile private var state: DataFrame =
-    initial.select(col("id"), col("comp")).localCheckpoint()
+    statePins(initial.select(col("id"), col("comp")))
 
   /** The current labeling (id, comp). VALID ONLY UNTIL THE NEXT
-    * [[fold]]: each fold unpersists the superseded labels checkpoint,
+    * [[fold]]: each fold releases the superseded labels checkpoint,
     * and a local checkpoint cannot recompute — an action on a stale
     * reference (or a read racing a concurrent fold) fails with missing
     * blocks. Consumers that must hold a labeling across triggers
@@ -36,20 +38,18 @@ final class CcStream(initial: DataFrame) {
   def labels: DataFrame = state
 
   /** Fold one micro-batch of edges; returns the new labeling. The
-    * superseded labels checkpoint AND the merge's internal checkpoints
-    * (edge frame, endpoint map, merged-root map — released via
-    * [[graft.ops.Dedup.mergeComponentsReleasable]]) are all freed once
-    * the new labeling is materialized, so a long-running stream holds
-    * ONE labels copy, not four cached frames per trigger. The flip
-    * side is the [[labels]] invalidation contract above: previously
-    * returned labelings are dead after this call.
+    * merge's internal checkpoints (edge frame, endpoint map,
+    * merged-root map) join the superseded labeling's [[Pins]], which
+    * closes once the new labeling is materialized — a long-running
+    * stream holds ONE labels copy, not four cached frames per trigger.
+    * The flip side is the [[labels]] invalidation contract above:
+    * previously returned labelings are dead after this call.
     */
   def fold(edges: DataFrame): DataFrame = synchronized {
-    val prev = state
-    val (next, internals) = Dedup.mergeComponentsReleasable(prev, edges)
-    state = next.localCheckpoint()
-    (internals :+ prev).foreach(
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
+    val next = new Pins
+    state = next(Dedup.mergeComponents(state, edges, pins = statePins))
+    statePins.close()
+    statePins = next
     state
   }
 

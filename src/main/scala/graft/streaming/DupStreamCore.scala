@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Pins
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -12,28 +13,29 @@ import org.apache.spark.sql.functions.col
   *  - probe runs BEFORE append (a batch never pairs with itself twice);
   *  - the fold materializes the new labeling (CcStream localCheckpoints
   *    it) before append mutates the maintainer's cached metadata;
-  *  - every per-trigger checkpoint — probe internals plus the batch —
-  *    is released once the fold has materialized, so a long-running
-  *    stream holds ONE labels copy, nothing batch-sized.
+  *  - every per-trigger checkpoint — the batch plus the probe's — goes
+  *    to one [[Pins]] that closes once the fold has materialized, so a
+  *    long-running stream holds ONE labels copy, nothing batch-sized.
   *
-  * `probeReleasable` must return the found pairs (id_a, id_b, ...) plus
-  * its internal checkpoints for release; `append` must extend the index
-  * with the batch.
+  * `probe` must return the found pairs (id_a, id_b, ...), checkpointing
+  * into the given [[Pins]]; `append` must extend the index with the
+  * batch.
   */
 private[streaming] final class DupStreamCore(
     cc: CcStream,
-    probeReleasable: DataFrame => (DataFrame, Seq[DataFrame]),
+    probe: (DataFrame, Pins) => DataFrame,
     append: DataFrame => Unit) {
 
   def labels: DataFrame = cc.labels
 
   def processBatch(batch: DataFrame): DataFrame = {
-    val b = batch.localCheckpoint() // probe and append must see ONE batch
-    val (pairs, internals) = probeReleasable(b)
-    val next = cc.fold(pairs.select(col("id_a"), col("id_b")))
-    append(b)
-    (internals :+ b).foreach(org.apache.spark.sql.GraftBridge.unpersistCheckpoint)
-    next
+    val pins = new Pins
+    try {
+      val b = pins(batch) // probe and append must see ONE batch
+      val next = cc.fold(probe(b, pins).select(col("id_a"), col("id_b")))
+      append(b)
+      next
+    } finally pins.close()
   }
 
   def start(rows: DataFrame, checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =

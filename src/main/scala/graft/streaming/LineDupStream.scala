@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ops.Pins
 import graft.sources.LineIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -31,7 +32,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Per-trigger memory: the batch and its probe result localCheckpoint
   * (probe and append must see one frame; the result must materialize
-  * before append mutates the index state under it) and release once
+  * before append mutates the index state under it). The batch and the
+  * probe's own pin release at the end of the trigger, the result once
   * the next trigger lands — the stream holds ONE result copy, nothing
   * history-sized. The cached [[LineIndex.Maintainer]] makes this
   * stream the index's single writer.
@@ -41,22 +43,21 @@ final class LineDupStream(spark: SparkSession, indexPath: String,
                           delim: String = "\n", maxCollect: Int = 200000) {
 
   private val ix = new LineIndex.Maintainer(spark, indexPath)
-  private var lastResult: DataFrame = null
+  // holds the last returned result's checkpoint
+  private var resultPins = new Pins
 
   /** Probe → sink-ready dedup → append for one batch; returns the
-    * deduped batch docs (materialized).
+    * deduped batch docs (materialized, valid until the next trigger).
     */
   def processBatch(batch: DataFrame): DataFrame = {
-    val b = batch.localCheckpoint()
-    val r = ix.probe(b, idCol, textCol, delim, maxCollect).localCheckpoint()
-    // r is materialized (eager checkpoint): the dup-heavy probe path's
-    // pinned present-frame blocks release NOW, not at GC (r13 ADVICE)
-    ix.releaseProbe()
+    // this trigger's batch and probe pins join the previous result's
+    // Pins, which closes once the new result has materialized
+    val trigger = resultPins
+    resultPins = new Pins
+    val b = trigger(batch)
+    val r = resultPins(ix.probe(b, idCol, textCol, delim, maxCollect, trigger))
     ix.append(r, "text_dedup", delim)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(b)
-    if (lastResult != null)
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(lastResult)
-    lastResult = r
+    trigger.close()
     r
   }
 

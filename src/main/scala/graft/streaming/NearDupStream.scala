@@ -39,7 +39,7 @@ final class NearDupStream private (spark: SparkSession, indexPath: String,
   // Maintainer's in-memory manifest extension stays consistent
   private val ix = new MinhashIndex.Maintainer(spark, indexPath)
   private val core = new DupStreamCore(new CcStream(initialLabels),
-    b => ix.probeReleasable(b, idCol, textCol, threshold, maxBucket),
+    (b, pins) => ix.probe(b, idCol, textCol, threshold, maxBucket, pins),
     b => ix.append(b, idCol, textCol))
 
   /** Current near-dup component labeling (id, comp) — ids that never

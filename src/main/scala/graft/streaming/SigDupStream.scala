@@ -39,7 +39,7 @@ final class SigDupStream private (spark: SparkSession, indexPath: String,
   // extension stays consistent
   private val ix = new HammingIndex.Maintainer(spark, indexPath)
   private val core = new DupStreamCore(new CcStream(initialLabels),
-    b => ix.probeReleasable(b, idCol, hashCol, maxDist, maxBucket),
+    (b, pins) => ix.probe(b, idCol, hashCol, maxDist, maxBucket, pins),
     b => ix.append(b, idCol, hashCol))
 
   /** Current near-dup component labeling (id, comp) — ids that never

@@ -40,4 +40,13 @@ class SparkEntrySpec extends AnyFunSuite with SparkTestSession with Matchers {
       dups shouldBe empty
     }
   }
+
+  test("dd_lsh_index's result survives building dd_lsh_index_check on the shared Maintainer") {
+    val first = SparkEntry.queries("dd_lsh_index")(spark, sfDir)
+    val check = SparkEntry.queries("dd_lsh_index_check")(spark, sfDir)
+    first.collect().toSeq shouldBe
+      SparkEntry.queries("dd_lsh_index")(spark, sfDir).collect().toSeq
+    val c = check.head()
+    (c.getAs[Long]("n_missed"), c.getAs[Long]("n_diff_reband")) shouldBe ((0L, 0L))
+  }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkTestSession
-import graft.ops.Dedup
+import graft.ops.{Dedup, Pins}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -197,5 +197,29 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     probed should contain((1L, 100L, 0))
     probed should contain((2L, 100L, 2))
     probed should contain((3L, 101L, 1))
+  }
+
+  test("Maintainer: an earlier probe's result survives a later probe on the same handle") {
+    val m = new HammingIndex.Maintainer(spark, path)
+    val a = batch.filter(col("doc_id") % 8 === 0)
+    val b = batch.filter(col("doc_id") % 8 === 4)
+    val ra = m.probe(a, "doc_id", "sig", maxDist = 3)
+    val rb = m.probe(b, "doc_id", "sig", maxDist = 3)
+    val (gotA, gotB) = (pairSet(ra), pairSet(rb))
+    gotA shouldBe pairSet(HammingIndex.probe(spark, path, a, "doc_id", "sig", maxDist = 3))
+    gotB shouldBe pairSet(HammingIndex.probe(spark, path, b, "doc_id", "sig", maxDist = 3))
+  }
+
+  test("Maintainer probe loop: closing each probe's Pins leaves no persistent RDD behind") {
+    val m = new HammingIndex.Maintainer(spark, path)
+    batch.count()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (i <- 0 until 5) {
+      val pins = new Pins
+      m.probe(batch.filter(col("doc_id") % 5 === i), "doc_id", "sig",
+        maxDist = 3, pins = pins).collect()
+      pins.close()
+    }
+    (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkTestSession
-import graft.ops.Text
+import graft.ops.{Pins, Text}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -123,5 +123,38 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     got.getAs[Long]("n_removed_batch") shouldBe 1L
     got.getAs[Long]("n_removed_history") shouldBe 0L
     got.getAs[String]("text_dedup") shouldBe "zzz qq\nanother novel"
+  }
+
+  private def rows(r: org.apache.spark.sql.DataFrame) =
+    r.orderBy("id").collect().map(_.toSeq).toSeq
+
+  test("Maintainer (dup-heavy path): an earlier probe's result survives a later probe on the same handle") {
+    val path = tmp()
+    LineIndex.build(df(history: _*), "text", path)
+    val m = new LineIndex.Maintainer(spark, path)
+    val a = df(10L -> "seen a\nfresh one", 11L -> "fresh one\nseen c")
+    val b = df(20L -> "seen b\nfresh two")
+    // maxCollect = 0: every history hit takes the pinned distributed path
+    val ra = m.probe(a, "id", "text", maxCollect = 0)
+    val rb = m.probe(b, "id", "text", maxCollect = 0)
+    val (gotA, gotB) = (rows(ra), rows(rb))
+    gotA shouldBe rows(LineIndex.probe(spark, path, a, "id", "text", maxCollect = 0))
+    gotB shouldBe rows(LineIndex.probe(spark, path, b, "id", "text", maxCollect = 0))
+    gotA.map(_(4)) shouldBe Seq("fresh one", "")
+    gotB.map(_(4)) shouldBe Seq("fresh two")
+  }
+
+  test("Maintainer probe loop (dup-heavy path): closing each probe's Pins leaves no persistent RDD behind") {
+    val path = tmp()
+    LineIndex.build(df(history: _*), "text", path)
+    val m = new LineIndex.Maintainer(spark, path)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (i <- 0 until 5) {
+      val pins = new Pins
+      m.probe(df(i.toLong -> s"seen a\nline $i"), "id", "text",
+        maxCollect = 0, pins = pins).collect()
+      pins.close()
+    }
+    (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkTestSession
-import graft.ops.Dedup
+import graft.ops.{Dedup, Pins}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -187,5 +187,31 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val unlimited = pairSet(MinhashIndex.probe(spark, p2, probeBatch,
       "doc_id", "text", threshold = 0.5, maxBucket = -1))
     capped.subsetOf(unlimited) shouldBe true
+  }
+
+  test("Maintainer: an earlier probe's result survives a later probe on the same handle") {
+    val m = new MinhashIndex.Maintainer(spark, path)
+    val a = batch.filter(col("doc_id") % 8 === 0)
+    val b = batch.filter(col("doc_id") % 8 === 4)
+    // default maxBucket: a cap is active, so every probe pin kind is live
+    val ra = m.probe(a, "doc_id", "text")
+    val rb = m.probe(b, "doc_id", "text")
+    val (gotA, gotB) = (pairSet(ra), pairSet(rb))
+    gotA shouldBe pairSet(MinhashIndex.probe(spark, path, a, "doc_id", "text"))
+    gotB shouldBe pairSet(MinhashIndex.probe(spark, path, b, "doc_id", "text"))
+    (gotA ++ gotB) should not be empty
+  }
+
+  test("Maintainer probe loop: closing each probe's Pins leaves no persistent RDD behind") {
+    val m = new MinhashIndex.Maintainer(spark, path)
+    batch.count()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    for (i <- 0 until 5) {
+      val pins = new Pins
+      m.probe(batch.filter(col("doc_id") % 5 === i), "doc_id", "text", pins = pins)
+        .collect()
+      pins.close()
+    }
+    (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
   }
 }
