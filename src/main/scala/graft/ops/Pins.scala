@@ -15,7 +15,7 @@ import org.apache.spark.sql.{DataFrame, GraftBridge}
   * it fails (a local checkpoint cannot recompute). Two results pinned
   * by different `Pins` never invalidate each other.
   */
-final class Pins extends AutoCloseable {
+final class Pins {
   private val held = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
   private var closed = false
 
