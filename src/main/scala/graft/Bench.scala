@@ -212,7 +212,6 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.builder(cpus).getOrCreate()
-    GraftSession.enable(spark)
     spark.sparkContext.setLogLevel("WARN")
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)

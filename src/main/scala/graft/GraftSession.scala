@@ -1,74 +1,44 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 
-/** One place to build/enable graft on a SparkSession.
+/** One way to start graft: [[GraftSparkExtensions]].
   *
-  * Preferred production path is the extensions mechanism
-  * (`spark.sql.extensions=graft.GraftSparkExtensions`); `enable(spark)`
-  * covers sessions that already exist (tests, Verify, Bench, driver).
+  * `builder` sets `spark.sql.extensions=graft.GraftSparkExtensions`, the
+  * production path, plus the settings of a local deployment. `enable`
+  * applies the same extension to a session that was built without it.
+  * Plan quality depends on neither: graft sets no optimizer conf, and a
+  * plan fix is a rule inside [[GraftSparkExtensions]].
   */
 object GraftSession {
 
-  /** Confs every graft session needs. `cpus` sizes shuffle parallelism to
-    * the local machine; on a real cluster this is cluster-managed.
+  /** A local session with graft. Besides the extension it sets only
+    * what differs from Spark's defaults for a local run: the master and
+    * shuffle partitions sized to `cpus` (cluster-managed on a cluster),
+    * the UTC session time zone the query results assume, the UI off,
+    * and graft's local filesystem. Chain `.config(…)` on the returned
+    * builder for anything else.
     */
   def builder(cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.parquet.filterPushdown", "true")
-      // events.parquet carries TIMESTAMP(NANOS); read as long nanos
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // InferFiltersFromGenerate clones the generator child into a
-      // same-stage filter (`size(e)>0 AND isnotnull(e)`): for graft's
-      // expensive array producers (word_shingles, minhash signatures,
-      // line chunkers) that evaluates the array expression up to 3x per
-      // row — and since the filter sits in the SAME stage as the
-      // Generate, it prunes no I/O and no shuffle bytes at any scale.
-      // Non-trivial generator children are the norm in this engine, so
-      // the rule is excluded session-wide (scale-independent win; an
-      // empty/null array is dropped by the non-outer Generate anyway).
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // AQE coalescing targets BYTES (1 MiB floor per partition). The
-      // 1 MiB default floor is KEPT: a global 64 KiB floor was measured
-      // as a net regression (tx_split 3.3→6.1 s — task-scheduling
-      // overhead on tiny partitions; OPTIMIZATION_r15 §1), so CPU-heavy
-      // stages over compact keys are instead fanned out surgically
-      // (the qProfile guard / graft.queries.fanOut). Env-overridable
-      // for cluster profiles where bytes genuinely track CPU.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m"))
-      // Constraint propagation substitutes inferred predicates THROUGH
-      // aliases: a join filter on __na = size(word_shingles(...)) comes
-      // back as a scan-side `isnotnull(size(word_shingles(split(...))))`
-      // filter that re-evaluates the whole expensive expression per row
-      // while pruning nothing this engine's operators did not already
-      // prune (every graft op null-filters its keys at the source — the
-      // ccInternal/editDistance/linesOf pattern — so the inference is
-      // redundant here, unlike schemas with nullable join keys). A/B on
-      // the dedup/text subset: 13.9 s → 11.5 s (dd_editdist 2.6→1.3,
-      // dd_jaccard_join 1.05→0.68). Env-overridable for workloads with
-      // null-heavy keys and no explicit filters, where the inferred
-      // null-pruning before exchanges is worth the duplicated exprs.
-      .config("spark.sql.constraintPropagation.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_CONSTRAINT_PROPAGATION", "false"))
       .config("spark.ui.enabled", "false")
       // Local writes set modes in-process instead of forking `chmod`
       // per file and directory (no libhadoop). Hadoop caches the first
       // `file:` filesystem, so this only takes effect at build time.
       .config("spark.hadoop.fs.file.impl", "graft.sources.PosixLocalFileSystem")
+      .config("spark.sql.extensions", classOf[GraftSparkExtensions].getName)
 
-  /** Register graft's UDT, SQL functions and optimizer rules on an
-    * existing session.
+  /** Apply [[GraftSparkExtensions]] to a session that lacks it: its
+    * functions go into the session's registry and its rules into
+    * `experimental.extraOptimizations`. A session that already has the
+    * extension, from `spark.sql.extensions` or an earlier `enable`, is
+    * returned unchanged.
     */
   def enable(spark: SparkSession): SparkSession = {
-    graft.geom.GeometryUDT.init()
-    graft.functions.FunctionRegistration.registerAll(spark)
-    graft.plans.RuleRegistration.registerAll(spark)
+    GraftBridge.applyExtensions(spark, new GraftSparkExtensions)
     spark
   }
 }

@@ -1,12 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.types.DataType
 
-/** Registers all graft SQL functions (ST_* and LLM-pipeline helpers).
+/** graft's SQL functions (ST_* and LLM-pipeline helpers), which
+  * [[graft.GraftSparkExtensions]] injects, and the entry points that
+  * register a user's own.
   *
   * Spark-native replacement for the reference's Hive
   * `CREATE OR REPLACE FUNCTION ... as 'com.azavea.hiveless...'` flow
@@ -82,25 +81,6 @@ object FunctionRegistration {
       VectorOuterSumAgg(children.head)
     })
   )
-
-  def registerAll(ext: SparkSessionExtensions): Unit = {
-    graft.geom.GeometryUDT.init()
-    builders.foreach { case (name, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions", name),
-        builder
-      ))
-    }
-  }
-
-  /** Direct registration for an existing session (tests, Verify, Bench). */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    graft.geom.GeometryUDT.init()
-    builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-  }
 
   /** Register a user-typed scalar SQL function in ~one line — the
     * reference core's HUDF extensibility story (a third party adds a

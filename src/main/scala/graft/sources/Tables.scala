@@ -28,11 +28,10 @@ object Tables {
     * rejects. Read it as raw nanos (legacy conf) and convert to a proper
     * TimestampType column (µs precision) at scan time.
     *
-    * The conf is normally set once at session build time (see
-    * [[graft.GraftSession.configure]]); the guard below only covers
-    * sessions built elsewhere, and never flips an explicitly-set value
-    * back (write-once, same value — no restore, so no race with
-    * concurrent plan building).
+    * This is the one place that sets the conf: the guard below sets it
+    * on first use in any session, however it was built, and never flips
+    * an explicitly-set value back (write-once, same value — no restore,
+    * so no race with concurrent plan building).
     */
   def events(s: SparkSession, d: String): DataFrame = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"

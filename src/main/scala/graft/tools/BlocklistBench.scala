@@ -57,7 +57,6 @@ object BlocklistBench {
     val joinsOnly = args.length > 1 && args(1) == "joins-only"
     val spark = graft.GraftSession.builder(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    graft.GraftSession.enable(spark)
     spark.sparkContext.setLogLevel("WARN")
     import graft.ops.Text
 

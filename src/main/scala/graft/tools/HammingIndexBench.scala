@@ -30,7 +30,6 @@ object HammingIndexBench {
     val big = if (args.length > 1) args(1) else "/root/repo/localdata/sf10docs"
     val spark = graft.GraftSession.builder(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    graft.GraftSession.enable(spark)
     spark.sparkContext.setLogLevel("WARN")
     import graft.ops.Dedup
     import graft.sources.HammingIndex

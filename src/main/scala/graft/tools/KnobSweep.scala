@@ -28,7 +28,6 @@ object KnobSweep {
   def main(args: Array[String]): Unit = {
     val dir = if (args.length > 0) args(0) else "/root/repo/localdata/sf10ann"
     val spark = graft.GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    graft.GraftSession.enable(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     val e = graft.sources.Tables.embeddings(spark, dir)

@@ -34,7 +34,6 @@ object LshIndexBench {
     val big = if (args.length > 1) args(1) else "/root/repo/localdata/sf1"
     val spark = graft.GraftSession.builder(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    graft.GraftSession.enable(spark)
     spark.sparkContext.setLogLevel("WARN")
     import graft.ops.Dedup
     import graft.sources.MinhashIndex

@@ -39,7 +39,6 @@ object SkewUp {
     val src = if (args.length > 0) args(0) else "/root/repo/localdata/sf1"
     val dest = if (args.length > 1) args(1) else "/root/repo/localdata/sf1skew"
     val spark = graft.GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")).getOrCreate()
-    graft.GraftSession.enable(spark)
     spark.sparkContext.setLogLevel("WARN")
 
     // pass-through tables
@@ -107,7 +106,6 @@ object SkewBench {
     val base = if (args.length > 0) args(0) else "/root/repo/localdata/sf1"
     val skew = if (args.length > 1) args(1) else "/root/repo/localdata/sf1skew"
     val spark = graft.GraftSession.builder(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")).getOrCreate()
-    graft.GraftSession.enable(spark)
     spark.sparkContext.setLogLevel("WARN")
     import graft.queries.{Pipeline, Relational}
 

@@ -8,8 +8,9 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType}
 import org.apache.spark.storage.StorageLevel
 
 /** Narrow bridge to `private[sql]` Spark internals graft needs:
-  * Column⇄Expression conversion (for the typed DSL) and
-  * AbstractDataType.acceptsType (for expression type checks).
+  * Column⇄Expression conversion (for the typed DSL),
+  * AbstractDataType.acceptsType (for expression type checks) and a
+  * session's extensions (for `GraftSession.enable`).
   */
 object GraftBridge {
   def column(e: Expression): Column   = ExpressionUtils.column(e)
@@ -43,6 +44,25 @@ object GraftBridge {
         case _ => false
       }
       case _ => false
+    }
+  }
+
+  /** Apply `extension` to a session that was built without it: the
+    * functions it injects go into the session's registry and its
+    * optimizer rules into `experimental.extraOptimizations`. Does
+    * nothing when the session's own extensions, or an earlier call,
+    * already supply those rules.
+    */
+  def applyExtensions(spark: SparkSession, extension: SparkSessionExtensions => Unit): Unit = {
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val ext = new SparkSessionExtensions
+    extension(ext)
+    val rules = ext.buildOptimizerRules(session)
+    val present = session.extensions.buildOptimizerRules(session) ++
+      session.experimental.extraOptimizations
+    if (!rules.forall(present.contains)) {
+      ext.registerFunctions(session.sessionState.functionRegistry)
+      session.experimental.extraOptimizations ++= rules.filterNot(present.contains)
     }
   }
 

@@ -14,13 +14,11 @@ trait SparkTestSession extends BeforeAndAfterAll { self: Suite =>
 
 object SparkTestSession {
   lazy val session: SparkSession = {
-    // GraftSession.builder so specs (PlanShapeSpec above all) certify
-    // plan shapes under the SAME optimizer configs (excludedRules,
-    // constraintPropagation) the Bench/Verify sessions run with —
-    // only the core count, app name and extensions wiring differ.
+    // GraftSession.builder, so specs (PlanShapeSpec above all) certify
+    // the plans of the production path Bench and Verify run on; only
+    // the core count and app name differ.
     val s = GraftSession.builder("4")
       .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
