@@ -24,13 +24,14 @@ import org.apache.spark.sql.catalyst.trees.TreePattern.{FILTER, GENERATE, JOIN}
   * shuffle either. Guards over plain columns stay: they are cheap and
   * reach the parquet reader as pushed filters.
   *
-  * The walk is top-down. It carries the guards the operators above
-  * imply, rewritten through projection aliases, across the operators
-  * a filter commutes with (filters, projections, sorts, generators and
-  * inner/left-semi joins, per side); any other operator starts afresh.
-  * A guard nothing above implies — a user's `isNotNull` with no
-  * generator, under `explode_outer`, a `<=>` key or a left-anti join —
-  * stays.
+  * The walk is top-down. A generator or join hands the guards it
+  * implies to its child, and they travel down through filters and
+  * projections (rewritten through each projection's aliases) to the
+  * filter that holds them; any other operator, and a filter or
+  * projection that is not deterministic, starts afresh (dropping a row
+  * below it would shift what it computes for the rows kept). A guard
+  * nothing above implies — a user's `isNotNull` with no generator,
+  * under `explode_outer`, a `<=>` key or a left-anti join — stays.
   */
 object PruneImpliedGuards extends Rule[LogicalPlan] with AliasHelper with PredicateHelper {
 
@@ -39,21 +40,15 @@ object PruneImpliedGuards extends Rule[LogicalPlan] with AliasHelper with Predic
       prune(plan, Nil)
     else plan
 
-  private def guards(e: Expression): Seq[Expression] =
-    if (e.deterministic) Seq(IsNotNull(e), GreaterThan(new Size(e), Literal(0))) else Nil
-
+  /** `isnotnull(E)` or `size(E) > 0` over a computed `E`. */
   private def isComputedGuard(c: Expression): Boolean = c match {
     case IsNotNull(e) => !e.isInstanceOf[Attribute]
     case GreaterThan(Size(e, _), Literal(0, _)) => !e.isInstanceOf[Attribute]
     case _ => false
   }
 
-  /** The guards in `implied` that `child` can evaluate. */
-  private def over(child: LogicalPlan, implied: Seq[Expression]): Seq[Expression] =
-    implied.filter(_.references.subsetOf(child.outputSet))
-
   private def prune(plan: LogicalPlan, implied: Seq[Expression]): LogicalPlan = plan match {
-    case Filter(cond, child) =>
+    case Filter(cond, child) if cond.deterministic =>
       val set = ExpressionSet(implied)
       val conjuncts = splitConjunctivePredicates(cond)
       val kept = conjuncts.filterNot(c => isComputedGuard(c) && set.contains(c))
@@ -61,30 +56,27 @@ object PruneImpliedGuards extends Rule[LogicalPlan] with AliasHelper with Predic
       if (kept.size == conjuncts.size) plan.withNewChildren(Seq(below))
       else kept.reduceOption(And).fold(below)(Filter(_, below))
 
-    case p @ Project(_, child) =>
+    case p @ Project(list, child) if list.forall(_.deterministic) =>
       val aliases = getAliasMap(p)
-      p.withNewChildren(Seq(prune(child, implied.map(replaceAlias(_, aliases)).filter(_.deterministic))))
-
-    case s: Sort => s.withNewChildren(Seq(prune(s.child, implied)))
+      p.withNewChildren(Seq(prune(child, implied.map(replaceAlias(_, aliases)))))
 
     case g: Generate =>
       val own = g.generator match {
-        case gen @ (_: ExplodeBase | _: Inline) if !g.outer => guards(gen.children.head)
+        case gen @ (_: ExplodeBase | _: Inline) if !g.outer =>
+          val e = gen.children.head
+          Seq(IsNotNull(e), GreaterThan(new Size(e), Literal(0)))
         case _ => Nil
       }
-      g.withNewChildren(Seq(prune(g.child, over(g.child, implied) ++ own)))
+      g.withNewChildren(Seq(prune(g.child, own)))
 
-    case j @ Join(left, right, joinType @ (Inner | LeftSemi), cond, _) =>
+    case j @ Join(left, right, Inner | LeftSemi, cond, _) =>
       val keys = cond.toSeq.flatMap(splitConjunctivePredicates).flatMap {
-        case EqualTo(l, r) => Seq(l, r).filter(_.deterministic)
+        case EqualTo(l, r) => Seq(l, r)
         case _ => Nil
       }
-      def side(child: LogicalPlan, inOutput: Boolean): LogicalPlan = {
-        val own = keys.filter(k => k.references.nonEmpty && k.references.subsetOf(child.outputSet))
-          .map(IsNotNull(_))
-        prune(child, (if (inOutput) over(child, implied) else Nil) ++ own)
-      }
-      j.withNewChildren(Seq(side(left, inOutput = true), side(right, inOutput = joinType == Inner)))
+      def side(child: LogicalPlan): LogicalPlan = prune(child,
+        keys.filter(k => k.references.nonEmpty && k.references.subsetOf(child.outputSet)).map(IsNotNull(_)))
+      j.withNewChildren(Seq(side(left), side(right)))
 
     case other => other.withNewChildren(other.children.map(prune(_, Nil)))
   }
