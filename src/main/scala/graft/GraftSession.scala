@@ -35,7 +35,10 @@ object GraftSession {
     * functions go into the session's registry and its rules into
     * `experimental.extraOptimizations`. A session that already has the
     * extension, from `spark.sql.extensions` or an earlier `enable`, is
-    * returned unchanged.
+    * returned unchanged. The rules then run in Spark's last, user-provided
+    * optimizer batch rather than inside its operator-optimization batches,
+    * so plans can differ from a builder session's; `PruneImpliedGuardsSpec`
+    * checks the guard pruning on both.
     */
   def enable(spark: SparkSession): SparkSession = {
     GraftBridge.applyExtensions(spark, new GraftSparkExtensions)

@@ -740,7 +740,13 @@ object Ann {
           zip_with(col("__qvn"), element_at(cent, col("__c") + 1), (x, y) => x * y),
           lit(0.0), (a, x) => a + x))
 
-    val shortlist = coded.join(broadcast(probes), "__c")
+    // `<=>`, not `=`: a probe's list is never null, so the rows match
+    // alike, but `=` makes Spark infer `isnotnull(ivf_assign(…))` on the
+    // corpus side, a second assignment per row that
+    // plans.PruneImpliedGuards cannot drop here (the residual and codes
+    // projections above it would see the rows it removes)
+    val pr = broadcast(probes)
+    val shortlist = coded.join(pr, coded("__c") <=> pr("__c")).drop(pr("__c"))
       .filter(col("id") =!= col("qid"))
       .withColumn("__score",
         col("__qdotc") + call("pq_adc", col("__qvn"), col("__codes"), flatLit, lit(m)))
