@@ -10,8 +10,9 @@ import org.scalatest.matchers.should.Matchers
 
 /** Plan quality that holds under Spark's default optimizer confs: the
   * guards Spark infers over graft's expensive array and key producers
-  * are pruned by [[PruneImpliedGuards]], and guards nothing above
-  * implies are kept.
+  * are pruned by [[PruneImpliedGuards]], while guards nothing above
+  * implies, and guards whose rows an operator below the generator or
+  * join could fail on, are kept.
   */
 class PruneImpliedGuardsSpec extends AnyFunSuite with SparkTestSession with Matchers
     with PredicateHelper {
