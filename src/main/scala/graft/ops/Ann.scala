@@ -745,8 +745,8 @@ object Ann {
     // corpus side, a second assignment per row that
     // plans.PruneImpliedGuards cannot drop here (the residual and codes
     // projections above it would see the rows it removes)
-    val pr = broadcast(probes)
-    val shortlist = coded.join(pr, coded("__c") <=> pr("__c")).drop(pr("__c"))
+    val bprobes = broadcast(probes)
+    val shortlist = coded.join(bprobes, coded("__c") <=> bprobes("__c")).drop(bprobes("__c"))
       .filter(col("id") =!= col("qid"))
       .withColumn("__score",
         col("__qdotc") + call("pq_adc", col("__qvn"), col("__codes"), flatLit, lit(m)))
