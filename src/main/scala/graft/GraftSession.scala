@@ -32,8 +32,9 @@ object GraftSession {
       .config("spark.sql.extensions", classOf[GraftSparkExtensions].getName)
 
   /** Apply [[GraftSparkExtensions]] to a session that lacks it: its
-    * functions go into the session's registry and its rules into
-    * `experimental.extraOptimizations`. A session that already has the
+    * functions go into the session's registry, its rules into
+    * `experimental.extraOptimizations` and its barrier strategy into
+    * `experimental.extraStrategies`. A session that already has the
     * extension, from `spark.sql.extensions` or an earlier `enable`, is
     * returned unchanged. The rules then run in Spark's last, user-provided
     * optimizer batch rather than inside its operator-optimization batches,

@@ -1,13 +1,15 @@
 package graft
 
 import graft.functions.FunctionRegistration
+import graft.ops.MaterializedStrategy
 import graft.plans.{PruneImpliedGuards, SpatialFilterPushdown}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Everything graft injects into a session: the geometry UDT, the SQL
-  * functions and the two optimizer rules. Enable with
+  * functions, the two optimizer rules and the planner strategy for
+  * `graft.ops.Pins` barriers. Enable with
   * `spark.sql.extensions=graft.GraftSparkExtensions` (what
   * [[GraftSession.builder]] sets), or apply to a session that already
   * exists with [[GraftSession.enable]]. Mirrors the reference's
@@ -22,5 +24,6 @@ class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
     }
     ext.injectOptimizerRule(_ => SpatialFilterPushdown)
     ext.injectOptimizerRule(_ => PruneImpliedGuards)
+    ext.injectPlannerStrategy(_ => MaterializedStrategy)
   }
 }

@@ -303,8 +303,8 @@ object Ann {
   // ------------------------------------------------- computed knob defaults
 
   /** FAISS-guideline computed knobs, wired as the DEFAULTS wherever a
-    * caller leaves nlist/nprobe/nBits at 0 (auto). The r8 KnobSweep
-    * measured the failure mode these prevent: FIXED knobs degrade
+    * caller leaves nlist/nprobe/nBits at 0 (auto). SCALE_r08.md:118 and
+    * SCALE_r09.md:75 record the failure mode these prevent: FIXED knobs degrade
     * across data decades (nlist=16 at 200k vectors → 12.5k-row lists;
     * nBits=8 → bucket occupancy grows linearly with n), while
     * nlist ≈ 4√n and nBits ≈ log₂(n / targetBucket) held 2k → 200k
@@ -312,8 +312,9 @@ object Ann {
     * them — metadata-cheap for a SOURCE-BACKED frame (parquet row
     * counts come from footers), but an auto knob on a DERIVED corpus
     * (filters/joins upstream) replays that lineage as an extra eager
-    * job at call time: cache()/localCheckpoint() the corpus first, or
-    * pass explicit knobs, when the input is not a plain scan.
+    * job at call time: materialize the corpus first with [[Pins]]
+    * (`Pins.once(corpus)`), or pass explicit knobs, when the input is
+    * not a plain scan.
     * Explicit knobs always win (the CORRECTNESS entries pin theirs so
     * decade ratios compare the same plan).
     */

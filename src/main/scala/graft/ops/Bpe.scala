@@ -52,7 +52,7 @@ object Bpe {
       .filter(col("word") =!= "")
       .groupBy("word").agg(count(lit(1)).as("cnt"))
       .select(col("cnt"), wrap(col("word")).as("s"))
-      .localCheckpoint()
+      .transform(Pins.once(_))
     val merges = (0 until nMerges).map { step =>
       val pairs = w
         .select(col("cnt"), unwrap(col("s")).as("l"))
@@ -68,13 +68,13 @@ object Bpe {
         .orderBy(col("pair_count").desc, col("left_sym"), col("right_sym"))
         .limit(1)
         .select(lit(step).as("step"), col("left_sym"), col("right_sym"), col("pair_count"))
-        .localCheckpoint()
+        .transform(Pins.once(_))
       w = w.crossJoin(broadcast(best.select("left_sym", "right_sym")))
         .select(col("cnt"),
           replace(col("s"),
             concat(lit(SEP), col("left_sym"), lit(SEP + SEP), col("right_sym"), lit(SEP)),
             concat(lit(SEP), col("left_sym"), col("right_sym"), lit(SEP))).as("s"))
-        .localCheckpoint()
+        .transform(Pins.once(_))
       best
     }
     merges.reduce(_ union _)

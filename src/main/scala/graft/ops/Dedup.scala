@@ -128,7 +128,7 @@ object Dedup {
     * test scale). c = 1 bounds per-bucket verify work by n/2 — and the
     * operating recipe runs [[exact]] FIRST, after which a band bucket
     * of > √n DISTINCT documents is near-always boilerplate, not a true
-    * near-dup cluster (SkewBench: the planted 2,000-doc boilerplate
+    * near-dup cluster (SCALE_r10.md:85, sf1skew: the planted 2,000-doc boilerplate
     * family spread over ~300–900-member buckets that c = 4 sailed
     * over, re-paying most of the m² work; c = 1 sheds them and tracks
     * the hand-tuned cap within noise). Floor 256 keeps every
@@ -224,8 +224,8 @@ object Dedup {
     * cost of a hash. Regimes (r10): maxBucket > 0 explicit cap; 0
     * (default) the [[defaultMaxBucket]] occupancy cap computed from one
     * count() over `df` (an extra lineage replay on a derived corpus —
-    * cache upstream or pass an explicit cap, the [[Ann.defaultNlist]]
-    * caveat); < 0 unlimited (the exact-recall regime the CORRECTNESS
+    * materialize it first with [[Pins]] or pass an explicit cap, the
+    * [[Ann.defaultNlist]] caveat); < 0 unlimited (the exact-recall regime the CORRECTNESS
     * entries pin).
     *
     * With a cap active the band-key postings are checkpointed into
@@ -244,7 +244,7 @@ object Dedup {
     // with a cap active the band keys feed TWO consumers (the over-cap
     // count and the probe side) — materialize the (id, band, bkey)
     // postings once (3 longs/row) so the guard never re-pays the
-    // shingle+signature scan (SkewBench r10: the re-pay cost 1.3× the
+    // shingle+signature scan (SCALE_r10.md:91: the re-pay cost 1.3× the
     // whole uncapped run on the 50k-doc skew corpus)
     val allBandKeys0 = bandKeyRows(withSig, idCol, numPerm, bands)
     val allBandKeys = if (cap > 0) pins(allBandKeys0) else allBandKeys0
@@ -376,7 +376,7 @@ object Dedup {
       .filter(col("__s").isNotNull && length(col("__s")) >= minLen)
       .groupBy("__s").agg(collect_list(col("__id")).as("__ids"))
       .withColumn("__gid", xxhash64(col("__s")))
-      .localCheckpoint()
+      .transform(Pins.once(_))
     // identical strings are dist-0 pairs by definition
     val within = groups.filter(size(col("__ids")) >= 2)
       .select(explode(col("__ids")).as("id_a"), col("__ids"))
@@ -636,7 +636,7 @@ object Dedup {
     // cosine verify on one core. Fan it out when the scan yields fewer
     // splits than cores (the qProfile guard: a no-op on real multi-file
     // layouts, and the repartition cost is O(n) vectors vs O(n²) work).
-    val e0 = e.localCheckpoint(eager = false)
+    val e0 = Pins.once(e, eager = false)
     val par = df.sparkSession.sparkContext.defaultParallelism
     val eP = if (e0.rdd.getNumPartitions < par) e0.repartition(par) else e0
     val a = eP.select(col(idCol).as("id_a"), col("__v").as("__va"))
@@ -749,7 +749,7 @@ object Dedup {
     // the nlist=1 oracle regime). Fan the stream side out when the scan
     // yields fewer splits than cores (the qProfile guard; repartition
     // cost is O(n) vectors vs O(Σ|cluster|²) verify work).
-    val a0 = assigned.localCheckpoint(eager = false)
+    val a0 = Pins.once(assigned, eager = false)
     val par = df.sparkSession.sparkContext.defaultParallelism
     val aP = if (a0.rdd.getNumPartitions < par) a0.repartition(par) else a0
     val a = aP.select(col("__c"), col("id").as("id_a"), col("__v").as("__va"))
@@ -824,10 +824,9 @@ object Dedup {
   /** [[connectedComponentsWithRounds]] with its checkpoints in `pins`:
     * the RESULT reads the pair frame, the node set and the fixpoint
     * edge set lazily, so [[mergeComponents]] closes its own `pins` once
-    * the labels have materialized. Superseded PER-ROUND edge frames are
-    * released inline here (each round's signature job materializes and
-    * lineage-truncates the next frame, so the previous round's blocks
-    * are dead the moment it returns).
+    * the labels have materialized. Each round's edge frame sits in its
+    * own [[Pins.scope]] of `pins`, closed once the next round's
+    * signature job has materialized its successor.
     */
   private def ccInternal(
       pairs: DataFrame, idACol: String, idBCol: String, maxIter: Int,
@@ -884,7 +883,9 @@ object Dedup {
         if (r.isNullAt(1)) 0L else r.getLong(1),
         if (r.isNullAt(2)) 0L else r.getLong(2))
     }
-    var edges = pins(raw.filter(col("src") =!= col("dst")).distinct(), eager = false)
+    // one scope per edge frame: each round closes the superseded one
+    var round = pins.scope()
+    var edges = round(raw.filter(col("src") =!= col("dst")).distinct(), eager = false)
     var prevSig = sig(edges)
     // LOCAL FAST PATH (see LocalCcMaxEdges): the init-sig job above
     // already materialized the distinct edge set and counted it — when
@@ -929,13 +930,15 @@ object Dedup {
     var rounds = 0
     var converged = prevSig._1 == 0L
     while (rounds < maxIter && !converged) {
-      val next = pins(smallStar(largeStar(edges)), eager = false)
+      val nextRound = pins.scope()
+      val next = nextRound(smallStar(largeStar(edges)), eager = false)
       val nextSig = sig(next)
       converged = nextSig == prevSig
       // the sig job materialized (and lineage-truncated) `next`: the
       // superseded round's blocks are dead — release them so a deep
       // convergence doesn't pin one edge-frame copy per round
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(edges)
+      round.close()
+      round = nextRound
       edges = next
       prevSig = nextSig
       rounds += 1

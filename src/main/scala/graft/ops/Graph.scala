@@ -40,7 +40,7 @@ object Graph {
     // first action (the nodes count), |E| rows of two key columns.
     // Skipped when `edges` already reads a checkpoint (the Pins rule);
     // the result reads the barrier, so the ContextCleaner frees it.
-    val e = new Pins()(edges.select(col(srcCol).as("__s"), col(dstCol).as("__t")),
+    val e = Pins.once(edges.select(col(srcCol).as("__s"), col(dstCol).as("__t")),
       eager = false)
     val nodes = e.select(col("__s").as("__v"))
       .union(e.select(col("__t").as("__v"))).distinct()
@@ -57,7 +57,7 @@ object Graph {
       ranks = nodes.join(contrib, nodes("__v") === contrib("__t"), "left")
         .select(col("__v"), (base + lit(d) * coalesce(col("__c"), lit(0.0))).as("__p"))
       if (i % checkpointEvery == 0 && i < iters)
-        ranks = ranks.localCheckpoint(eager = true)
+        ranks = Pins.once(ranks)
     }
     ranks.select(col("__v").as("node"), col("__p").as("rank"))
   }
@@ -90,7 +90,7 @@ object Graph {
     require(iters >= 1, s"iters $iters must be >= 1")
     // the pageRank edge barrier: e0 feeds the undirected view TWICE per
     // use (und = e0 ∪ swap(e0)) across nodes + one join per round
-    val e0 = new Pins()(edges.select(col(srcCol).as("__s"), col(dstCol).as("__t")),
+    val e0 = Pins.once(edges.select(col(srcCol).as("__s"), col(dstCol).as("__t")),
       eager = false)
     val und = e0.union(e0.select(col("__t").as("__s"), col("__s").as("__t")))
     val nodes = und.select(col("__s").as("__v")).distinct()
@@ -109,7 +109,7 @@ object Graph {
         .agg(min(struct((-col("__c")).as("nc"), col("__l").as("l"))).as("__w"))
         .select(col("__s").as("__v"), col("__w").getField("l").as("__l"))
       if (i % checkpointEvery == 0 && i < iters)
-        labels = labels.localCheckpoint(eager = true)
+        labels = Pins.once(labels)
     }
     labels.select(col("__v").as("node"), col("__l").as("label"))
   }

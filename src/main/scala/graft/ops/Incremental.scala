@@ -64,8 +64,8 @@ object Incremental {
     // term. A nondeterministic derived delta recomputed per consumer
     // could otherwise yield inconsistent rows between the union terms,
     // the very hazard the checkpoint exists to prevent.
-    val dA = deltaA.localCheckpoint()
-    val dB = deltaB.localCheckpoint()
+    val dA = Pins.once(deltaA)
+    val dB = Pins.once(deltaB)
     def small(d: DataFrame): DataFrame =
       if (d.count() <= maxBroadcastRows) broadcast(d) else d
     val bNew = bOld.unionByName(dB)

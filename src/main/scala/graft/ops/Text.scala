@@ -1031,7 +1031,7 @@ object Text {
       .filter(col("__bl_dom").isNotNull && col("__bl_dom") =!= "")
       .distinct()
       .withColumn("__bl_depth", size(split(col("__bl_dom"), "\\.")))
-      .localCheckpoint()
+      .transform(Pins.once(_))
     val depth =
       if (maxDepth > 0) maxDepth
       else {
@@ -1072,7 +1072,7 @@ object Text {
   /** The per-row broadcast-literal exists() scan — correct and
     * shuffle-free, but O(rows × |list|) with the whole list embedded
     * in the plan: the measured counter-baseline for [[blocklistFlag]]
-    * (see tools/BlocklistBench); use only for lists of at most a few
+    * (SCALE_r10.md:14); use only for lists of at most a few
     * hundred domains.
     */
   def blocklistFlagScan(df: DataFrame, urlCol: Column,
@@ -1659,6 +1659,7 @@ object Text {
   final class LineHistory private[ops] (
       @volatile private var bloomBytes: Array[Byte],
       @volatile private var digestTable: DataFrame,
+      @volatile private var digestPins: Pins,
       val numHashes: Int) {
     /** Current filter bits (byte-OR-merged across appends). */
     def bloom: Array[Byte] = bloomBytes
@@ -1686,10 +1687,10 @@ object Text {
                delim: String = "\n"): Unit = {
       import graft.functions.FunctionDefs.callAgg
       val q = java.util.regex.Pattern.quote(delim)
-      val batchLines = batch.filter(col(textCol).isNotNull)
+      val batchPins = new Pins
+      val batchLines = batchPins(batch.filter(col(textCol).isNotNull)
         .select(explode(split(col(textCol), q)).as("__l"))
-        .filter(trim(col("__l")) =!= "")
-        .localCheckpoint()
+        .filter(trim(col("__l")) =!= ""))
       val bf = batchLines
         .agg(callAgg("bloom_agg", xxhash64(col("__l")),
           lit(numBits), lit(numHashes)).as("bf"))
@@ -1703,20 +1704,20 @@ object Text {
       while (i < merged.length) {
         merged(i) = (bloomBytes(i) | bf(i)).toByte; i += 1
       }
-      val next = digestTable
+      val nextPins = new Pins
+      val next = nextPins(digestTable
         .unionByName(batchLines.select(md5(col("__l")).as("__hh"))
           .withColumn("__seen", lit(1)))
-        .dropDuplicates("__hh")
-        .localCheckpoint()
-      val previous = digestTable
+        .dropDuplicates("__hh"))
+      val previous = digestPins
       digestTable = next
+      digestPins = nextPins
       bloomBytes = merged
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(previous)
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(batchLines)
+      previous.close()
+      batchPins.close()
     }
 
-    def release(): Unit =
-      org.apache.spark.sql.GraftBridge.unpersistCheckpoint(digestTable)
+    def release(): Unit = digestPins.close()
   }
 
   /** Assemble a [[LineHistory]] from externally-persisted state — the
@@ -1725,7 +1726,7 @@ object Text {
     */
   private[graft] def lineHistoryFrom(bloom: Array[Byte], digests: DataFrame,
                                      numHashes: Int): LineHistory =
-    new LineHistory(bloom, digests, numHashes)
+    new LineHistory(bloom, digests, new Pins, numHashes)
 
   /** Build the [[LineHistory]] state. ONE pass over the history corpus
     * feeds both halves: the exploded non-blank lines localCheckpoint
@@ -1744,19 +1745,19 @@ object Text {
                          numHashes: Int = 5): LineHistory = {
     import graft.functions.FunctionDefs.callAgg
     val q = java.util.regex.Pattern.quote(delim)
-    val histLines = history.filter(col(textCol).isNotNull)
+    val linePins = new Pins
+    val histLines = linePins(history.filter(col(textCol).isNotNull)
       .select(explode(split(col(textCol), q)).as("__l"))
-      .filter(trim(col("__l")) =!= "")
-      .localCheckpoint()
+      .filter(trim(col("__l")) =!= ""))
     val bloom = histLines
       .agg(callAgg("bloom_agg", xxhash64(col("__l")),
         lit(numBits), lit(numHashes)).as("bf"))
       .head().getAs[Array[Byte]]("bf")
-    val digests = histLines.select(md5(col("__l")).as("__hh")).distinct()
-      .withColumn("__seen", lit(1))
-      .localCheckpoint()
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(histLines)
-    new LineHistory(bloom, digests, numHashes)
+    val digestPins = new Pins
+    val digests = digestPins(histLines.select(md5(col("__l")).as("__hh")).distinct()
+      .withColumn("__seen", lit(1)))
+    linePins.close()
+    new LineHistory(bloom, digests, digestPins, numHashes)
   }
 
   /** One-shot convenience form — for REPEATED batches (the foreachBatch

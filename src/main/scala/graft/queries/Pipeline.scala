@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.ops.{Ann, Dedup, Graph, Multimodal, Text}
+import graft.ops.{Ann, Dedup, Graph, Multimodal, Pins, Text}
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -78,7 +78,7 @@ object Pipeline {
   def ddComponentsInc(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val pairs = Dedup.jaccardJoin(docs, "doc_id", "text", k = 3, threshold = 0.8)
-      .localCheckpoint() // the split feeds two CC passes
+      .transform(Pins.once(_)) // the split feeds two CC passes
     val old = pairs.filter((col("id_a") + col("id_b")) % 3 =!= 0)
     val fresh = pairs.filter((col("id_a") + col("id_b")) % 3 === 0)
     val cc = Dedup.mergeComponents(Dedup.connectedComponents(old), fresh)
@@ -678,10 +678,9 @@ object Pipeline {
         aggregate(col("__encs"), lit(0), (acc, t) => acc + size(t)).cast("int").as("n_tokens"),
         (transform(col("__encs"), t => array_join(t, "")) === col("__words"))
           .cast("int").as("roundtrip_ok"))
-      // barrier: orderBy's range sampler executes the child, which would
-      // run the 10-deep merge cascade a second time (see spPredicates)
-      .localCheckpoint(eager = false)
-      .orderBy("doc_id")
+      // the sort barrier: the sampler would otherwise run the 10-deep
+      // merge cascade a second time
+      .transform(Pins.sorted("doc_id"))
   }
 
   /** The distributed half of PCA — the one-pass (n, Σv, Σv·vᵀ) moment
@@ -990,7 +989,7 @@ object Pipeline {
       .select(col("doc_id"),
         Text.langIdScriptRouted(col("__t"), col("__sc")).as("lang"),
         Text.qualityScore(col("__t")).as("score"))
-      .localCheckpoint()
+      .transform(Pins.once(_))
     val kept = Text.adaptiveQualityFilterScored(scored, "doc_id", "lang",
       q = 0.25)
     Text.sampleByMixture(kept, "lang", "doc_id", alpha = 0.5, budget = 300.0)
@@ -1051,28 +1050,22 @@ object Pipeline {
     * are pure arithmetic in doc_id, which the oracle replays — certifying
     * an actual lossless codec roundtrip, not a stub.
     */
-  // The three REAL-codec entries barrier their decoded rows before the
-  // final orderBy (lazy localCheckpoint — the r15 sort-sampler rule): a
-  // bare orderBy executes its child TWICE (range-partitioner sample
-  // pass + sort map pass), and here the child is the full javax
+  // The three REAL-codec entries sort behind a barrier (Pins.sorted):
+  // here the sampler's second pass would be the full javax
   // encode+decode roundtrip — measured 2 near-equal codec stages per
   // run at 10× (mm_video 5.1 s run each). The decoded rows are a few
   // ints per doc, so one block write is far cheaper than a second
-  // decode. PlanShapeSpec pins the decode pipelines' narrow scan-side
-  // shape on the OP composition directly (the barrier hides it behind
-  // an ExistingRDD in the entry plan — the tx_web_curate precedent).
+  // decode.
   def mmDecode(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
     Multimodal.decodeImages(s, Multimodal.synthesizePngs(s, docs, "doc_id"), "doc_id")
-      .localCheckpoint(eager = false)
-      .orderBy("doc_id")
+      .transform(Pins.sorted("doc_id"))
   }
 
   def mmAudio(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
     Multimodal.decodeAudio(s, Multimodal.synthesizeWavs(s, docs, "doc_id"), "doc_id")
-      .localCheckpoint(eager = false)
-      .orderBy("doc_id")
+      .transform(Pins.sorted("doc_id"))
   }
 
   /** Real multi-frame decode: every 2nd frame of per-doc animated GIFs;
@@ -1082,8 +1075,7 @@ object Pipeline {
   def mmVideo(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir).select(col("doc_id"))
     Multimodal.decodeFrames(s, Multimodal.synthesizeGifs(s, docs, "doc_id"), "doc_id", stride = 2)
-      .localCheckpoint(eager = false)
-      .orderBy("doc_id", "frame_idx")
+      .transform(Pins.sorted("doc_id", "frame_idx"))
   }
 
   /** The §2.11 blob/metadata schema contract as a driver entry: the
@@ -1613,11 +1605,10 @@ object Pipeline {
         syntheticUrl,
         Seq("src3.example.com", "src7.example.com", "src1.example.com"))
       .select(col("doc_id"), col("host"), col("blocked"))
-      // NO sort barrier here (unlike spPredicates): a localCheckpoint
-      // would hide the suffix-probe BroadcastHashJoins behind an
-      // ExistingRDD scan and blind PlanShapeSpec's shape pin — the
-      // ~0.3 s sampler double-pay is the cheaper trade
-      .orderBy("doc_id")
+      // the sort barrier saves the sampler's second pass over the URL
+      // derivation and suffix probes; explain() shows the suffix-probe
+      // BroadcastHashJoins PlanShapeSpec pins under the barrier
+      .transform(Pins.sorted("doc_id"))
 
   /** Trained quality classifier ([[graft.ops.Probe.logit2]]): logistic
     * regression fit by 8 exact-statistics Newton (IRLS) iterations on a
@@ -1863,8 +1854,7 @@ object Pipeline {
     // its three consumers — the emptiness gate plus both graph legs —
     // would otherwise each replay the corpus-sized join (the legs'
     // own edge barriers see a checkpoint here and skip their copy)
-    val edges = hostEdges(docs.select("doc_id", "source"))
-      .localCheckpoint(eager = false)
+    val edges = Pins.once(hostEdges(docs.select("doc_id", "source")), eager = false)
     // an edgeless graph (single-source corpus) is a legal input to the
     // SCORECARD even though pageRank alone refuses it: the oracle — and
     // the NULL-authority contract above — still emit one row per host,
@@ -2002,8 +1992,8 @@ object Pipeline {
     */
   // One Maintainer per (JVM, index path): params + both manifests read
   // once and served from memory on every probe — the handle the probe
-  // loop is DOCUMENTED to use (MinhashIndex.Maintainer scaladoc; the
-  // LshIndexBench 50-doc row measures the floor it removes). The index
+  // loop is DOCUMENTED to use (MinhashIndex.Maintainer scaladoc;
+  // SCALE_r11.md:42 measures the floor it removes). The index
   // FILES are still read per probe; only file-count-sized metadata is
   // cached, exactly like the mhixReady build cache above it.
   private val mhixMaintainers =
@@ -2035,7 +2025,7 @@ object Pipeline {
     val probed = mhixMaintainer(s, minhashIndexPath(s, dir))
       .probe(docs.filter(col("doc_id") % 4 === 0), "doc_id", "text",
         threshold = 0.8, maxBucket = -1)
-      .select("id_a", "id_b").localCheckpoint()
+      .select("id_a", "id_b").transform(Pins.once(_))
     val reband = Dedup.minhashLsh(docs, "doc_id", "text", k = 3,
         numPerm = 64, bands = 16, threshold = 0.8, maxBucket = -1)
       .filter(touches).select("id_a", "id_b")
@@ -2085,7 +2075,7 @@ object Pipeline {
     val probed = mhixMaintainer(s, minhashIndexIncPath(s, dir))
       .probe(docs.filter(col("doc_id") % 4 === 0), "doc_id", "text",
         threshold = 0.8, maxBucket = -1)
-      .select("id_a", "id_b").localCheckpoint()
+      .select("id_a", "id_b").transform(Pins.once(_))
     val reband = Dedup.minhashLsh(docs, "doc_id", "text", k = 3,
         numPerm = 64, bands = 16, threshold = 0.8, maxBucket = -1)
       .filter(touches).select("id_a", "id_b")
@@ -2477,8 +2467,7 @@ object Pipeline {
     // purpose): params/bloom/manifest read once, the append extends the
     // cached state instead of forcing the second probe to re-read it
     val m = new graft.sources.LineIndex.Maintainer(s, p)
-    val r1 = m.probe(lined.filter(col("doc_id") % 6 === 0), "doc_id", "text")
-      .localCheckpoint()
+    val r1 = Pins.once(m.probe(lined.filter(col("doc_id") % 6 === 0), "doc_id", "text"))
     m.append(r1, "text_dedup")
     val r2 = m.probe(lined.filter(col("doc_id") % 6 === 3), "doc_id", "text")
     r1.unionByName(r2).orderBy("doc_id")
@@ -2708,7 +2697,7 @@ object Pipeline {
       .select(col("doc_id"),
         array_join(filter(col("__ls"),
           l => graft.ops.Text.keepLine(l)), "\n").as("text"))
-      .localCheckpoint(eager = false)
+      .transform(Pins.once(_, eager = false))
     val survivors = cleaned
       .withColumn("__keep",
         graft.ops.Text.gopherPass(col("text"), minWords = 10) &&

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.ops.Pins
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -351,7 +352,7 @@ object Relational {
       .select(col("l_returnflag"), col("n"),
         expr("qdigest_quantile(__sk, 0.5d)").as("__e50"),
         expr("qdigest_quantile(__sk, 0.95d)").as("__e95"))
-      .localCheckpoint()
+      .transform(Pins.once(_))
     // true ranks of the two estimates in one broadcast-probe pass —
     // the fact side never shuffles (the estimate table is |groups| rows)
     val ranks = li.join(broadcast(sk.select("l_returnflag", "__e50", "__e95")), "l_returnflag")
@@ -941,7 +942,7 @@ object Relational {
       .filter(col("value").isNotNull && col("event_type").isNotNull)
       .groupBy("event_type", "value")
       .agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .transform(Pins.once(_))
     val med = hist.groupBy("event_type")
       .agg(expr("percentile(value, 0.5, cnt)").as("med"))
     val dev = hist.join(broadcast(med), "event_type")

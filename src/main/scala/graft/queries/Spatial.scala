@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.functions.st
+import graft.ops.Pins
 import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -161,8 +162,7 @@ object Spatial {
       col("c_custkey"),
       round(st.area(st.intersection(col("box"), window)), 6).as("inter_area"),
       round(st.area(st.difference(col("box"), window)), 6).as("diff_area"))
-      .localCheckpoint(eager = false) // barrier: see the spPredicates note
-      .orderBy("c_custkey")
+      .transform(Pins.sorted("c_custkey"))
   }
 
   /** Extent-struct filter — goes through the SpatialFilterPushdown rule
@@ -267,14 +267,6 @@ object Spatial {
     * st_equals / st_overlaps / st_touches / st_relate / st_relateBool
     * (reference spatial/src/main/scala/com/azavea/hiveless/spatial/ST_Covers.scala:1 et al).
     */
-  // `.localCheckpoint(eager = false)` BEFORE a final orderBy is a
-  // materialization barrier: orderBy's range partitioner samples its
-  // child by EXECUTING it, so a heavy scan-side projection under a bare
-  // orderBy is computed twice — once for the sample pass, once for the
-  // sort's map pass (measured: the two stages are near-equal cost on
-  // the geometry batteries). The lazy checkpoint materializes the rows
-  // once; sample and sort then read blocks. Only applied where the
-  // per-row compute dwarfs one block write of the output.
   def spPredicates(s: SparkSession, dir: String): DataFrame =
     fanOut(customerBoxes(s, dir))
       .withColumn("boxB", st.translate(col("box"), col("w") / 2, lit(0.0)))
@@ -301,8 +293,7 @@ object Spatial {
         st.relate(col("box"), col("boxC")).as("rel_touch"),
         st.relate(col("box"), col("boxD")).as("rel_disjoint"),
         when(st.relateBool(col("box"), col("boxC"), lit("F***T****")), 1).otherwise(0).as("touch_pattern"))
-      .localCheckpoint(eager = false) // barrier: see sortedOnce
-      .orderBy("c_custkey")
+      .transform(Pins.sorted("c_custkey"))
 
   /** Accessor tail, value-checked: boundary length = perimeter, dimension
     * per geometry class, exterior-ring vertex count and 1-based pointN
@@ -340,8 +331,7 @@ object Spatial {
         st.numPoints(st.castToPolygon(col("box"))).as("cast_poly_np"),
         round(st.x(st.makePointM(col("lon"), col("lat"), lit(7.0))), 6).as("mpm_x"),
         org.apache.spark.sql.functions.length(st.byteArray(lit("graft"))).cast("int").as("ba_len"))
-      .localCheckpoint(eager = false) // barrier: see spPredicates note
-      .orderBy("c_custkey")
+      .transform(Pins.sorted("c_custkey"))
 
   /** Processing tail, value-checked: Douglas-Peucker keeps all 5 box
     * vertices but collapses a collinear 3-point line to 2; closestPoint
@@ -382,8 +372,7 @@ object Spatial {
         round(st.lengthSphere(col("line2")), 1).as("lsph"),
         round(st.area(st.antimeridianSafeGeom(col("idlBox"))), 6).as("ams_area"),
         st.numGeometries(st.antimeridianSafeGeom(col("idlBox"))).as("ams_ng"))
-      .localCheckpoint(eager = false) // barrier: see spPredicates note
-      .orderBy("c_custkey")
+      .transform(Pins.sorted("c_custkey"))
 
   /** EPSG:4326 → per-row UTM zone (EPSG:326zz/327zz) projection, plus an
     * inverse round-trip flag. The oracle re-derives the full Snyder
@@ -831,8 +820,7 @@ object Spatial {
         round(st.y(col("p")), 1).as("northing"),
         when(abs(st.x(col("back")) - col("lon")) < 1e-7 &&
              abs(st.y(col("back")) - col("lat")) < 1e-7, 1).otherwise(0).as("rt_ok"))
-      .localCheckpoint(eager = false) // barrier: see spPredicates note
-      .orderBy("c_custkey")
+      .transform(Pins.sorted("c_custkey"))
 
   /** Albers equal-area conic (EPSG:5070 Conus Albers) forward + inverse
     * roundtrip: the oracle mirrors the Snyder 15-19..15-26 forward

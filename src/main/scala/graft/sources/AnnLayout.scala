@@ -40,7 +40,7 @@ object AnnLayout {
     */
   def build(df: DataFrame, idCol: String, vecCol: String, path: String,
             nlist: Int = 0, iters: Int = 2, seed: Long = 7): Unit = {
-    // nlist = 0 → the FAISS-guideline computed default (4√n, KnobSweep r8)
+    // nlist = 0 → the FAISS-guideline computed default (4√n, SCALE_r08.md:118)
     val nl = if (nlist > 0) nlist else Ann.defaultNlist(df.count())
     import graft.functions.FunctionDefs.call
     val spark = df.sparkSession

@@ -127,17 +127,18 @@ object HammingIndex {
   private def appendWith(s: SparkSession, path: String,
                          batch: DataFrame, idCol: String, hashCol: String,
                          pieces: Int, nOld: Long): (Seq[Row], Seq[Row], Long) = {
-    val bdocs = batch
+    val docPins = new Pins
+    // three consumers: doc rows, postings, count
+    val bdocs = docPins(batch
       .select(col(idCol).as("id"), col(hashCol).cast("long").as("h"))
-      .filter(col("h").isNotNull)
-      .localCheckpoint() // three consumers: doc rows, postings, count
+      .filter(col("h").isNotNull))
     val docRows = StatsManifest.append(bdocs, s"$path/docs", "h", nFiles = 4)
     val distinctH = bdocs.select(col("h").as("__h")).distinct()
     val postRows = StatsManifest.append(chunkKeys(distinctH, pieces),
       s"$path/postings", "key", nFiles = 4)
     val nHashes = nOld + distinctH.count()
     writeParams(s, path, pieces, nHashes)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(bdocs)
+    docPins.close()
     (docRows, postRows, nHashes)
   }
 

@@ -95,7 +95,8 @@ object LineIndex {
             delim: String = "\n", numBits: Long = 1L << 23,
             numHashes: Int = 5, nFiles: Int = 0): Unit = {
     val s = history.sparkSession
-    val lines = linesOf(history, textCol, delim).localCheckpoint()
+    val linePins = new Pins
+    val lines = linePins(linesOf(history, textCol, delim))
     // nFiles <= 0 derives the layout width from the data (guide-§6 file
     // sizing): ~256k digest rows (~10 MB) per range file, floored at 8
     // for pruning granularity, capped at 512 per build. A fixed 64 was
@@ -113,7 +114,7 @@ object LineIndex {
       .head().getLong(0)
     writeBloom(s, path, bf)
     writeParams(s, path, numHashes, nLines)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(lines)
+    linePins.close()
   }
 
   /** [[graft.ops.Text.dedupLinesIncremental]] output contract for the
@@ -151,12 +152,12 @@ object LineIndex {
     import graft.functions.FunctionDefs.call
     // the maybe minority: distinct bloom-positive batch lines,
     // materialized once (it feeds the count, then one of two paths)
-    val maybesDf = linesOf(batch, textCol, delim)
+    val maybePins = new Pins
+    val maybesDf = maybePins(linesOf(batch, textCol, delim)
       .filter(call("bloom_contains", lit(bloom), xxhash64(col("__l")),
         lit(numHashes)))
       .select(xxhash64(col("__l")).as("xx"), md5(col("__l")).as("__hh"))
-      .distinct()
-      .localCheckpoint()
+      .distinct())
     // ONE limit-collect replaces the former count()-then-collect() pair
     // (two jobs per probe): <= maxCollect rows back means we hold the
     // COMPLETE maybe set (limit returned everything there was) and the
@@ -169,12 +170,12 @@ object LineIndex {
       .select(col("hh").as("__hh"))
     val present =
       if (sample.isEmpty) {
-        org.apache.spark.sql.GraftBridge.unpersistCheckpoint(maybesDf)
+        maybePins.close()
         empty
       } else if (sample.length <= maxCollect) {
         // fast path: driver-side file pruning, zero metadata jobs
         val maybes = sample
-        org.apache.spark.sql.GraftBridge.unpersistCheckpoint(maybesDf)
+        maybePins.close()
         val files = StatsManifest.pruneLocal(mrows, maybes.map(_.getLong(0)))
         if (files.isEmpty) empty
         else {
@@ -194,7 +195,7 @@ object LineIndex {
         val p = pins(s.read.parquet(s"$path/digests").select(col("hh").as("__hh"))
           .join(maybesDf.select("__hh"), Seq("__hh"), "left_semi")
           .distinct())
-        org.apache.spark.sql.GraftBridge.unpersistCheckpoint(maybesDf)
+        maybePins.close()
         p
       }
     val state = graft.ops.Text.lineHistoryFrom(
@@ -221,7 +222,8 @@ object LineIndex {
                          textCol: String, delim: String, nFiles: Int,
                          numHashes: Int, old: Array[Byte], nLines: Long)
       : (Seq[Row], Array[Byte], Long) = {
-    val lines = linesOf(kept, textCol, delim).localCheckpoint()
+    val linePins = new Pins
+    val lines = linePins(linesOf(kept, textCol, delim))
     val fresh = StatsManifest.append(digestsOf(lines), s"$path/digests", "xx", nFiles)
     val bf = bloomOf(lines, old.length.toLong * 8L, numHashes)
     require(bf.length == old.length,
@@ -232,7 +234,7 @@ object LineIndex {
     val n = nLines + fresh.map(_.getAs[Long]("n_rows")).sum
     writeBloom(s, path, merged)
     writeParams(s, path, numHashes, n)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(lines)
+    linePins.close()
     (fresh, merged, n)
   }
 
@@ -252,13 +254,13 @@ object LineIndex {
     */
   def compact(s: SparkSession, path: String, nFiles: Int = 64): Unit = {
     val numHashes = readParams(s, path).getInt(0)
-    val clean = s.read.parquet(s"$path/digests")
-      .dropDuplicates("hh")
-      .localCheckpoint() // the write overwrites its own input dir
+    val cleanPins = new Pins
+    // the write overwrites its own input dir
+    val clean = cleanPins(s.read.parquet(s"$path/digests").dropDuplicates("hh"))
     StatsManifest.write(clean, s"$path/digests", "xx", nFiles)
     val n = s.read.parquet(s"$path/digests").count()
     writeParams(s, path, numHashes, n)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(clean)
+    cleanPins.close()
   }
 
   /** Amortizing handle for repeated probe/append cycles against ONE

@@ -141,8 +141,9 @@ object MinhashIndex {
                          batch: DataFrame, idCol: String, textCol: String,
                          k: Int, numPerm: Int, bands: Int, seed: Long,
                          nDocsOld: Long): (Seq[Row], Seq[Row], Long) = {
-    val withSig = Dedup.sigFrame(batch, idCol, textCol, k, numPerm, seed)
-      .localCheckpoint() // two consumers: docs rows + postings
+    val sigPins = new Pins
+    // two consumers: docs rows + postings
+    val withSig = sigPins(Dedup.sigFrame(batch, idCol, textCol, k, numPerm, seed))
     val docRows = StatsManifest.append(
       withSig.select(col(idCol).as("id"), col("__sh").as("sh")),
       s"$path/docs", "id", nFiles = 4)
@@ -159,7 +160,7 @@ object MinhashIndex {
     // everything derived from the checkpoint is written out — release
     // its blocks so a daily/streaming maintainer doesn't pin one
     // batch-sized checkpoint per append (the CcStream discipline)
-    org.apache.spark.sql.GraftBridge.unpersistCheckpoint(withSig)
+    sigPins.close()
     (docRows, postRows, nDocs)
   }
 
@@ -226,7 +227,7 @@ object MinhashIndex {
     *
     * Cost floor: each probe pays a fixed driver overhead — the params
     * read plus two manifest resolutions and the pruning collects
-    * (~seconds at test scale, LshIndexBench's measured floor) — so
+    * (~seconds at test scale, SCALE_r10.md:30) — so
     * sub-minute micro-batches should either batch up before probing
     * or run through a [[Maintainer]], which caches params + manifests
     * across probes and extends them in memory on append.
@@ -351,7 +352,7 @@ object MinhashIndex {
     * each append from the delta stats [[StatsManifest.append]] already
     * collected. Cuts the per-probe fixed floor from ~3 s (params read
     * + two manifest reads + their job launches) to the batch-key
-    * collect alone (LshIndexBench's 50-doc row measures it).
+    * collect alone (SCALE_r11.md:42 measures it on a 50-doc batch).
     *
     * Single-writer contract (the [[VersionedDir]] one, sharpened): the
     * cache assumes THIS handle performs every append — an external

@@ -1,16 +1,15 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression}
-import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types.{AbstractDataType, DataType}
-import org.apache.spark.storage.StorageLevel
 
 /** Narrow bridge to `private[sql]` Spark internals graft needs:
   * Column⇄Expression conversion (for the typed DSL),
-  * AbstractDataType.acceptsType (for expression type checks) and a
-  * session's extensions (for `GraftSession.enable`).
+  * AbstractDataType.acceptsType (for expression type checks), frames
+  * over a logical plan (for `graft.ops.Pins`) and a session's
+  * extensions (for `GraftSession.enable`).
   */
 object GraftBridge {
   def column(e: Expression): Column   = ExpressionUtils.column(e)
@@ -18,40 +17,16 @@ object GraftBridge {
   def accepts(expected: AbstractDataType, actual: DataType): Boolean =
     expected.acceptsType(actual)
 
-  /** Release the cached blocks behind a `localCheckpoint()`ed frame.
-    * Owned by [[graft.ops.Pins.close]]; the only direct callers are
-    * functions that create and release a checkpoint themselves. No-op
-    * for frames that aren't checkpoint-backed.
-    */
-  def unpersistCheckpoint(df: Dataset[_]): Unit =
-    df.queryExecution.optimizedPlan.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** True when `df` reads a persisted RDD directly: its optimized plan
-    * is a [[LogicalRDD]] with a storage level, bare or under a
-    * projection of attributes and attribute aliases. The storage level
-    * matters: `foreachBatch` and `createDataFrame(rdd)` frames are
-    * `LogicalRDD`s over plain, recomputing RDDs.
-    */
-  def checkpointBacked(df: Dataset[_]): Boolean = {
-    def persisted(r: LogicalRDD) = r.rdd.getStorageLevel != StorageLevel.NONE
-    df.queryExecution.optimizedPlan match {
-      case r: LogicalRDD => persisted(r)
-      case Project(list, r: LogicalRDD) => persisted(r) && list.forall {
-        case _: Attribute | Alias(_: Attribute, _) => true
-        case _ => false
-      }
-      case _ => false
-    }
-  }
+  /** A frame over an already-analyzed logical plan. */
+  def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
   /** Apply `extension` to a session that was built without it: the
-    * functions it injects go into the session's registry and its
-    * optimizer rules into `experimental.extraOptimizations`. Does
-    * nothing when the session's own extensions, or an earlier call,
-    * already supply those rules.
+    * functions it injects go into the session's registry, its optimizer
+    * rules into `experimental.extraOptimizations` and its planner
+    * strategies into `experimental.extraStrategies`. Does nothing when
+    * the session's own extensions, or an earlier call, already supply
+    * those rules.
     */
   def applyExtensions(spark: SparkSession, extension: SparkSessionExtensions => Unit): Unit = {
     val session = spark.asInstanceOf[classic.SparkSession]
@@ -63,6 +38,7 @@ object GraftBridge {
     if (!rules.forall(present.contains)) {
       ext.registerFunctions(session.sessionState.functionRegistry)
       session.experimental.extraOptimizations ++= rules.filterNot(present.contains)
+      session.experimental.extraStrategies ++= ext.buildPlannerStrategies(session)
     }
   }
 

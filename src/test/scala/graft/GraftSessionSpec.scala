@@ -1,6 +1,7 @@
 package graft
 
 import graft.functions.{FunctionRegistration, st}
+import graft.ops.MaterializedStrategy
 import graft.plans.{PruneImpliedGuards, SpatialFilterPushdown}
 import org.apache.spark.sql.{BareSession, SparkSession}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -39,9 +40,11 @@ class GraftSessionSpec extends AnyFunSuite with SparkTestSession with Matchers {
       registry.lookupFunction(FunctionIdentifier(n)).map(_.getClassName) shouldBe Some("graft.functions")
     }
     bare.experimental.extraOptimizations shouldBe Seq(SpatialFilterPushdown, PruneImpliedGuards)
+    bare.experimental.extraStrategies shouldBe Seq(MaterializedStrategy)
     val once = registered(bare)
     GraftSession.enable(bare)
     bare.experimental.extraOptimizations shouldBe Seq(SpatialFilterPushdown, PruneImpliedGuards)
+    bare.experimental.extraStrategies shouldBe Seq(MaterializedStrategy)
     registered(bare).zip(once).foreach { case (after, was) => after shouldBe theSameInstanceAs(was) }
   }
 
@@ -57,5 +60,20 @@ class GraftSessionSpec extends AnyFunSuite with SparkTestSession with Matchers {
     df.queryExecution.explainString(ExplainMode.fromString("formatted")) should
       include("LessThanOrEqual(extent.xmin,20.5)")
     df.select("id").collect().map(_.getLong(0)).toSet shouldBe (10L to 20L).toSet
+  }
+
+  test("an enabled session runs a barrier entry: sp_overlay reads its Materialized node, same rows") {
+    val bare = GraftSession.enable(BareSession(spark))
+    val df = SparkEntry.queries("sp_overlay")(bare, sfDir)
+    val rows = df.collect().toSeq
+    df.queryExecution.executedPlan.toString should include("Materialized [")
+    rows should not be empty
+    rows shouldBe SparkEntry.queries("sp_overlay")(spark, sfDir).collect().toSeq
+  }
+
+  test("graft replaces exactly two of Spark's built-in functions: st_asbinary and st_geomfromwkb") {
+    val builtin = BareSession(spark).sessionState.functionRegistry.listFunction()
+      .map(_.funcName.toLowerCase).toSet
+    names.map(_.toLowerCase).filter(builtin).toSet shouldBe Set("st_asbinary", "st_geomfromwkb")
   }
 }

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -16,6 +19,16 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.collect() // AQE finalizes the plan only on execution
     df.queryExecution.executedPlan.toString
+  }
+
+  /** The executed plan's nodes down to each barrier, not into what it
+    * computed: AQE's final plan and its query stages, the outer plan a
+    * string pin counted when a barrier printed as one `Scan ExistingRDD`.
+    */
+  private def outerNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => outerNodes(a.executedPlan)
+    case s: QueryStageExec => s +: outerNodes(s.plan)
+    case n => n +: n.children.flatMap(outerNodes)
   }
 
   test("q3/q5: every dimension join is a broadcast join, fact side never broadcast-built") {
@@ -95,12 +108,11 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestSession with Matchers {
     }
   }
 
-  // The three real-codec entries barrier their decoded rows before the
-  // final orderBy (the sort-sampler rule), which hides the pipeline
-  // behind an ExistingRDD in the ENTRY plan — so these pins certify
-  // the decode pipelines on the op composition directly, a STRICTER
-  // assertion (zero exchanges, not "≤ the orderBy's"): the codec work
-  // is entirely scan-side, narrow, shuffle-free.
+  // The three real-codec entries sort behind a barrier (Pins.sorted),
+  // and the entry plan adds the orderBy's exchange — so these pins
+  // certify the decode pipelines on the op composition directly, a
+  // STRICTER assertion (zero exchanges, not "≤ the orderBy's"): the
+  // codec work is entirely scan-side, narrow, shuffle-free.
   private def mmPipelinePlan(df: org.apache.spark.sql.DataFrame): String = {
     df.collect()
     df.queryExecution.executedPlan.toString
@@ -633,25 +645,28 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("tx_web_curate: the fused synthesis→extract→boilerplate→flags prefix is ONE corpus scan") {
-    val p = planOf("tx_web_curate")
-    val fin = p.split("== Initial Plan ==")(0) // AQE prints both plans
+    val df = SparkEntry.queries("tx_web_curate")(spark, sfDir)
+    df.collect()
+    val p = df.queryExecution.executedPlan
+    val fin = outerNodes(p) // AQE's final plan, down to the barrier
     withClue(s"tx_web_curate plan:\n$p") {
       // one data source: both quality flags evaluate over the SAME
       // cleaned text — the single-read claim of the composed pipeline
       // (a per-flag-branch spelling would re-scan per flag). Since r15
-      // the extraction prefix materializes once into a localCheckpoint
-      // barrier (so the keep-filter cannot push back below the fan-out
-      // and re-inline the chain serially — see webCurateChain), which
-      // the executed plan reads as ONE ExistingRDD scan; pre-barrier it
-      // was one FileScan. Either way: exactly one source, never two.
-      (fin.linesIterator.count(_.contains("FileScan")) +
-        fin.linesIterator.count(_.contains("Scan ExistingRDD"))) shouldBe 1
-      p.contains("CartesianProduct") shouldBe false
-      p.contains("BroadcastNestedLoopJoin") shouldBe false
+      // the extraction prefix materializes once into a barrier (so the
+      // keep-filter cannot push back below the fan-out and re-inline the
+      // chain serially — see webCurateChain), which the outer plan reads
+      // as ONE Materialized node; pre-barrier it was one FileScan. Either
+      // way: exactly one source, never two.
+      fin.count {
+        case _: FileSourceScanExec | _: graft.ops.MaterializedExec => true
+        case _ => false
+      } shouldBe 1
+      p.toString.contains("CartesianProduct") shouldBe false
+      p.toString.contains("BroadcastNestedLoopJoin") shouldBe false
       // bounded exchanges: dedup window + doc regroup + shard window +
       // final sort (AQE may add reads, never new exchanges)
-      fin.linesIterator.count(l =>
-        l.contains("Exchange") && !l.contains("Reused")) should be <= 5
+      fin.count(_.isInstanceOf[Exchange]) should be <= 5
     }
   }
 
@@ -743,6 +758,26 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestSession with Matchers {
       // the probe-join shape must not
       p.contains("exists(") shouldBe false
       p.contains("src3.example.com") shouldBe false
+    }
+  }
+
+  test("explain shows what each barrier computed: tx_blocklist, mm_decode, sp_overlay") {
+    def explained(name: String): String = {
+      val df = SparkEntry.queries(name)(spark, sfDir)
+      df.collect()
+      df.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+    }
+    // the lines from the barrier down: its own line, then its child's
+    def barrier(p: String): String = p.linesIterator.dropWhile(!_.contains("Materialized [")).mkString("\n")
+    for ((name, computed) <- Seq(
+        "tx_blocklist" -> Seq("FileScan", "BroadcastHashJoin"),
+        "mm_decode" -> Seq("FileScan", "MapPartitions"),
+        "sp_overlay" -> Seq("FileScan", "st_area(st_intersection("))) {
+      val p = explained(name)
+      withClue(s"$name plan:\n$p") {
+        p should not include "Scan ExistingRDD"
+        computed.foreach(op => barrier(p) should include(op))
+      }
     }
   }
 }

@@ -153,7 +153,7 @@ class AnnSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("computed knob defaults: formulas track corpus size; auto-knob runs return full result sets") {
-    // the FAISS-guideline curves (KnobSweep r8): nlist = 4√n clamped,
+    // the FAISS-guideline curves (SCALE_r08.md:118): nlist = 4√n clamped,
     // nprobe = nlist/16 floored, nBits sizes buckets to ~64
     Ann.defaultNlist(2000) shouldBe 179
     Ann.defaultNlist(200000) shouldBe 1789

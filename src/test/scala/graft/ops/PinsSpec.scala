@@ -69,7 +69,7 @@ class PinsSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
     val q = input.toDF().writeStream
       .foreachBatch { (b: DataFrame, _: Long) =>
-        seen.add(org.apache.spark.sql.GraftBridge.checkpointBacked(b)); ()
+        seen.add(Pins.reusable(b)); ()
       }
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("graft-pins-fb").toString)
@@ -79,5 +79,66 @@ class PinsSpec extends AnyFunSuite with SparkTestSession with Matchers {
       q.processAllAvailable()
     } finally q.stop()
     seen.toArray.toSeq shouldBe Seq(false)
+  }
+
+  test("a read after close fails with graft's error naming the barrier") {
+    val pins = new Pins
+    val x = pins(spark.range(20).toDF("a"))
+    val derived = x.filter(col("a") % 2 === 0)
+    derived.count() shouldBe 10L
+    pins.close()
+    val e = intercept[Exception](derived.collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    withClue(chain.map(_.toString).mkString("\n")) {
+      chain.exists(t => t.isInstanceOf[IllegalStateException] &&
+        t.getMessage.contains("graft barrier PinsSpec.scala:") &&
+        t.getMessage.contains("[a] was released by Pins.close()")) shouldBe true
+    }
+  }
+
+  test("the barrier is a leaf that shows what it computed") {
+    val x = Pins.once(spark.range(30).toDF("a").filter(col("a") > 3)
+      .select((col("a") * 2).as("b")))
+    val logical = x.queryExecution.optimizedPlan
+    logical shouldBe a[Materialized]
+    logical.children shouldBe empty
+    logical.toString should include("Materialized [b#")
+    logical.toString should include("Range (0, 30")
+    val physical = x.queryExecution.executedPlan.toString
+    physical should include("Materialized [b#")
+    physical should include("Range (0, 30")
+    // no RDD id or per-build counter in either string
+    logical.treeString.linesIterator.next() should fullyMatch regex
+      "Materialized \\[b#\\d+L\\], PinsSpec\\.scala:\\d+"
+    x.count() shouldBe 26L
+  }
+
+  test("two reads of one barrier share an exchange; two barriers never do") {
+    def counts(d: DataFrame) = d.groupBy("b").agg(count(lit(1)).as("n"))
+    def joined(l: DataFrame, r: DataFrame): String = {
+      val rc = counts(r).select(col("b").as("b2"), col("n").as("n2"))
+      val j = counts(l).hint("merge").join(rc, col("b") === col("b2"))
+      j.collect().length shouldBe 7 // AQE reuses exchanges as it runs
+      j.queryExecution.executedPlan.toString
+    }
+    val one = Pins.once(rddFrame(40))
+    joined(one, one) should include("ReusedExchange")
+    joined(Pins.once(rddFrame(40)), Pins.once(rddFrame(40))) should not include "ReusedExchange"
+  }
+
+  test("no localCheckpoint or unpersistCheckpoint outside the barrier's own file") {
+    def sources(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(sources)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val files = sources(new java.io.File("src/main/scala"))
+    files.map(_.getName) should contain("Pins.scala")
+    val offending = for {
+      f <- files if f.getName != "Pins.scala"
+      (line, i) <- scala.util.Using.resource(scala.io.Source.fromFile(f)(scala.io.Codec.UTF8))(
+        _.getLines().toList)
+        .zipWithIndex
+      if line.contains("localCheckpoint(") || line.contains("unpersistCheckpoint")
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    offending shouldBe empty
   }
 }
