@@ -18,8 +18,8 @@ object Dedup {
 
   /** Shared `maxBucket` regime encoding for the banded pair operators
     * ([[minhashLsh]], [[hammingPairs]], [[simhashNearDup]],
-    * [[graft.sources.MinhashIndex.probe]]): > 0 = explicit cap,
-    * [[BucketAuto]] (0, the default) = cap computed from the corpus
+    * [[graft.sources.MinhashIndex.Maintainer.probe]]): > 0 = explicit
+    * cap, [[BucketAuto]] (0, the default) = cap computed from the corpus
     * ([[defaultMaxBucket]] / [[defaultMaxBucketFixedWidth]]),
     * [[BucketUnlimited]] (−1, any negative) = no cap — the exact-recall
     * regime every CORRECTNESS oracle pins. MIGRATION (r10): before r10,

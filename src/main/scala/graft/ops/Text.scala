@@ -1672,10 +1672,8 @@ object Text {
     def numBits: Long = bloomBytes.length.toLong * 8L
 
     /** Fold a batch's lines into the history. The Bloom side is exact
-      * algebra: `bloom_agg` over the batch at THIS state's geometry,
-      * byte-OR'd into the current bits (the aggregate's own merge op,
-      * so filter(history ∪ batch) = filter(history) | filter(batch)
-      * bit-for-bit). The digest side swaps generations:
+      * algebra ([[bloomWith]] at THIS state's geometry). The digest
+      * side swaps generations:
       * union → distinct → localCheckpoint, then the PREVIOUS
       * generation's blocks release — a long-lived stream pins one
       * digest table, not one per trigger. Cost is the batch's own
@@ -1685,25 +1683,9 @@ object Text {
       */
     def append(batch: DataFrame, textCol: String,
                delim: String = "\n"): Unit = {
-      import graft.functions.FunctionDefs.callAgg
-      val q = java.util.regex.Pattern.quote(delim)
       val batchPins = new Pins
-      val batchLines = batchPins(batch.filter(col(textCol).isNotNull)
-        .select(explode(split(col(textCol), q)).as("__l"))
-        .filter(trim(col("__l")) =!= ""))
-      val bf = batchLines
-        .agg(callAgg("bloom_agg", xxhash64(col("__l")),
-          lit(numBits), lit(numHashes)).as("bf"))
-        .head().getAs[Array[Byte]]("bf")
-      require(bf.length == bloomBytes.length,
-        s"LineHistory.append: filter geometry drift (${bf.length} vs ${bloomBytes.length} bytes)")
-      // new array + reference swap, never in-place: an in-flight dedup
-      // plan holds the previous array as a literal
-      val merged = new Array[Byte](bloomBytes.length)
-      var i = 0
-      while (i < merged.length) {
-        merged(i) = (bloomBytes(i) | bf(i)).toByte; i += 1
-      }
+      val batchLines = batchPins(nonBlankLines(batch, textCol, delim))
+      val merged = bloomWith(bloomBytes, batchLines, numHashes)
       val nextPins = new Pins
       val next = nextPins(digestTable
         .unionByName(batchLines.select(md5(col("__l")).as("__hh"))
@@ -1718,6 +1700,43 @@ object Text {
     }
 
     def release(): Unit = digestPins.close()
+  }
+
+  /** The line family's state algebra — one implementation shared by
+    * [[LineHistory]] and its persisted twin [[graft.sources.LineIndex]].
+    * The non-blank lines of `df(textCol)` split on `delim`, as `__l`:
+    * the unit both the Bloom filter and the digest table hold (blank
+    * lines are structure, never history).
+    */
+  private[graft] def nonBlankLines(df: DataFrame, textCol: String,
+                                   delim: String): DataFrame =
+    df.filter(col(textCol).isNotNull)
+      .select(explode(split(col(textCol),
+        java.util.regex.Pattern.quote(delim))).as("__l"))
+      .filter(trim(col("__l")) =!= "")
+
+  /** `bloom_agg` over the lines' xxhash64 at the given geometry. */
+  private[graft] def lineBloom(lines: DataFrame, numBits: Long,
+                               numHashes: Int): Array[Byte] = {
+    import graft.functions.FunctionDefs.callAgg
+    lines.agg(callAgg("bloom_agg", xxhash64(col("__l")),
+        lit(numBits), lit(numHashes)).as("bf"))
+      .head().getAs[Array[Byte]]("bf")
+  }
+
+  /** `bloom` with `lines` folded in: [[lineBloom]] at `bloom`'s own
+    * geometry (effective m = 8 · buffer bytes, the `bloom_agg`
+    * contract), byte-OR'd — the aggregate's own merge op, so
+    * filter(history ∪ lines) = filter(history) | filter(lines)
+    * bit-for-bit. Returns a NEW array, never merged in place: an
+    * in-flight plan holds the previous one as a literal.
+    */
+  private[graft] def bloomWith(bloom: Array[Byte], lines: DataFrame,
+                               numHashes: Int): Array[Byte] = {
+    val bf = lineBloom(lines, bloom.length.toLong * 8L, numHashes)
+    require(bf.length == bloom.length,
+      s"line bloom: filter geometry drift (${bf.length} vs ${bloom.length} bytes)")
+    Array.tabulate(bloom.length)(i => (bloom(i) | bf(i)).toByte)
   }
 
   /** Assemble a [[LineHistory]] from externally-persisted state — the
@@ -1743,16 +1762,9 @@ object Text {
                          delim: String = "\n",
                          numBits: Long = 1L << 23,
                          numHashes: Int = 5): LineHistory = {
-    import graft.functions.FunctionDefs.callAgg
-    val q = java.util.regex.Pattern.quote(delim)
     val linePins = new Pins
-    val histLines = linePins(history.filter(col(textCol).isNotNull)
-      .select(explode(split(col(textCol), q)).as("__l"))
-      .filter(trim(col("__l")) =!= ""))
-    val bloom = histLines
-      .agg(callAgg("bloom_agg", xxhash64(col("__l")),
-        lit(numBits), lit(numHashes)).as("bf"))
-      .head().getAs[Array[Byte]]("bf")
+    val histLines = linePins(nonBlankLines(history, textCol, delim))
+    val bloom = lineBloom(histLines, numBits, numHashes)
     val digestPins = new Pins
     val digests = digestPins(histLines.select(md5(col("__l")).as("__hh")).distinct()
       .withColumn("__seen", lit(1)))

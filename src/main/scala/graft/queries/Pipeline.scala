@@ -1969,17 +1969,23 @@ object Pipeline {
 
   // Persisted MinHash band-posting index, built ONCE per (JVM, sf dir)
   // over the deterministic "history" three-quarters of the corpus —
-  // the write-once-probe-daily lifecycle shape (the jsonlReady pattern).
-  private val mhixReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // the write-once-probe-daily lifecycle shape (the jsonlReady
+  // pattern). The cache holds the index's opened handle: params + both
+  // manifests read once and served from memory on every probe (the
+  // MinhashIndex.Maintainer scaladoc; SCALE_r11.md:42 measures the
+  // floor it removes). The index FILES are still read per probe; only
+  // file-count-sized metadata is cached.
+  private val mhixReady =
+    new java.util.concurrent.ConcurrentHashMap[String, graft.sources.MinhashIndex.Maintainer]()
 
-  private def minhashIndexPath(s: SparkSession, dir: String): String =
+  private def minhashIndex(s: SparkSession, dir: String): graft.sources.MinhashIndex.Maintainer =
     mhixReady.computeIfAbsent(dir, { d =>
       val p = java.nio.file.Files.createTempDirectory("graft-mhix").toString + "/ix"
       graft.sources.MinhashIndex.build(
         Tables.documents(s, d).filter(col("doc_id") % 4 =!= 0),
         "doc_id", "text", p, k = 3, numPerm = 64, bands = 16, seed = 42,
         nPostingFiles = 64, nDocFiles = 16)
-      p
+      new graft.sources.MinhashIndex.Maintainer(s, p)
     })
 
   /** Incremental near-dup discovery over the persisted band-posting
@@ -1990,21 +1996,8 @@ object Pipeline {
     * [[ddLshIndexCheck]] is the hash-green twin proving the probe
     * equals the full re-band AND misses none of the exact ground truth.
     */
-  // One Maintainer per (JVM, index path): params + both manifests read
-  // once and served from memory on every probe — the handle the probe
-  // loop is DOCUMENTED to use (MinhashIndex.Maintainer scaladoc;
-  // SCALE_r11.md:42 measures the floor it removes). The index
-  // FILES are still read per probe; only file-count-sized metadata is
-  // cached, exactly like the mhixReady build cache above it.
-  private val mhixMaintainers =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.sources.MinhashIndex.Maintainer]()
-
-  private def mhixMaintainer(s: SparkSession, path: String): graft.sources.MinhashIndex.Maintainer =
-    mhixMaintainers.computeIfAbsent(path,
-      p => new graft.sources.MinhashIndex.Maintainer(s, p))
-
   def ddLshIndex(s: SparkSession, dir: String): DataFrame =
-    mhixMaintainer(s, minhashIndexPath(s, dir))
+    minhashIndex(s, dir)
       .probe(Tables.documents(s, dir).filter(col("doc_id") % 4 === 0),
         "doc_id", "text", threshold = 0.8, maxBucket = -1)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
@@ -2022,7 +2015,7 @@ object Pipeline {
   def ddLshIndexCheck(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val touches = col("id_a") % 4 === 0 || col("id_b") % 4 === 0
-    val probed = mhixMaintainer(s, minhashIndexPath(s, dir))
+    val probed = minhashIndex(s, dir)
       .probe(docs.filter(col("doc_id") % 4 === 0), "doc_id", "text",
         threshold = 0.8, maxBucket = -1)
       .select("id_a", "id_b").transform(Pins.once(_))
@@ -2044,9 +2037,10 @@ object Pipeline {
   // the APPEND half of the lifecycle: built over half the corpus, with
   // the %4==1 generation probed-then-appended — so the gate's probe of
   // %4==0 must see appended docs as history
-  private val mhixIncReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val mhixIncReady =
+    new java.util.concurrent.ConcurrentHashMap[String, graft.sources.MinhashIndex.Maintainer]()
 
-  private def minhashIndexIncPath(s: SparkSession, dir: String): String =
+  private def minhashIndexInc(s: SparkSession, dir: String): graft.sources.MinhashIndex.Maintainer =
     mhixIncReady.computeIfAbsent(dir, { d =>
       val p = java.nio.file.Files.createTempDirectory("graft-mhixinc").toString + "/ix"
       val docs = Tables.documents(s, d)
@@ -2054,15 +2048,16 @@ object Pipeline {
         docs.filter(col("doc_id") % 4 === 2 || col("doc_id") % 4 === 3),
         "doc_id", "text", p, k = 3, numPerm = 64, bands = 16, seed = 42,
         nPostingFiles = 64, nDocFiles = 16)
+      val m = new graft.sources.MinhashIndex.Maintainer(s, p)
       val day1 = docs.filter(col("doc_id") % 4 === 1)
-      graft.sources.MinhashIndex.probe(s, p, day1, "doc_id", "text",
+      m.probe(day1, "doc_id", "text",
         threshold = 0.8, maxBucket = -1).count() // the daily cycle's read half
-      graft.sources.MinhashIndex.append(s, p, day1, "doc_id", "text")
-      p
+      m.append(day1, "doc_id", "text")
+      m
     })
 
   /** [[ddLshIndexCheck]]'s contract over an APPENDED index
-    * ([[graft.sources.MinhashIndex.append]]): history = half the
+    * ([[graft.sources.MinhashIndex.Maintainer.append]]): history = half the
     * corpus at build + a probed-then-appended second generation; the
     * gate probes the third. Same three-way check — exact ground truth
     * (SQL-replayed), zero missed, zero diff vs the full re-band — so a
@@ -2072,7 +2067,7 @@ object Pipeline {
   def ddLshIndexInc(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
     val touches = col("id_a") % 4 === 0 || col("id_b") % 4 === 0
-    val probed = mhixMaintainer(s, minhashIndexIncPath(s, dir))
+    val probed = minhashIndexInc(s, dir)
       .probe(docs.filter(col("doc_id") % 4 === 0), "doc_id", "text",
         threshold = 0.8, maxBucket = -1)
       .select("id_a", "id_b").transform(Pins.once(_))
@@ -2102,16 +2097,17 @@ object Pipeline {
     "((doc_id div 4) * 2654435761 % 1099511627776) * 4 + " +
       "(CASE WHEN doc_id % 4 = 3 THEN CAST(0 AS BIGINT) ELSE doc_id % 4 END)")
 
-  private val hmixReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val hmixReady =
+    new java.util.concurrent.ConcurrentHashMap[String, graft.sources.HammingIndex.Maintainer]()
 
-  private def hammingIndexPath(s: SparkSession, dir: String): String =
+  private def hammingIndex(s: SparkSession, dir: String): graft.sources.HammingIndex.Maintainer =
     hmixReady.computeIfAbsent(dir, { d =>
       val p = java.nio.file.Files.createTempDirectory("graft-hmix").toString + "/ix"
       graft.sources.HammingIndex.build(
         Tables.documents(s, d).filter(col("doc_id") % 7 =!= 0)
           .select(col("doc_id"), plantedHash.as("sig")),
         "doc_id", "sig", p, pieces = 8, nPostingFiles = 32, nDocFiles = 16)
-      p
+      new graft.sources.HammingIndex.Maintainer(s, p)
     })
 
   /** Incremental Hamming near-dup discovery over the persisted
@@ -2123,8 +2119,8 @@ object Pipeline {
     * pieces makes the unlimited regime EXACT, not an S-curve).
     */
   def ddHammingIndex(s: SparkSession, dir: String): DataFrame =
-    graft.sources.HammingIndex.probe(s, hammingIndexPath(s, dir),
-        Tables.documents(s, dir).filter(col("doc_id") % 7 === 0)
+    hammingIndex(s, dir)
+      .probe(Tables.documents(s, dir).filter(col("doc_id") % 7 === 0)
           .select(col("doc_id"), plantedHash.as("sig")),
         "doc_id", "sig", maxDist = 2, maxBucket = -1)
       .orderBy("id_a", "id_b")
@@ -2133,9 +2129,10 @@ object Pipeline {
   // generation probed-then-appended, the gate probes %7==0 — so a
   // manifest-extension bug (a day-1 doc invisible to day-2 probes)
   // fails the hash against the same exact SQL replay
-  private val hmixIncReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val hmixIncReady =
+    new java.util.concurrent.ConcurrentHashMap[String, graft.sources.HammingIndex.Maintainer]()
 
-  private def hammingIndexIncPath(s: SparkSession, dir: String): String =
+  private def hammingIndexInc(s: SparkSession, dir: String): graft.sources.HammingIndex.Maintainer =
     hmixIncReady.computeIfAbsent(dir, { d =>
       val p = java.nio.file.Files.createTempDirectory("graft-hmixinc").toString + "/ix"
       val docs = Tables.documents(s, d)
@@ -2143,11 +2140,12 @@ object Pipeline {
       graft.sources.HammingIndex.build(
         docs.filter(col("doc_id") % 7 =!= 0 && col("doc_id") % 7 =!= 1),
         "doc_id", "sig", p, pieces = 8, nPostingFiles = 32, nDocFiles = 16)
+      val m = new graft.sources.HammingIndex.Maintainer(s, p)
       val day1 = docs.filter(col("doc_id") % 7 === 1)
-      graft.sources.HammingIndex.probe(s, p, day1, "doc_id", "sig",
+      m.probe(day1, "doc_id", "sig",
         maxDist = 2, maxBucket = -1).count() // the daily cycle's read half
-      graft.sources.HammingIndex.append(s, p, day1, "doc_id", "sig")
-      p
+      m.append(day1, "doc_id", "sig")
+      m
     })
 
   /** [[ddHammingIndex]]'s contract through an APPENDED generation —
@@ -2155,8 +2153,8 @@ object Pipeline {
     * appended day-1 docs as history.
     */
   def ddHammingIndexInc(s: SparkSession, dir: String): DataFrame =
-    graft.sources.HammingIndex.probe(s, hammingIndexIncPath(s, dir),
-        Tables.documents(s, dir).filter(col("doc_id") % 7 === 0)
+    hammingIndexInc(s, dir)
+      .probe(Tables.documents(s, dir).filter(col("doc_id") % 7 === 0)
           .select(col("doc_id"), plantedHash.as("sig")),
         "doc_id", "sig", maxDist = 2, maxBucket = -1)
       .orderBy("id_a", "id_b")
@@ -2414,16 +2412,18 @@ object Pipeline {
 
   // Persisted line-dedup history index ([[graft.sources.LineIndex]]),
   // built ONCE per (JVM, sf dir) over the history two-thirds (doc_id %
-  // 3 ≠ 0) of the lined corpus — the probe-only entry reuses it (probe
-  // never mutates; the jsonlReady/mhixReady pattern).
-  private val lineIxReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // 3 ≠ 0) of the lined corpus and cached as its opened handle — the
+  // probe-only entry reuses it (probe never mutates; the
+  // jsonlReady/mhixReady pattern).
+  private val lineIxReady =
+    new java.util.concurrent.ConcurrentHashMap[String, graft.sources.LineIndex.Maintainer]()
 
-  private def lineIndexPath(s: SparkSession, dir: String): String =
+  private def lineIndex(s: SparkSession, dir: String): graft.sources.LineIndex.Maintainer =
     lineIxReady.computeIfAbsent(dir, { d =>
       val p = java.nio.file.Files.createTempDirectory("graft-lineix").toString + "/ix"
       graft.sources.LineIndex.build(
         linedDocs(s, d).filter(col("doc_id") % 3 =!= 0), "text", p)
-      p
+      new graft.sources.LineIndex.Maintainer(s, p)
     })
 
   /** Disk-backed incremental line dedup: the day's batch (doc_id ≡ 0
@@ -2432,23 +2432,14 @@ object Pipeline {
     * factored onto disk — so the oracle is the identical string-keyed
     * replay, making the probe's pruning + semi-join path hash-checked.
     */
-  // Maintainer per (JVM, index path) — the mhixMaintainers rationale:
-  // cached file-count-sized metadata, per-probe file reads unchanged.
-  private val lineIxMaintainers =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.sources.LineIndex.Maintainer]()
-
-  private def lineIxMaintainer(s: SparkSession, path: String): graft.sources.LineIndex.Maintainer =
-    lineIxMaintainers.computeIfAbsent(path,
-      p => new graft.sources.LineIndex.Maintainer(s, p))
-
   def ddLineIndex(s: SparkSession, dir: String): DataFrame =
-    lineIxMaintainer(s, lineIndexPath(s, dir))
+    lineIndex(s, dir)
       .probe(linedDocs(s, dir).filter(col("doc_id") % 2 === 0), "doc_id", "text")
       .orderBy("doc_id")
 
   /** Full persisted lifecycle probe→append→probe: batch B1 (doc_id ≡ 0
     * mod 6) probes and its KEPT lines fold back in
-    * ([[graft.sources.LineIndex.append]]); batch B2 (≡ 3 mod 6) then
+    * ([[graft.sources.LineIndex.Maintainer.append]]); batch B2 (≡ 3 mod 6) then
     * probes against history ∪ B1 — a line first seen in B1 drops from
     * B2 (H ∪ kept(B1) has the same line set as H ∪ B1: every removed
     * B1 line was either in H already or kept at its first B1

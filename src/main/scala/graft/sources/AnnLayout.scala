@@ -134,7 +134,7 @@ object AnnLayout {
           zip_with(col("__qvn"), element_at(cent, col("list") + 1), (x, y) => x * y),
           lit(0.0), (a, x) => a + x))
 
-    val vectors = withoutTombstones(s, path, s.read.parquet(s"$path/vectors"))
+    val vectors = Tombstones.without(s, path, s.read.parquet(s"$path/vectors"))
     val shortlist = vectors.select("id", "codes", "list")
       .join(broadcast(probes), "list")
       .filter(col("id") =!= col("qid"))
@@ -193,12 +193,9 @@ object AnnLayout {
   /** Logical deletes — the lifecycle op [[appendStream]]'s other half:
     * real served corpora REMOVE vectors (takedowns, dedup survivors,
     * retention). A rewrite of the hive-partitioned layout per delete
-    * would be a full-corpus write, so deletes are TOMBSTONES: the ids
-    * land in `path/tombstones` (append-mode parquet — id-only,
-    * deletion-volume-sized metadata, tiny next to the corpus) and every
-    * query path ([[topK]], [[pqTopK]]) filters them with one broadcast
-    * anti-join before ranking — the standard lakehouse merge-on-read
-    * delete-vector trade. [[compactCells]] is merge-on-write: it drops
+    * would be a full-corpus write, so deletes are [[Tombstones]] and
+    * every query path ([[topK]], [[pqTopK]]) filters them before
+    * ranking. [[compactCells]] is merge-on-write: it drops
     * tombstoned rows physically and the compacted layout starts with an
     * empty tombstone set. Deleting an id wins over any append of the
     * same id made BEFORE the delete; appending it again afterwards
@@ -207,18 +204,7 @@ object AnnLayout {
     */
   def delete(s: SparkSession, path: String, ids: DataFrame,
              idCol: String = "id"): Unit =
-    ids.select(col(idCol).as("id")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$path/tombstones")
-
-  private def withoutTombstones(s: SparkSession, path: String,
-                                vectors: DataFrame): DataFrame =
-    // existence goes through the Hadoop FS of the path (java.io.File
-    // cannot see file:/hdfs:/s3a: URIs and would silently serve
-    // deleted vectors there)
-    if (!FsUtil.exists(s, s"$path/tombstones")) vectors
-    else vectors.join(
-      broadcast(s.read.parquet(s"$path/tombstones").select("id").distinct()),
-      Seq("id"), "left_anti")
+    Tombstones.add(path, ids, idCol)
 
   /** Cell-preserving compaction — the maintenance op that closes the
     * [[appendStream]] lifecycle: every micro-batch append drops small
@@ -237,8 +223,8 @@ object AnnLayout {
     */
   def compactCells(s: SparkSession, src: String, dest: String,
                    targetRows: Long): Unit = {
-    FsUtil.delete(s, s"$dest/tombstones")
-    val df = withoutTombstones(s, src, s.read.parquet(s"$src/vectors"))
+    Tombstones.clear(s, dest)
+    val df = Tombstones.without(s, src, s.read.parquet(s"$src/vectors"))
     val n = df.count()
     val parts = math.max(1L, (n + targetRows - 1) / targetRows).toInt
     df.repartitionByRange(parts, col("list"), col("id"))
@@ -266,7 +252,7 @@ object AnnLayout {
     val probes = queries
       .select(col(qidCol).as("qid"), Vectors.toDouble(col(qvecCol)).as("__qv"))
       .withColumn("list", explode(call("ivf_probes", col("__qv"), cent, lit(np))))
-    val vectors = withoutTombstones(s, path, s.read.parquet(s"$path/vectors"))
+    val vectors = Tombstones.without(s, path, s.read.parquet(s"$path/vectors"))
     Ann.rankTopK(
       vectors.join(broadcast(probes), "list")
         .filter(col("id") =!= col("qid"))

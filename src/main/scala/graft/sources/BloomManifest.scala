@@ -100,11 +100,7 @@ object BloomManifest {
     * the exact IN filter.
     */
   def lookupRead(s: SparkSession, path: String, lookupCol: String,
-                 probes: Seq[String]): DataFrame = {
-    val files = candidateFiles(s, path, probes)
-    val base =
-      if (files.isEmpty) s.read.parquet(path).filter(lit(false))
-      else s.read.parquet(files.toIndexedSeq: _*)
-    base.filter(col(lookupCol).isin(probes.map(lit): _*))
-  }
+                 probes: Seq[String]): DataFrame =
+    StatsManifest.readFiles(s, path, candidateFiles(s, path, probes).toIndexedSeq)
+      .filter(col(lookupCol).isin(probes.map(lit): _*))
 }

@@ -51,11 +51,8 @@ object InvertedIndex {
     */
   def docsWithAll(s: SparkSession, path: String, terms: Seq[String]): DataFrame = {
     require(terms.nonEmpty, "docsWithAll needs at least one term")
-    val files = candidateFiles(s, path, terms)
-    val base =
-      if (files.isEmpty) s.read.parquet(path).filter(lit(false))
-      else s.read.parquet(files.toIndexedSeq: _*)
-    base.filter(col("term").isin(terms.map(lit): _*))
+    StatsManifest.readFiles(s, path, candidateFiles(s, path, terms).toIndexedSeq)
+      .filter(col("term").isin(terms.map(lit): _*))
       .groupBy("doc_id")
       .agg(count_distinct(col("term")).as("n_terms"))
       .filter(col("n_terms") === terms.size)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.ops.Pins
+import graft.ops.{Pins, Text}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -27,7 +27,7 @@ import org.apache.spark.sql.functions._
   *    `bloom_agg` contract, so build and append can never disagree);
   *  - `params/` — (num_hashes, n_lines), committed LAST.
   *
-  * `probe` = [[graft.ops.Text.dedupLinesIncremental]] against
+  * [[Maintainer.probe]] = [[graft.ops.Text.dedupLinesIncremental]] against
   * disk-backed state: the batch's Bloom-positive "maybe" lines drive
   * DRIVER-SIDE file pruning ([[StatsManifest.pruneLocal]], zero
   * metadata jobs — the manifest rows and maybe keys are both
@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   * passes over the batch's own lines + the pruned digest files; the
   * history corpus is never re-read.
   *
-  * `append` folds the PROBE OUTPUT's kept lines back in (the
+  * [[Maintainer.append]] folds the PROBE OUTPUT's kept lines back in (the
   * [[graft.streaming.NearDupStream]] probe→dedup→append lifecycle):
   * kept `text_dedup` lines are novel-vs-history and within-batch
   * distinct by construction, so the append is O(batch) — no anti-join
@@ -48,25 +48,17 @@ import org.apache.spark.sql.functions._
   * between steps can only UNDER-dedup the next batch (a Bloom miss on
   * an already-committed digest), never produce a wrong removal.
   * Single-writer, idempotent replay — the [[VersionedDir]] contract.
+  *
+  * `build` and `compact` live on this object; probe and append exist
+  * only on the [[Maintainer]] handle. The line algebra (non-blank line
+  * explode, `bloom_agg`, byte-OR merge) is [[graft.ops.Text]]'s, shared
+  * with the in-memory [[graft.ops.Text.LineHistory]].
   */
 object LineIndex {
-
-  private def linesOf(df: DataFrame, textCol: String, delim: String): DataFrame =
-    df.filter(col(textCol).isNotNull)
-      .select(explode(split(col(textCol),
-        java.util.regex.Pattern.quote(delim))).as("__l"))
-      .filter(trim(col("__l")) =!= "")
 
   private def digestsOf(lines: DataFrame): DataFrame =
     lines.select(xxhash64(col("__l")).as("xx"), md5(col("__l")).as("hh"))
       .distinct()
-
-  private def bloomOf(lines: DataFrame, numBits: Long, numHashes: Int): Array[Byte] = {
-    import graft.functions.FunctionDefs.callAgg
-    lines.agg(callAgg("bloom_agg", xxhash64(col("__l")),
-      lit(numBits), lit(numHashes)).as("bf"))
-      .head().getAs[Array[Byte]]("bf")
-  }
 
   private def writeBloom(s: SparkSession, path: String, bf: Array[Byte]): Unit = {
     import s.implicits._
@@ -96,7 +88,7 @@ object LineIndex {
             numHashes: Int = 5, nFiles: Int = 0): Unit = {
     val s = history.sparkSession
     val linePins = new Pins
-    val lines = linePins(linesOf(history, textCol, delim))
+    val lines = linePins(Text.nonBlankLines(history, textCol, delim))
     // nFiles <= 0 derives the layout width from the data (guide-§6 file
     // sizing): ~256k digest rows (~10 MB) per range file, floored at 8
     // for pruning granularity, capped at 512 per build. A fixed 64 was
@@ -105,7 +97,7 @@ object LineIndex {
     val nf = if (nFiles > 0) nFiles
       else math.max(8L, math.min(512L, lines.count() / 262144L + 1L)).toInt
     StatsManifest.write(digestsOf(lines), s"$path/digests", "xx", nf)
-    val bf = bloomOf(lines, numBits, numHashes)
+    val bf = Text.lineBloom(lines, numBits, numHashes)
     // n_lines = Σ manifest n_rows — the stats pass already counted the
     // distinct digests; re-reading the whole layout for a count was a
     // second full scan of what was just written
@@ -117,134 +109,14 @@ object LineIndex {
     linePins.close()
   }
 
-  /** [[graft.ops.Text.dedupLinesIncremental]] output contract for the
-    * batch docs: (idCol, n_lines, n_removed_history, n_removed_batch,
-    * text_dedup). See the object doc for the pruning shape.
-    *
-    * `maxCollect` guards the driver: the collect-and-prune fast path
-    * assumes maybes ≪ batch (the mostly-novel crawl regime). A
-    * DUP-HEAVY batch — re-ingesting yesterday's crawl, or the ScaleUp
-    * replication artifact (SCALE_r13: a 100×-replicated corpus makes
-    * EVERY batch line a history hit) — would collect the whole batch's
-    * line set to the driver for pruning that can't prune anyway
-    * (uniform digests hit every file once maybes ≳ file count), so
-    * past the threshold the probe switches to one distributed pass:
-    * full digest scan ⊳ semi-join against the maybe frame ⊳ distinct
-    * (maybes-bounded, keeping the duplicate-row immunity) — no driver
-    * collect at any batch size.
-    *
-    * The dup-heavy path's maybes-bounded `present` frame is a
-    * checkpoint the result reads lazily; it goes to `pins`, which the
-    * caller owns (the [[MinhashIndex.probe]] contract). The fast and
-    * empty paths pin nothing.
-    */
-  def probe(s: SparkSession, path: String, batch: DataFrame,
-            idCol: String, textCol: String, delim: String = "\n",
-            maxCollect: Int = 200000, pins: Pins = new Pins): DataFrame =
-    probeCore(s, path, batch, idCol, textCol, delim, maxCollect,
-      readParams(s, path).getInt(0), readBloom(s, path),
-      StatsManifest.manifest(s, s"$path/digests").collect().toIndexedSeq, pins)
-
-  private def probeCore(s: SparkSession, path: String, batch: DataFrame,
-                        idCol: String, textCol: String, delim: String,
-                        maxCollect: Int, numHashes: Int, bloom: Array[Byte],
-                        mrows: Seq[Row], pins: Pins): DataFrame = {
-    import graft.functions.FunctionDefs.call
-    // the maybe minority: distinct bloom-positive batch lines,
-    // materialized once (it feeds the count, then one of two paths)
-    val maybePins = new Pins
-    val maybesDf = maybePins(linesOf(batch, textCol, delim)
-      .filter(call("bloom_contains", lit(bloom), xxhash64(col("__l")),
-        lit(numHashes)))
-      .select(xxhash64(col("__l")).as("xx"), md5(col("__l")).as("__hh"))
-      .distinct())
-    // ONE limit-collect replaces the former count()-then-collect() pair
-    // (two jobs per probe): <= maxCollect rows back means we hold the
-    // COMPLETE maybe set (limit returned everything there was) and the
-    // fast path proceeds with it; maxCollect+1 rows means over-cap —
-    // switch to the distributed path without ever collecting the rest.
-    // The collect job also materializes the checkpoint blocks the
-    // distributed path reads.
-    val sample = maybesDf.limit(maxCollect + 1).collect()
-    val empty = s.read.parquet(s"$path/digests").filter(lit(false))
-      .select(col("hh").as("__hh"))
-    val present =
-      if (sample.isEmpty) {
-        maybePins.close()
-        empty
-      } else if (sample.length <= maxCollect) {
-        // fast path: driver-side file pruning, zero metadata jobs
-        val maybes = sample
-        maybePins.close()
-        val files = StatsManifest.pruneLocal(mrows, maybes.map(_.getLong(0)))
-        if (files.isEmpty) empty
-        else {
-          import s.implicits._
-          val keys = maybes.map(_.getString(1)).toSeq.toDF("__hh")
-          // semi + distinct: ≤ one row per maybe reaches the membership
-          // join, whatever duplicate rows replayed appends left behind
-          s.read.parquet(files.toIndexedSeq: _*).select(col("hh").as("__hh"))
-            .join(broadcast(keys), Seq("__hh"), "left_semi")
-            .distinct()
-        }
-      } else {
-        // dup-heavy path: distributed end to end; materialize the
-        // (maybes-bounded) present set so the checkpointed maybe frame
-        // releases before the main dedup job — the present checkpoint
-        // itself goes to the caller's pins
-        val p = pins(s.read.parquet(s"$path/digests").select(col("hh").as("__hh"))
-          .join(maybesDf.select("__hh"), Seq("__hh"), "left_semi")
-          .distinct())
-        maybePins.close()
-        p
-      }
-    val state = graft.ops.Text.lineHistoryFrom(
-      bloom, present.withColumn("__seen", lit(1)), numHashes)
-    graft.ops.Text.dedupLinesIncremental(state, batch, idCol, textCol, delim)
-  }
-
-  /** Fold a probed batch's KEPT output back in — pass the probe result
-    * (or any frame whose `textCol` lines are known-novel), O(batch).
-    */
-  def append(s: SparkSession, path: String, kept: DataFrame,
-             textCol: String, delim: String = "\n", nFiles: Int = 8): Unit = {
-    val p = readParams(s, path)
-    appendCore(s, path, kept, textCol, delim, nFiles,
-      p.getInt(0), readBloom(s, path), p.getLong(1))
-    ()
-  }
-
-  /** Shared append body: writes digests → bloom → params and returns
-    * (fresh manifest rows, merged bloom, new n_lines) so a cached
-    * handle can extend its in-memory state without re-reading.
-    */
-  private def appendCore(s: SparkSession, path: String, kept: DataFrame,
-                         textCol: String, delim: String, nFiles: Int,
-                         numHashes: Int, old: Array[Byte], nLines: Long)
-      : (Seq[Row], Array[Byte], Long) = {
-    val linePins = new Pins
-    val lines = linePins(linesOf(kept, textCol, delim))
-    val fresh = StatsManifest.append(digestsOf(lines), s"$path/digests", "xx", nFiles)
-    val bf = bloomOf(lines, old.length.toLong * 8L, numHashes)
-    require(bf.length == old.length,
-      s"LineIndex.append: filter geometry drift (${bf.length} vs ${old.length} bytes)")
-    val merged = new Array[Byte](old.length)
-    var i = 0
-    while (i < merged.length) { merged(i) = (old(i) | bf(i)).toByte; i += 1 }
-    val n = nLines + fresh.map(_.getAs[Long]("n_rows")).sum
-    writeBloom(s, path, merged)
-    writeParams(s, path, numHashes, n)
-    linePins.close()
-    (fresh, merged, n)
-  }
-
   /** Re-cluster the digest layout — the lakehouse OPTIMIZE step that
     * completes the lifecycle: appends land delta files whose xx ranges
     * overlap resident ones (pruning degrades by the appended file
     * count, the [[StatsManifest.append]] trade) and replayed appends
     * leave duplicate rows (harmless to probes, bytes on disk). Compact
-    * reads the current table once, dropDuplicates, and re-writes one
-    * range-clustered generation of `nFiles` — restoring both the
+    * reads the committed table once (the manifest's files — never rows
+    * a crashed append left unreferenced), dropDuplicates, and re-writes
+    * one range-clustered generation of `nFiles` — restoring both the
     * pruning resolution and the minimal byte size; params re-commit
     * with the exact deduplicated count (which can only shrink). Bloom
     * bits are untouched: the filter is a superset by construction and
@@ -256,22 +128,20 @@ object LineIndex {
     val numHashes = readParams(s, path).getInt(0)
     val cleanPins = new Pins
     // the write overwrites its own input dir
-    val clean = cleanPins(s.read.parquet(s"$path/digests").dropDuplicates("hh"))
+    val clean = cleanPins(
+      StatsManifest.committed(s, s"$path/digests").dropDuplicates("hh"))
     StatsManifest.write(clean, s"$path/digests", "xx", nFiles)
     val n = s.read.parquet(s"$path/digests").count()
     writeParams(s, path, numHashes, n)
     cleanPins.close()
   }
 
-  /** Amortizing handle for repeated probe/append cycles against ONE
-    * index — the streaming-maintenance shape ([[MinhashIndex.Maintainer]]'s
-    * contract, applied to the line family): params, bloom bits and the
-    * digest manifest rows are read once at construction and served from
-    * memory on every probe (file pruning stays pure driver Scala), and
-    * each append extends them in place from its own delta (fresh
+  /** The index's one probe/append path — [[MinhashIndex.Maintainer]]'s
+    * contract, applied to the line family: params, bloom bits and the
+    * digest manifest rows are read once at construction and served
+    * from memory on every probe (file pruning stays pure driver Scala),
+    * and each append extends them in place from its own delta (fresh
     * manifest rows + the byte-OR'd bloom — exact algebra, no re-read).
-    * Cuts the per-probe fixed floor by the three metadata jobs
-    * (params, bloom, manifest) a cold [[probe]] pays.
     *
     * Single-writer contract, sharpened as for the other maintainers:
     * the cache assumes THIS handle performs every append — an external
@@ -279,31 +149,106 @@ object LineIndex {
     * new bloom bits, silently under-deduping until reconstruction).
     */
   final class Maintainer(s: SparkSession, path: String) {
-    private val numHashes = readParams(s, path).getInt(0)
-    private var nLinesV = readParams(s, path).getLong(1)
+    private val p = readParams(s, path)
+    private val numHashes = p.getInt(0)
+    private var nLinesV = p.getLong(1)
     private var bloomBytes = readBloom(s, path)
     private val mrows = scala.collection.mutable.ArrayBuffer[Row](
       StatsManifest.manifest(s, s"$path/digests").collect().toIndexedSeq: _*)
 
-    /** Cached-state [[LineIndex.probe]] — same output and pin
-      * contract: the dup-heavy path's checkpoint goes to the caller's
-      * `pins`, so a later probe never invalidates an earlier result. A
-      * probe loop closes one [[Pins]] per probe once its result has
-      * materialized, as [[graft.streaming.LineDupStream]] does.
+    /** [[graft.ops.Text.dedupLinesIncremental]] output contract for the
+      * batch docs: (idCol, n_lines, n_removed_history, n_removed_batch,
+      * text_dedup). See the object doc for the pruning shape.
+      *
+      * `maxCollect` guards the driver: the collect-and-prune fast path
+      * assumes maybes ≪ batch (the mostly-novel crawl regime). A
+      * DUP-HEAVY batch — re-ingesting yesterday's crawl, or the ScaleUp
+      * replication artifact (SCALE_r13: a 100×-replicated corpus makes
+      * EVERY batch line a history hit) — would collect the whole
+      * batch's line set to the driver for pruning that can't prune
+      * anyway (uniform digests hit every file once maybes ≳ file
+      * count), so past the threshold the probe switches to one
+      * distributed pass: committed digest scan ⊳ semi-join against the
+      * maybe frame ⊳ distinct (maybes-bounded, keeping the
+      * duplicate-row immunity) — no driver collect at any batch size.
+      *
+      * The dup-heavy path's maybes-bounded `present` frame is a
+      * checkpoint the result reads lazily; it goes to `pins`, which the
+      * caller owns (the [[MinhashIndex.Maintainer.probe]] contract), so
+      * a later probe never invalidates an earlier result. The fast and
+      * empty paths pin nothing. A probe loop closes one [[Pins]] per
+      * probe once its result has materialized, as
+      * [[graft.streaming.LineDupStream]] does.
       */
     def probe(batch: DataFrame, idCol: String, textCol: String,
               delim: String = "\n", maxCollect: Int = 200000,
-              pins: Pins = new Pins): DataFrame =
-      probeCore(s, path, batch, idCol, textCol, delim,
-        maxCollect, numHashes, bloomBytes, mrows.toSeq, pins)
+              pins: Pins = new Pins): DataFrame = {
+      import graft.functions.FunctionDefs.call
+      val digests = s"$path/digests"
+      // the maybe minority: distinct bloom-positive batch lines,
+      // materialized once (it feeds the count, then one of two paths)
+      val maybePins = new Pins
+      val maybesDf = maybePins(Text.nonBlankLines(batch, textCol, delim)
+        .filter(call("bloom_contains", lit(bloomBytes), xxhash64(col("__l")),
+          lit(numHashes)))
+        .select(xxhash64(col("__l")).as("xx"), md5(col("__l")).as("__hh"))
+        .distinct())
+      // ONE limit-collect replaces the former count()-then-collect()
+      // pair (two jobs per probe): <= maxCollect rows back means we hold
+      // the COMPLETE maybe set (limit returned everything there was) and
+      // the fast path proceeds with it; maxCollect+1 rows means over-cap
+      // — switch to the distributed path without ever collecting the
+      // rest. The collect job also materializes the checkpoint blocks
+      // the distributed path reads.
+      val maybes = maybesDf.limit(maxCollect + 1).collect()
+      val present =
+        if (maybes.length <= maxCollect) {
+          // fast path: driver-side file pruning, zero metadata jobs (no
+          // maybes → no files → an empty frame)
+          maybePins.close()
+          import s.implicits._
+          val keys = maybes.map(_.getString(1)).toSeq.toDF("__hh")
+          // semi + distinct: ≤ one row per maybe reaches the membership
+          // join, whatever duplicate rows replayed appends left behind
+          StatsManifest.readFiles(s, digests,
+              StatsManifest.pruneLocal(mrows.toSeq, maybes.map(_.getLong(0))))
+            .select(col("hh").as("__hh"))
+            .join(broadcast(keys), Seq("__hh"), "left_semi")
+            .distinct()
+        } else {
+          // dup-heavy path: distributed end to end; materialize the
+          // (maybes-bounded) present set so the checkpointed maybe frame
+          // releases before the main dedup job — the present checkpoint
+          // itself goes to the caller's pins
+          val files = mrows.map(_.getAs[String]("file")).distinct.toSeq
+          val hits = pins(StatsManifest.readFiles(s, digests, files)
+            .select(col("hh").as("__hh"))
+            .join(maybesDf.select("__hh"), Seq("__hh"), "left_semi")
+            .distinct())
+          maybePins.close()
+          hits
+        }
+      Text.dedupLinesIncremental(
+        Text.lineHistoryFrom(bloomBytes, present.withColumn("__seen", lit(1)),
+          numHashes),
+        batch, idCol, textCol, delim)
+    }
 
-    /** Cached-state [[LineIndex.append]] — extends the in-memory
-      * manifest/bloom from the delta it just wrote.
+    /** Fold a probed batch's KEPT output back in — pass the probe
+      * result (or any frame whose `textCol` lines are known-novel),
+      * O(batch). Writes digests → bloom → params and extends this
+      * handle's manifest rows and bloom from the delta it just wrote.
       */
     def append(kept: DataFrame, textCol: String,
                delim: String = "\n", nFiles: Int = 8): Unit = {
-      val (fresh, merged, n) = appendCore(s, path, kept, textCol, delim,
-        nFiles, numHashes, bloomBytes, nLinesV)
+      val linePins = new Pins
+      val lines = linePins(Text.nonBlankLines(kept, textCol, delim))
+      val fresh = StatsManifest.append(digestsOf(lines), s"$path/digests", "xx", nFiles)
+      val merged = Text.bloomWith(bloomBytes, lines, numHashes)
+      val n = nLinesV + fresh.map(_.getAs[Long]("n_rows")).sum
+      writeBloom(s, path, merged)
+      writeParams(s, path, numHashes, n)
+      linePins.close()
       mrows ++= fresh
       bloomBytes = merged
       nLinesV = n

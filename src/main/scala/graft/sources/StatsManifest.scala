@@ -160,11 +160,23 @@ object StatsManifest {
     * contract, the filter is the correctness contract).
     */
   def prunedRead(s: SparkSession, path: String, statCol: String,
-                 from: Column, to: Column): DataFrame = {
-    val files = prunedFiles(s, path, from, to)
-    val base =
-      if (files.isEmpty) s.read.parquet(path).filter(lit(false))
-      else s.read.parquet(files.toIndexedSeq: _*)
-    base.filter(col(statCol) >= from && col(statCol) <= to)
-  }
+                 from: Column, to: Column): DataFrame =
+    readFiles(s, path, prunedFiles(s, path, from, to).toIndexedSeq)
+      .filter(col(statCol) >= from && col(statCol) <= to)
+
+  /** The layout at `path` restricted to `files` (the survivors of a
+    * manifest prune) — or, when none survive, an empty frame with the
+    * layout's schema. The one read every manifest-pruned path shares.
+    */
+  def readFiles(s: SparkSession, path: String, files: Seq[String]): DataFrame =
+    if (files.isEmpty) s.read.parquet(path).filter(lit(false))
+    else s.read.parquet(files: _*)
+
+  /** Every row the committed manifest serves — and only those: data
+    * files a crashed [[append]] landed without a manifest commit stay
+    * invisible to full-table reads (compaction) as they are to probes.
+    */
+  def committed(s: SparkSession, path: String): DataFrame =
+    readFiles(s, path,
+      manifest(s, path).select("file").distinct().collect().map(_.getString(0)).toIndexedSeq)
 }

@@ -25,8 +25,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    the next commit).
   *
   * Concurrency contract: SINGLE WRITER (the [[StatsManifest.append]] /
-  * [[MinhashIndex.append]] maintenance contract — one daily/streaming
-  * maintainer). Two concurrent writers could pick the same next
+  * [[MinhashIndex.Maintainer.append]] maintenance contract — one
+  * daily/streaming maintainer). Two concurrent writers could pick the same next
   * version number; readers would still never tear (one job's committer
   * wins the directory), but the loser's rows would be dropped.
   * Replays are idempotent by construction: re-running a failed write

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * batch — posting lookups, never a history re-band), (2) the found
   * edges FOLD into the running component labeling ([[CcStream]]'s
   * supernode merge, O(batch edges + one labels pass)), and (3) the
-  * batch is APPENDED to the index ([[MinhashIndex.append]],
+  * batch is APPENDED to the index ([[MinhashIndex.Maintainer.append]],
   * delta-sized manifest extension) so later batches pair against it.
   *
   * `foreachBatch`, not a stateful operator — each step is a

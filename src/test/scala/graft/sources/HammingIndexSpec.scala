@@ -41,7 +41,7 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
       .filter(col("id_a") % 4 === 0 || col("id_b") % 4 === 0))
 
   test("probe == full re-band over history ∪ batch, restricted to batch-touching pairs (pigeonhole-complete, so EXACT)") {
-    val probed = pairSet(HammingIndex.probe(spark, path, batch,
+    val probed = pairSet(new HammingIndex.Maintainer(spark, path).probe(batch,
       "doc_id", "sig", maxDist = 3, maxBucket = -1))
     val reband = rebandTouching(hashes)
     probed shouldBe reband
@@ -50,7 +50,7 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   test("posting-file pruning: a small batch reads a strict subset of posting files") {
     val one = batch.orderBy("doc_id").limit(2)
-    HammingIndex.probe(spark, path, one, "doc_id", "sig", maxDist = 3).count()
+    new HammingIndex.Maintainer(spark, path).probe(one, "doc_id", "sig", maxDist = 3).count()
     val man = StatsManifest.manifest(spark, s"$path/postings")
     val total = man.count()
     total should be > 10L // 32 requested; empty range partitions may drop
@@ -69,7 +69,7 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     import spark.implicits._
     val h = history.orderBy("doc_id").limit(1).collect().head
     val planted = Seq((910000L, h.getLong(1))).toDF("doc_id", "sig")
-    pairSet(HammingIndex.probe(spark, path, planted, "doc_id", "sig",
+    pairSet(new HammingIndex.Maintainer(spark, path).probe(planted, "doc_id", "sig",
       maxDist = 3, maxBucket = 1)) should contain((h.getLong(0), 910000L, 0))
   }
 
@@ -81,12 +81,13 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     HammingIndex.build(hist, "doc_id", "sig", p2,
       pieces = 8, nPostingFiles = 16, nDocFiles = 4)
     val before = VersionedDir.read(spark, s"$p2/params").head().getLong(1)
-    HammingIndex.probe(spark, p2, day1, "doc_id", "sig", maxDist = 3,
-      maxBucket = -1).count()
-    HammingIndex.append(spark, p2, day1, "doc_id", "sig")
+    val m = new HammingIndex.Maintainer(spark, p2)
+    m.probe(day1, "doc_id", "sig", maxDist = 3, maxBucket = -1).count()
+    m.append(day1, "doc_id", "sig")
     VersionedDir.read(spark, s"$p2/params").head().getLong(1) shouldBe
       before + day1.select("sig").distinct().count()
-    val probed = pairSet(HammingIndex.probe(spark, p2, day2,
+    // a fresh handle: the on-disk state sees the appended generation
+    val probed = pairSet(new HammingIndex.Maintainer(spark, p2).probe(day2,
       "doc_id", "sig", maxDist = 3, maxBucket = -1))
     probed shouldBe rebandTouching(hashes)
     probed should not be empty
@@ -96,17 +97,22 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val p2 = java.nio.file.Files.createTempDirectory("graft-hmix-del").toString + "/ix"
     HammingIndex.build(history, "doc_id", "sig", p2,
       pieces = 8, nPostingFiles = 16, nDocFiles = 4)
+    // a handle opened BEFORE the delete: external deletes are safe,
+    // tombstones are re-checked per probe
+    val opened = new HammingIndex.Maintainer(spark, p2)
     HammingIndex.delete(spark, p2,
       history.filter(col("doc_id") % 4 === 1).select(col("doc_id")), "doc_id")
     val survivors = hashes.filter(col("doc_id") % 4 =!= 1)
-    val probed = pairSet(HammingIndex.probe(spark, p2, batch,
+    val probed = pairSet(new HammingIndex.Maintainer(spark, p2).probe(batch,
       "doc_id", "sig", maxDist = 3, maxBucket = -1))
     probed shouldBe rebandTouching(survivors)
     probed.exists(p => p._1 % 4 == 1 || p._2 % 4 == 1) shouldBe false
+    pairSet(opened.probe(batch, "doc_id", "sig",
+      maxDist = 3, maxBucket = -1)) shouldBe probed
     val dest = java.nio.file.Files.createTempDirectory("graft-hmix-deld").toString + "/ix"
     HammingIndex.compact(spark, p2, dest, nPostingFiles = 8, nDocFiles = 2)
     new java.io.File(dest + "/tombstones").exists() shouldBe false
-    pairSet(HammingIndex.probe(spark, dest, batch, "doc_id", "sig",
+    pairSet(new HammingIndex.Maintainer(spark, dest).probe(batch, "doc_id", "sig",
       maxDist = 3, maxBucket = -1)) shouldBe probed
     // postings REBUILD from surviving docs: the distinct-hash count in
     // params reflects the survivors only
@@ -115,7 +121,43 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
         .select("sig").distinct().count()
   }
 
-  test("Maintainer: cached-metadata probes == static probes through a probe→append→probe cycle") {
+  test("compact publishes only committed rows: an abandoned append's files stay invisible") {
+    import spark.implicits._
+    val p2 = java.nio.file.Files.createTempDirectory("graft-hmix-crash").toString + "/ix"
+    HammingIndex.build(history, "doc_id", "sig", p2,
+      pieces = 8, nPostingFiles = 8, nDocFiles = 4)
+    // an append that crashed after landing its docs and postings data
+    // files but before either manifest commit: ids 800000+ exist on
+    // disk only
+    val sigs = batch.orderBy("doc_id").limit(8).collect().map(_.getLong(1)).toSeq
+    val abandoned = sigs.zipWithIndex
+      .map { case (h, i) => (800000L + i, h) }.toDF("id", "h")
+    abandoned.coalesce(1).write.mode("append").parquet(s"$p2/docs")
+    abandoned.select(col("h").as("__h"))
+      .select(col("__h"), posexplode(Dedup.hammingChunks("__h", 8)).as(Seq("__p", "__k")))
+      .select(shiftleft(col("__p").cast("long"), 32)
+        .bitwiseOR(col("__k").cast("long").bitwiseAND(lit(0xffffffffL))).as("key"),
+        col("__h"))
+      .coalesce(1).write.mode("append").parquet(s"$p2/postings")
+    // near-copies of the abandoned batch: one flipped bit each
+    val nearCopies = sigs.zipWithIndex
+      .map { case (h, i) => (700000L + i, h ^ 1L) }.toDF("doc_id", "sig")
+    def namesAbandoned(dir: String) = pairSet(new HammingIndex.Maintainer(spark, dir)
+        .probe(nearCopies, "doc_id", "sig", maxDist = 3, maxBucket = -1))
+      .filter(p => p._1 >= 800000L || p._2 >= 800000L)
+    namesAbandoned(p2) shouldBe empty
+    val dest = java.nio.file.Files.createTempDirectory("graft-hmix-crashd").toString + "/ix"
+    HammingIndex.compact(spark, p2, dest, nPostingFiles = 8, nDocFiles = 2)
+    namesAbandoned(dest) shouldBe empty
+    // the near-copies do pair with those ids once the batch is really
+    // appended, so the emptiness above is not vacuous
+    val m = new HammingIndex.Maintainer(spark, dest)
+    m.append(abandoned.select(col("id").as("doc_id"), col("h").as("sig")), "doc_id", "sig")
+    pairSet(m.probe(nearCopies, "doc_id", "sig", maxDist = 3, maxBucket = -1))
+      .count(p => p._2 >= 800000L) should be >= 8
+  }
+
+  test("Maintainer: an appended handle == a freshly opened handle through a probe→append→probe cycle") {
     val p2 = java.nio.file.Files.createTempDirectory("graft-hmix-mnt").toString + "/ix"
     val hist = hashes.filter(col("doc_id") % 4 === 2 || col("doc_id") % 4 === 3)
     val day1 = hashes.filter(col("doc_id") % 4 === 1)
@@ -123,22 +165,21 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     HammingIndex.build(hist, "doc_id", "sig", p2,
       pieces = 8, nPostingFiles = 16, nDocFiles = 4)
     val m = new HammingIndex.Maintainer(spark, p2)
-    pairSet(m.probe(day1, "doc_id", "sig", maxDist = 3, maxBucket = -1)) shouldBe
-      pairSet(HammingIndex.probe(spark, p2, day1, "doc_id", "sig",
-        maxDist = 3, maxBucket = -1))
-    // append through the Maintainer: the in-memory manifest extension
-    // must see the appended generation, and match the on-disk state
+    m.probe(day1, "doc_id", "sig", maxDist = 3, maxBucket = -1).count()
+    // append through the handle: the in-memory manifest extension
+    // must see the appended generation, and a handle freshly opened on
+    // the on-disk state must answer the same
     m.append(day1, "doc_id", "sig")
     val viaCache = pairSet(m.probe(day2, "doc_id", "sig",
       maxDist = 3, maxBucket = -1))
-    viaCache shouldBe pairSet(HammingIndex.probe(spark, p2, day2,
+    viaCache shouldBe pairSet(new HammingIndex.Maintainer(spark, p2).probe(day2,
       "doc_id", "sig", maxDist = 3, maxBucket = -1))
     viaCache shouldBe rebandTouching(hashes)
     viaCache should not be empty
   }
 
   test("empty batch probes to zero pairs without error") {
-    HammingIndex.probe(spark, path, batch.filter(lit(false)),
+    new HammingIndex.Maintainer(spark, path).probe(batch.filter(lit(false)),
       "doc_id", "sig", maxDist = 3).count() shouldBe 0L
   }
 
@@ -156,13 +197,14 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     // makes its true cross pairs (e.g. vs i=8, dist 2) undiscoverable
     val batch2 = Seq((100L, 0x2AL), (101L, (200L << 8) | 0x2AL))
       .toDF("doc_id", "sig")
-    val capped = pairSet(HammingIndex.probe(spark, p2, batch2,
+    val m = new HammingIndex.Maintainer(spark, p2)
+    val capped = pairSet(m.probe(batch2,
       "doc_id", "sig", maxDist = 3, maxBucket = 5))
     // dist-0 survives any cap
     capped should contain((0L, 100L, 0))
     // every (history, 101) candidate shares only over-cap chunks → shed
     capped.exists(p => p._2 == 101L && p._1 < 100L) shouldBe false
-    val unlimited = pairSet(HammingIndex.probe(spark, p2, batch2,
+    val unlimited = pairSet(m.probe(batch2,
       "doc_id", "sig", maxDist = 3, maxBucket = -1))
     unlimited should contain((8L, 101L, 2))
     capped.subsetOf(unlimited) shouldBe true
@@ -185,7 +227,7 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     HammingIndex.build(hist2, "doc_id", "sig", p3,
       pieces = 8, nPostingFiles = 4, nDocFiles = 2)
     val batch3 = Seq((100L, h(1, 2, 3)), (101L, h(7, 7, 6))).toDF("doc_id", "sig")
-    val probed = pairSet(HammingIndex.probe(spark, p3, batch3,
+    val probed = pairSet(new HammingIndex.Maintainer(spark, p3).probe(batch3,
       "doc_id", "sig", maxDist = 2, maxBucket = -1))
     val truth = pairSet(Dedup.hammingPairs(
         hist2.unionByName(batch3), "doc_id", "sig",
@@ -206,8 +248,9 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val ra = m.probe(a, "doc_id", "sig", maxDist = 3)
     val rb = m.probe(b, "doc_id", "sig", maxDist = 3)
     val (gotA, gotB) = (pairSet(ra), pairSet(rb))
-    gotA shouldBe pairSet(HammingIndex.probe(spark, path, a, "doc_id", "sig", maxDist = 3))
-    gotB shouldBe pairSet(HammingIndex.probe(spark, path, b, "doc_id", "sig", maxDist = 3))
+    val fresh = new HammingIndex.Maintainer(spark, path)
+    gotA shouldBe pairSet(fresh.probe(a, "doc_id", "sig", maxDist = 3))
+    gotB shouldBe pairSet(fresh.probe(b, "doc_id", "sig", maxDist = 3))
   }
 
   test("Maintainer probe loop: closing each probe's Pins leaves no persistent RDD behind") {

@@ -31,7 +31,7 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val batch = df(
       10L -> "seen a\nfresh one\n\nfresh one",
       11L -> "fresh one\nseen c\nfresh two")
-    val got = LineIndex.probe(spark, path, batch, "id", "text")
+    val got = new LineIndex.Maintainer(spark, path).probe(batch, "id", "text")
       .orderBy("id").collect().map(_.toSeq).toSeq
     val want = Text.dedupLinesIncremental(df(history: _*), batch, "id", "text")
       .orderBy("id").collect().map(_.toSeq).toSeq
@@ -45,11 +45,13 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val path = tmp()
     LineIndex.build(df(history: _*), "text", path)
     val b1 = df(10L -> "seen a\nfresh one")
-    val r1 = LineIndex.probe(spark, path, b1, "id", "text").localCheckpoint()
+    val m = new LineIndex.Maintainer(spark, path)
+    val r1 = m.probe(b1, "id", "text").localCheckpoint()
     r1.head().getAs[String]("text_dedup") shouldBe "fresh one"
-    LineIndex.append(spark, path, r1, "text_dedup")
+    m.append(r1, "text_dedup")
     val b2 = df(20L -> "fresh one\nseen b\nfresh three")
-    val r2 = LineIndex.probe(spark, path, b2, "id", "text").head()
+    // a fresh handle: the on-disk state carries the append
+    val r2 = new LineIndex.Maintainer(spark, path).probe(b2, "id", "text").head()
     // "fresh one" became history via the append; "seen b" was original
     r2.getAs[String]("text_dedup") shouldBe "fresh three"
     r2.getAs[Long]("n_removed_history") shouldBe 2L
@@ -62,14 +64,14 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val path = tmp()
     LineIndex.build(df(history: _*), "text", path)
     val kept = df(10L -> "fresh one")
-    LineIndex.append(spark, path, kept, "text")
-    LineIndex.append(spark, path, kept, "text") // crash-replay double fold
+    new LineIndex.Maintainer(spark, path).append(kept, "text")
+    new LineIndex.Maintainer(spark, path).append(kept, "text") // crash-replay double fold
     // the digest table now has duplicate rows for "fresh one"...
     spark.read.parquet(s"$path/digests")
       .groupBy("hh").count().filter(col("count") > 1).count() shouldBe 1L
     // ...but the probe's semi+distinct bounds membership to one row:
     // a 2-line batch doc must NOT multiply to 3 counted lines
-    val got = LineIndex.probe(spark, path,
+    val got = new LineIndex.Maintainer(spark, path).probe(
       df(20L -> "fresh one\nnovel"), "id", "text").head()
     got.getAs[Long]("n_lines") shouldBe 2L
     got.getAs[Long]("n_removed_history") shouldBe 1L
@@ -82,9 +84,10 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val batch = df(
       10L -> "seen a\nfresh one\nseen b",
       11L -> "fresh one\nseen c")
-    val fast = LineIndex.probe(spark, path, batch, "id", "text")
+    val m = new LineIndex.Maintainer(spark, path)
+    val fast = m.probe(batch, "id", "text")
       .orderBy("id").collect().map(_.toSeq).toSeq
-    val dist = LineIndex.probe(spark, path, batch, "id", "text",
+    val dist = m.probe(batch, "id", "text",
       maxCollect = 0).orderBy("id").collect().map(_.toSeq).toSeq
     dist shouldBe fast
     dist.map(_(4)).toSeq shouldBe Seq("fresh one", "")
@@ -94,10 +97,10 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val path = tmp()
     LineIndex.build(df(history: _*), "text", path, nFiles = 4)
     val kept = df(10L -> "fresh one")
-    LineIndex.append(spark, path, kept, "text")
-    LineIndex.append(spark, path, kept, "text") // replay → duplicate row
+    new LineIndex.Maintainer(spark, path).append(kept, "text")
+    new LineIndex.Maintainer(spark, path).append(kept, "text") // replay → duplicate row
     val batch = df(20L -> "fresh one\nseen a\nnovel")
-    val before = LineIndex.probe(spark, path, batch, "id", "text")
+    val before = new LineIndex.Maintainer(spark, path).probe(batch, "id", "text")
       .head().toSeq
     LineIndex.compact(spark, path, nFiles = 2)
     // duplicates gone, layout re-clustered to exactly nFiles
@@ -108,7 +111,7 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     VersionedDir.read(spark, s"$path/params").head()
       .getAs[Long]("n_lines") shouldBe 4L // seen a, seen b, seen c, fresh one
     // and the probe answer is bit-identical across the compaction
-    LineIndex.probe(spark, path, batch, "id", "text")
+    new LineIndex.Maintainer(spark, path).probe(batch, "id", "text")
       .head().toSeq shouldBe before
   }
 
@@ -118,7 +121,7 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     // lines absent from history: with overwhelming probability all are
     // bloom-negative at m = 2^23 over 3 lines; the probe must still be
     // exact and keep batch-first semantics
-    val got = LineIndex.probe(spark, path,
+    val got = new LineIndex.Maintainer(spark, path).probe(
       df(10L -> "zzz qq\nzzz qq\nanother novel"), "id", "text").head()
     got.getAs[Long]("n_removed_batch") shouldBe 1L
     got.getAs[Long]("n_removed_history") shouldBe 0L
@@ -138,8 +141,9 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val ra = m.probe(a, "id", "text", maxCollect = 0)
     val rb = m.probe(b, "id", "text", maxCollect = 0)
     val (gotA, gotB) = (rows(ra), rows(rb))
-    gotA shouldBe rows(LineIndex.probe(spark, path, a, "id", "text", maxCollect = 0))
-    gotB shouldBe rows(LineIndex.probe(spark, path, b, "id", "text", maxCollect = 0))
+    val fresh = new LineIndex.Maintainer(spark, path)
+    gotA shouldBe rows(fresh.probe(a, "id", "text", maxCollect = 0))
+    gotB shouldBe rows(fresh.probe(b, "id", "text", maxCollect = 0))
     gotA.map(_(4)) shouldBe Seq("fresh one", "")
     gotB.map(_(4)) shouldBe Seq("fresh two")
   }

@@ -32,8 +32,8 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
 
   test("probe == full re-band over history ∪ batch, restricted to batch-touching pairs") {
-    val probed = pairSet(MinhashIndex.probe(spark, path, batch, "doc_id", "text",
-      threshold = 0.8, maxBucket = -1))
+    val probed = pairSet(new MinhashIndex.Maintainer(spark, path).probe(
+      batch, "doc_id", "text", threshold = 0.8, maxBucket = -1))
     val reband = pairSet(
       Dedup.minhashLsh(docs, "doc_id", "text",
           k = 3, numPerm = 64, bands = 16, threshold = 0.8, maxBucket = -1)
@@ -49,7 +49,7 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     // replicate probe's pruning arithmetic: keys of the small batch vs
     // the manifest — with 16 posting files and 3 docs × 16 bands = ≤48
     // scattered keys, at least one file range must be missed
-    MinhashIndex.probe(spark, path, one, "doc_id", "text").count()
+    new MinhashIndex.Maintainer(spark, path).probe(one, "doc_id", "text").count()
     val man = StatsManifest.manifest(spark, s"$path/postings")
     val total = man.count()
     total should be > 20L // 64 requested; empty range partitions may drop
@@ -78,16 +78,18 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val day2 = docs.filter(col("doc_id") % 4 === 0)
     MinhashIndex.build(hist, "doc_id", "text", p2,
       nPostingFiles = 32, nDocFiles = 8)
-    MinhashIndex.probe(spark, p2, day1, "doc_id", "text", maxBucket = -1).count()
-    MinhashIndex.append(spark, p2, day1, "doc_id", "text")
+    val m = new MinhashIndex.Maintainer(spark, p2)
+    m.probe(day1, "doc_id", "text", maxBucket = -1).count()
+    m.append(day1, "doc_id", "text")
     // n_docs param grew by the appended batch (params commit through
     // VersionedDir since r11 — read the committed generation)
     VersionedDir.read(spark, s"$p2/params").head().getLong(4) shouldBe
       hist.count() + day1.count()
-    // the day-2 probe must see day-1 docs as history: equality vs the
-    // full re-band restricted to day-2-touching pairs
-    val probed = pairSet(MinhashIndex.probe(spark, p2, day2, "doc_id", "text",
-      threshold = 0.8, maxBucket = -1))
+    // the day-2 probe (a fresh handle: the on-disk state) must see
+    // day-1 docs as history: equality vs the full re-band restricted
+    // to day-2-touching pairs
+    val probed = pairSet(new MinhashIndex.Maintainer(spark, p2).probe(
+      day2, "doc_id", "text", threshold = 0.8, maxBucket = -1))
     val reband = pairSet(
       Dedup.minhashLsh(docs, "doc_id", "text",
           k = 3, numPerm = 64, bands = 16, threshold = 0.8, maxBucket = -1)
@@ -102,18 +104,23 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val batch = docs.filter(col("doc_id") % 4 === 0)
     MinhashIndex.build(hist, "doc_id", "text", p2,
       nPostingFiles = 32, nDocFiles = 8)
+    // a handle opened BEFORE the delete: external deletes are safe,
+    // tombstones are re-checked per probe
+    val opened = new MinhashIndex.Maintainer(spark, p2)
     // delete every history doc ≡ 1 (mod 4)
     MinhashIndex.delete(spark, p2,
       hist.filter(col("doc_id") % 4 === 1).select(col("doc_id")), "doc_id")
     val survivors = docs.filter(col("doc_id") % 4 =!= 1)
-    val probed = pairSet(MinhashIndex.probe(spark, p2, batch, "doc_id", "text",
-      threshold = 0.8, maxBucket = -1))
+    val probed = pairSet(new MinhashIndex.Maintainer(spark, p2).probe(
+      batch, "doc_id", "text", threshold = 0.8, maxBucket = -1))
     val reband = pairSet(
       Dedup.minhashLsh(survivors, "doc_id", "text",
           k = 3, numPerm = 64, bands = 16, threshold = 0.8, maxBucket = -1)
         .filter(col("id_a") % 4 === 0 || col("id_b") % 4 === 0))
     probed shouldBe reband
     probed.exists(p => p._1 % 4 == 1 || p._2 % 4 == 1) shouldBe false
+    pairSet(opened.probe(batch, "doc_id", "text",
+      threshold = 0.8, maxBucket = -1)) shouldBe reband
     // merge-on-write: the compacted index answers identically,
     // tombstone-free, with the params count updated
     val dest = java.nio.file.Files.createTempDirectory("graft-mhix-deld").toString + "/ix"
@@ -121,11 +128,51 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     new java.io.File(dest + "/tombstones").exists() shouldBe false
     VersionedDir.read(spark, s"$dest/params").head().getLong(4) shouldBe
       hist.filter(col("doc_id") % 4 =!= 1).count()
-    pairSet(MinhashIndex.probe(spark, dest, batch, "doc_id", "text",
+    pairSet(new MinhashIndex.Maintainer(spark, dest).probe(batch, "doc_id", "text",
       threshold = 0.8, maxBucket = -1)) shouldBe reband
   }
 
-  test("Maintainer: cached-metadata probes == static probes through a probe→append→probe cycle") {
+  test("compact publishes only committed rows: an abandoned append's files stay invisible") {
+    import spark.implicits._
+    val p2 = java.nio.file.Files.createTempDirectory("graft-mhix-crash").toString + "/ix"
+    MinhashIndex.build(history, "doc_id", "text", p2,
+      nPostingFiles = 16, nDocFiles = 4)
+    // an append that crashed after landing its docs and postings data
+    // files but before either manifest commit (StatsManifestSpec's
+    // crash state 1, at index level): ids 800000+ exist on disk only
+    val texts = batch.orderBy("doc_id").limit(8)
+      .collect().map(_.getString(1)).toSeq
+    val abandoned = texts.zipWithIndex
+      .map { case (t, i) => (800000L + i, t) }.toDF("doc_id", "text")
+    val sig = Dedup.sigFrame(abandoned, "doc_id", "text", 3, 64, 42L)
+    sig.select(col("doc_id").as("id"), col("__sh").as("sh"))
+      .coalesce(1).write.mode("append").parquet(s"$p2/docs")
+    Dedup.bandKeyRows(sig, "doc_id", 64, 16)
+      .select(shiftleft(col("__band").cast("long"), 32)
+        .bitwiseOR(col("__bkey").cast("long").bitwiseAND(lit(0xffffffffL))).as("key"),
+        col("doc_id").as("id"))
+      .coalesce(1).write.mode("append").parquet(s"$p2/postings")
+    spark.read.parquet(s"$p2/docs").filter(col("id") >= 800000L).count() shouldBe 8L
+    // near-copies of the abandoned batch
+    val nearCopies = texts.zipWithIndex
+      .map { case (t, i) => (700000L + i, t + " extra") }.toDF("doc_id", "text")
+    def namesAbandoned(dir: String) = pairSet(new MinhashIndex.Maintainer(spark, dir)
+        .probe(nearCopies, "doc_id", "text", threshold = 0.8, maxBucket = -1))
+      .filter(p => p._1 >= 800000L || p._2 >= 800000L)
+    namesAbandoned(p2) shouldBe empty
+    val dest = java.nio.file.Files.createTempDirectory("graft-mhix-crashd").toString + "/ix"
+    MinhashIndex.compact(spark, p2, dest, nPostingFiles = 8, nDocFiles = 2)
+    namesAbandoned(dest) shouldBe empty
+    VersionedDir.read(spark, s"$dest/params").head().getLong(4) shouldBe history.count()
+    // the near-copies do pair with those ids once the batch is really
+    // appended, so the emptiness above is not vacuous
+    val m = new MinhashIndex.Maintainer(spark, dest)
+    m.append(abandoned, "doc_id", "text")
+    pairSet(m.probe(nearCopies, "doc_id", "text", threshold = 0.8, maxBucket = -1))
+      .count(p => p._2 >= 800000L) should be >= 8
+  }
+
+  test("Maintainer: an appended handle == a freshly opened handle through a probe→append→probe cycle") {
     val p2 = java.nio.file.Files.createTempDirectory("graft-mhix-mnt").toString + "/ix"
     val hist = docs.filter(col("doc_id") % 4 === 2 || col("doc_id") % 4 === 3)
     val day1 = docs.filter(col("doc_id") % 4 === 1)
@@ -133,17 +180,16 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     MinhashIndex.build(hist, "doc_id", "text", p2,
       nPostingFiles = 32, nDocFiles = 8)
     val m = new MinhashIndex.Maintainer(spark, p2)
-    // day-1 probe through the cache == the static (re-reading) probe
-    pairSet(m.probe(day1, "doc_id", "text", maxBucket = -1)) shouldBe
-      pairSet(MinhashIndex.probe(spark, p2, day1, "doc_id", "text", maxBucket = -1))
-    // append through the Maintainer: the IN-MEMORY manifest extension
+    m.probe(day1, "doc_id", "text", maxBucket = -1).count()
+    // append through the handle: the IN-MEMORY manifest extension
     // must see the appended generation (a stale cache would silently
     // miss every day-1 doc — exactly the drift the single-writer
-    // contract guards), and the on-disk state must match too
+    // contract guards), and a handle freshly opened on the on-disk
+    // state must answer the same
     m.append(day1, "doc_id", "text")
     val viaCache = pairSet(m.probe(day2, "doc_id", "text", maxBucket = -1))
-    viaCache shouldBe
-      pairSet(MinhashIndex.probe(spark, p2, day2, "doc_id", "text", maxBucket = -1))
+    viaCache shouldBe pairSet(new MinhashIndex.Maintainer(spark, p2)
+      .probe(day2, "doc_id", "text", maxBucket = -1))
     viaCache shouldBe pairSet(
       Dedup.minhashLsh(docs, "doc_id", "text",
           k = 3, numPerm = 64, bands = 16, threshold = 0.8, maxBucket = -1)
@@ -152,7 +198,7 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("empty batch probes to zero pairs without error") {
-    MinhashIndex.probe(spark, path, batch.filter(lit(false)),
+    new MinhashIndex.Maintainer(spark, path).probe(batch.filter(lit(false)),
       "doc_id", "text").count() shouldBe 0L
   }
 
@@ -161,7 +207,8 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val h = history.orderBy("doc_id").limit(1).collect().head
     val hid = h.getLong(0)
     val planted = Seq((900000L, h.getString(1))).toDF("doc_id", "text")
-    val got = pairSet(MinhashIndex.probe(spark, path, planted, "doc_id", "text"))
+    val got = pairSet(new MinhashIndex.Maintainer(spark, path)
+      .probe(planted, "doc_id", "text"))
     got should contain((hid, 900000L, 1.0))
   }
 
@@ -179,12 +226,13 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
       "doc_id", "text", p2, nPostingFiles = 4, nDocFiles = 2)
     val probeBatch = (Seq((200L, boiler.head._2.replace("unique0", "uniqueX")),
       (101L, clean(1)._2))).toDF("doc_id", "text")
-    val capped = pairSet(MinhashIndex.probe(spark, p2, probeBatch,
+    val m = new MinhashIndex.Maintainer(spark, p2)
+    val capped = pairSet(m.probe(probeBatch,
       "doc_id", "text", threshold = 0.5, maxBucket = 5))
     // the clean cross pair survives the cap
     capped.exists(p => p._1 == 100L && p._2 == 101L) shouldBe true
     // unlimited finds at least as much
-    val unlimited = pairSet(MinhashIndex.probe(spark, p2, probeBatch,
+    val unlimited = pairSet(m.probe(probeBatch,
       "doc_id", "text", threshold = 0.5, maxBucket = -1))
     capped.subsetOf(unlimited) shouldBe true
   }
@@ -197,8 +245,9 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val ra = m.probe(a, "doc_id", "text")
     val rb = m.probe(b, "doc_id", "text")
     val (gotA, gotB) = (pairSet(ra), pairSet(rb))
-    gotA shouldBe pairSet(MinhashIndex.probe(spark, path, a, "doc_id", "text"))
-    gotB shouldBe pairSet(MinhashIndex.probe(spark, path, b, "doc_id", "text"))
+    val fresh = new MinhashIndex.Maintainer(spark, path)
+    gotA shouldBe pairSet(fresh.probe(a, "doc_id", "text"))
+    gotB shouldBe pairSet(fresh.probe(b, "doc_id", "text"))
     (gotA ++ gotB) should not be empty
   }
 

@@ -187,7 +187,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession with Matchers {
       got.toSeq shouldBe full
       // and the index is DURABLE: a fresh handle (a new session's
       // probe) sees the streamed appends
-      val later = graft.sources.LineIndex.probe(spark, path,
+      val later = new graft.sources.LineIndex.Maintainer(spark, path).probe(
         Seq((30L, "fresh three\nbrand new")).toDF("id", "text"),
         "id", "text").head()
       later.getAs[String]("text_dedup") shouldBe "brand new"
