@@ -313,7 +313,7 @@ object Bench {
     import scala.jdk.CollectionConverters._
     val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
       .getInputArguments.asScala.toSeq
-    val tmp = java.nio.file.Files.createTempDirectory("graft-bench").toFile
+    val tmp = new java.io.File(graft.queries.scratchDir("bench"))
     var merged = Vector.empty[QRes]
     var anyChild = false
     for ((fam, qs) <- families) {

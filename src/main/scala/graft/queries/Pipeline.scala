@@ -398,17 +398,15 @@ object Pipeline {
       .orderBy("qid", "rank")
   }
 
-  // One persisted IVF index per (JVM, sf dir) — the build-once/
+  // One persisted IVF index, a query [[fixture]] — the build-once/
   // read-many serving shape AnnLayout exists for.
-  private val annLayoutReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def annLayoutPath(s: SparkSession, dir: String): String =
-    annLayoutReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-annlayout").toString + "/ivf"
-      graft.sources.AnnLayout.build(Tables.embeddings(s, d), "vec_id", "embedding",
+    fixture("ann_ivf_layout", dir) { f =>
+      val p = f + "/ivf"
+      graft.sources.AnnLayout.build(Tables.embeddings(s, dir), "vec_id", "embedding",
         p, nlist = 8, iters = 2, seed = 7)
       p
-    })
+    }
 
   /** Top-k over the PERSISTED IVF layout ([[graft.sources.AnnLayout]]):
     * the index is built once (train + assign + partitioned write) and
@@ -440,22 +438,20 @@ object Pipeline {
       .orderBy("qid", "rank")
   }
 
-  // PQ layouts: one default-regime index + one zero-error-regime index
-  // per (JVM, sf dir)
-  private val annPqLayoutReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  // PQ layouts: one default-regime index + one zero-error-regime
+  // index, each a query [[fixture]]
   /** Top-k over the PERSISTED IVF-PQ layout ([[graft.sources.AnnLayout
     * .buildPq]]): codes-only ADC scan over probed cells, exact re-rank
     * of the shortlist. Default regime is recall-probabilistic →
     * rows-only; [[annPqLayoutFull]] is the hash-checked twin.
     */
   def annPqLayout(s: SparkSession, dir: String): DataFrame = {
-    val path = annPqLayoutReady.computeIfAbsent(dir + "#default", { _ =>
-      val p = java.nio.file.Files.createTempDirectory("graft-pqlayout").toString + "/ivfpq"
+    val path = fixture("ann_pq_layout", dir) { f =>
+      val p = f + "/ivfpq"
       graft.sources.AnnLayout.buildPq(Tables.embeddings(s, dir), "vec_id", "embedding",
         p, nlist = 16, m = 8, ksub = 32, iters = 2, seed = 7)
       p
-    })
+    }
     val e = Tables.embeddings(s, dir)
     graft.sources.AnnLayout.pqTopK(s, path,
         e.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10, nprobe = 4, refine = 10)
@@ -472,12 +468,12 @@ object Pipeline {
     */
   def annPqLayoutFull(s: SparkSession, dir: String): DataFrame = {
     val e256 = Tables.embeddings(s, dir).filter(col("vec_id") < 256)
-    val path = annPqLayoutReady.computeIfAbsent(dir + "#full", { _ =>
-      val p = java.nio.file.Files.createTempDirectory("graft-pqlayout-full").toString + "/ivfpq"
+    val path = fixture("ann_pq_layout_full", dir) { f =>
+      val p = f + "/ivfpq"
       graft.sources.AnnLayout.buildPq(e256, "vec_id", "embedding",
         p, nlist = 8, m = 8, ksub = 256, iters = 1, seed = 7)
       p
-    })
+    }
     graft.sources.AnnLayout.pqTopK(s, path,
         e256.filter(col("vec_id") < 5), "vec_id", "embedding", k = 10, nprobe = 8, refine = 3)
       .select(col("qid"), col("id"), col("rank"), round(col("cos"), 6).as("cos"))
@@ -646,22 +642,19 @@ object Pipeline {
     * merges in SQL (the tx_bpe CTEs) and replays the encode word-for-
     * word, so n_tokens and roundtrip_ok are value-equal, not just flags.
     */
-  // One BPE training per (JVM, sf dir): the merge table is the
+  // One BPE training, a query [[fixture]]: the merge table is the
   // write-once tokenizer artifact — a real pipeline learns it once and
   // applies it fleet-wide. tx_bpe measures the learn itself; this entry
-  // measures the APPLY path. (Without the cache, every bench iteration
+  // measures the APPLY path. (Without the fixture, every bench iteration
   // re-paid the 10 driver-side merge rounds — ~60% of the old
   // tx_bpe_apply number was re-training, not encoding.)
-  private val bpeMergesReady =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String)]]()
-
   def txBpeApply(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(s, dir)
-    val merges: Seq[(String, String)] = bpeMergesReady.computeIfAbsent(dir, { d =>
-      graft.ops.Bpe.learn(Tables.documents(s, d), "text", nMerges = 10)
+    val merges: Seq[(String, String)] = fixture("tx_bpe_merges", dir) { _ =>
+      graft.ops.Bpe.learn(Tables.documents(s, dir), "text", nMerges = 10)
         .orderBy("step").collect()
         .map(r => (r.getString(1), r.getString(2))).toSeq
-    })
+    }
     val words = filter(split(col("text"), " "), w => w =!= "")
     // Stage the encode as a NAMED column consumed twice downstream:
     // higher-order functions are excluded from codegen subexpression
@@ -1634,11 +1627,9 @@ object Pipeline {
       .orderBy("doc_id")
   }
 
-  // One ingest fixture per (JVM, sf dir): JSONL shards with a planted
-  // malformed-line minority, written once, read by every verify/bench
-  // iteration — the write-once-read-many ingest shape.
-  private val jsonlReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  // One ingest [[fixture]]: JSONL shards with a planted malformed-line
+  // minority, written once, read by every verify/bench iteration — the
+  // write-once-read-many ingest shape.
   /** JSONL ingest with corrupt-record quarantine
     * ([[graft.sources.Jsonl]]): the documents corpus is serialized to
     * newline-delimited JSON (canonical `to_json`), every doc_id ≡ 3
@@ -1651,9 +1642,9 @@ object Pipeline {
     */
   def srcJsonl(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val path = jsonlReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-jsonl").toString + "/docs"
-      val lines = Tables.documents(s, d)
+    val path = fixture("src_jsonl", dir) { f =>
+      val p = f + "/docs"
+      val lines = Tables.documents(s, dir)
         .select(col("doc_id"),
           to_json(struct(col("doc_id"), col("lang"), col("source"),
             col("n_chars"))).as("value"))
@@ -1663,7 +1654,7 @@ object Pipeline {
             .otherwise(col("value")).as("value"))
         .write.mode("overwrite").text(p)
       p
-    })
+    }
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("lang", StringType),
       StructField("source", StringType), StructField("n_chars", LongType)))
@@ -1672,8 +1663,6 @@ object Pipeline {
         when(col("_corrupt").isNull, 1).otherwise(0).as("ok"))
       .orderBy("ok", "doc_id")
   }
-
-  private val csvReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** CSV ingest with corrupt-record quarantine ([[graft.sources.Csv]]):
     * the documents metadata is serialized as headerless CSV, every
@@ -1687,15 +1676,15 @@ object Pipeline {
     */
   def srcCsv(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val path = csvReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-csv").toString + "/docs"
-      Tables.documents(s, d)
+    val path = fixture("src_csv", dir) { f =>
+      val p = f + "/docs"
+      Tables.documents(s, dir)
         .select(concat_ws(",", col("doc_id"), col("lang"), col("source"),
           when(col("doc_id") % 7 === 3, lit("n/a"))
             .otherwise(col("n_chars").cast("string"))).as("value"))
         .write.mode("overwrite").text(p)
       p
-    })
+    }
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("lang", StringType),
       StructField("source", StringType), StructField("n_chars", LongType)))
@@ -1704,8 +1693,6 @@ object Pipeline {
         when(col("_corrupt").isNull, 1).otherwise(0).as("ok"))
       .orderBy("ok", "doc_id")
   }
-
-  private val orcReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** ORC interchange: the documents corpus written once to ORC (Spark's
     * second native columnar format — the Hive-ecosystem interchange the
@@ -1719,11 +1706,11 @@ object Pipeline {
     * the PushedFilters).
     */
   def srcOrc(s: SparkSession, dir: String): DataFrame = {
-    val path = orcReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-orc").toString + "/docs"
-      Tables.documents(s, d).write.mode("overwrite").orc(p)
+    val path = fixture("src_orc", dir) { f =>
+      val p = f + "/docs"
+      Tables.documents(s, dir).write.mode("overwrite").orc(p)
       p
-    })
+    }
     val orc = s.read.orc(path)
     def summary(df: DataFrame, label: String): DataFrame =
       df.agg(
@@ -1738,8 +1725,6 @@ object Pipeline {
       .orderBy("stage")
   }
 
-  private val zorderReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Generic multi-column Z-order layout
     * ([[graft.sources.ZOrderLayout]], the OPTIMIZE-ZORDER primitive):
     * lineitem re-laid z-ordered by (l_orderkey, l_partkey), then a
@@ -1751,13 +1736,13 @@ object Pipeline {
     * linear sort) is pinned by ZOrderLayoutSpec on footer statistics.
     */
   def srcZorder(s: SparkSession, dir: String): DataFrame = {
-    val path = zorderReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-zorder").toString + "/li"
+    val path = fixture("src_zorder", dir) { f =>
+      val p = f + "/li"
       graft.sources.ZOrderLayout.writeZOrdered(
-        Tables.lineitem(s, d).select("l_orderkey", "l_partkey", "l_quantity"),
+        Tables.lineitem(s, dir).select("l_orderkey", "l_partkey", "l_quantity"),
         p, Seq("l_orderkey", "l_partkey"), parts = 16)
       p
-    })
+    }
     graft.sources.ZOrderLayout.read(s, path)
       .filter(col("l_orderkey") >= 1000L && col("l_orderkey") <= 5000L &&
         col("l_partkey") >= 200L && col("l_partkey") <= 900L)
@@ -1765,8 +1750,6 @@ object Pipeline {
         col("l_quantity").cast("long").as("qty"))
       .orderBy("l_orderkey", "l_partkey", "qty")
   }
-
-  private val skipReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Manifest-based file skipping: documents range-clustered on doc_id
     * into 16 files with a per-file min/max manifest; the band query
@@ -1776,13 +1759,13 @@ object Pipeline {
     * files were actually skipped.
     */
   def srcSkip(s: SparkSession, dir: String): DataFrame = {
-    val path = skipReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-skip").toString + "/docs"
+    val path = fixture("src_skip", dir) { f =>
+      val p = f + "/docs"
       graft.sources.StatsManifest.write(
-        Tables.documents(s, d).select("doc_id", "source", "lang", "text"),
+        Tables.documents(s, dir).select("doc_id", "source", "lang", "text"),
         p, "doc_id", nFiles = 16)
       p
-    })
+    }
     graft.sources.StatsManifest.prunedRead(s, path, "doc_id", lit(100L), lit(299L))
       .select(col("doc_id"), col("source"), col("lang"),
         length(col("text")).cast("long").as("text_len"))
@@ -1875,8 +1858,6 @@ object Pipeline {
       .orderBy("source")
   }
 
-  private val evolveReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Schema evolution: a v1 batch (doc_id, source) and a v2 batch that
     * added `lang` land in the same directory; the union-schema read
     * backfills nulls for v1 rows. The oracle replays the column
@@ -1884,15 +1865,15 @@ object Pipeline {
     * table.
     */
   def srcEvolve(s: SparkSession, dir: String): DataFrame = {
-    val path = evolveReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-evolve").toString + "/docs"
-      val docs = Tables.documents(s, d)
+    val path = fixture("src_evolve", dir) { f =>
+      val p = f + "/docs"
+      val docs = Tables.documents(s, dir)
       graft.sources.EvolvingLayout.append(
         docs.filter(col("doc_id") % 2 === 0).select("doc_id", "source"), p)
       graft.sources.EvolvingLayout.append(
         docs.filter(col("doc_id") % 2 === 1).select("doc_id", "source", "lang"), p)
       p
-    })
+    }
     graft.sources.EvolvingLayout.read(s, path)
       .groupBy("source")
       .agg(count(lit(1)).as("n"), count(col("lang")).as("n_lang"))
@@ -1924,8 +1905,6 @@ object Pipeline {
       .orderBy("doc_id")
   }
 
-  private val compactReady = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
-
   /** Small-file compaction ([[graft.sources.Compaction]]): documents
     * scattered round-robin across 64 tiny parquet files, compacted into
     * ceil(n/200) doc_id-range-clustered files. The output certifies the
@@ -1936,13 +1915,12 @@ object Pipeline {
     * table and the file counts from the fixed layout arithmetic.
     */
   def srcCompact(s: SparkSession, dir: String): DataFrame = {
-    val (smallP, bigP) = compactReady.computeIfAbsent(dir, { d =>
-      val base = java.nio.file.Files.createTempDirectory("graft-compact").toString
-      val small = base + "/small"; val big = base + "/compacted"
-      Tables.documents(s, d).repartition(64).write.mode("overwrite").parquet(small)
+    val (smallP, bigP) = fixture("src_compact", dir) { f =>
+      val small = f + "/small"; val big = f + "/compacted"
+      Tables.documents(s, dir).repartition(64).write.mode("overwrite").parquet(small)
       graft.sources.Compaction.compactByRows(s, small, big, "doc_id", targetRows = 200L)
       (small, big)
-    })
+    }
     def summary(path: String, label: String): DataFrame =
       s.read.parquet(path).agg(
           count(lit(1)).as("n_rows"),
@@ -1967,26 +1945,23 @@ object Pipeline {
     Text.entropySignals(Tables.documents(s, dir), "doc_id", "text")
       .orderBy("doc_id")
 
-  // Persisted MinHash band-posting index, built ONCE per (JVM, sf dir)
+  // Persisted MinHash band-posting index, a query [[fixture]] built
   // over the deterministic "history" three-quarters of the corpus —
-  // the write-once-probe-daily lifecycle shape (the jsonlReady
-  // pattern). The cache holds the index's opened handle: params + both
-  // manifests read once and served from memory on every probe (the
-  // MinhashIndex.Maintainer scaladoc; SCALE_r11.md:42 measures the
-  // floor it removes). The index FILES are still read per probe; only
-  // file-count-sized metadata is cached.
-  private val mhixReady =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.sources.MinhashIndex.Maintainer]()
-
+  // the write-once-probe-daily lifecycle shape. The fixture is the
+  // index's opened handle: params + both manifests read once and
+  // served from memory on every probe (the MinhashIndex.Maintainer
+  // scaladoc; SCALE_r11.md:42 measures the floor it removes). The index
+  // FILES are still read per probe; only file-count-sized metadata is
+  // held.
   private def minhashIndex(s: SparkSession, dir: String): graft.sources.MinhashIndex.Maintainer =
-    mhixReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-mhix").toString + "/ix"
+    fixture("dd_lsh_index", dir) { f =>
+      val p = f + "/ix"
       graft.sources.MinhashIndex.build(
-        Tables.documents(s, d).filter(col("doc_id") % 4 =!= 0),
+        Tables.documents(s, dir).filter(col("doc_id") % 4 =!= 0),
         "doc_id", "text", p, k = 3, numPerm = 64, bands = 16, seed = 42,
         nPostingFiles = 64, nDocFiles = 16)
       new graft.sources.MinhashIndex.Maintainer(s, p)
-    })
+    }
 
   /** Incremental near-dup discovery over the persisted band-posting
     * index ([[graft.sources.MinhashIndex]]): the day's batch (doc_id ≡
@@ -2012,10 +1987,16 @@ object Pipeline {
     * history ∪ batch restricted to batch-touching pairs (0 — the index
     * IS the re-band, factored into build+probe).
     */
-  def ddLshIndexCheck(s: SparkSession, dir: String): DataFrame = {
+  def ddLshIndexCheck(s: SparkSession, dir: String): DataFrame =
+    lshIndexContract(s, dir, minhashIndex(s, dir))
+
+  // the three-way contract both LSH index gates share; only the handle
+  // (built, or built-then-appended) differs
+  private def lshIndexContract(s: SparkSession, dir: String,
+      index: graft.sources.MinhashIndex.Maintainer): DataFrame = {
     val docs = Tables.documents(s, dir)
     val touches = col("id_a") % 4 === 0 || col("id_b") % 4 === 0
-    val probed = minhashIndex(s, dir)
+    val probed = index
       .probe(docs.filter(col("doc_id") % 4 === 0), "doc_id", "text",
         threshold = 0.8, maxBucket = -1)
       .select("id_a", "id_b").transform(Pins.once(_))
@@ -2037,13 +2018,10 @@ object Pipeline {
   // the APPEND half of the lifecycle: built over half the corpus, with
   // the %4==1 generation probed-then-appended — so the gate's probe of
   // %4==0 must see appended docs as history
-  private val mhixIncReady =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.sources.MinhashIndex.Maintainer]()
-
   private def minhashIndexInc(s: SparkSession, dir: String): graft.sources.MinhashIndex.Maintainer =
-    mhixIncReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-mhixinc").toString + "/ix"
-      val docs = Tables.documents(s, d)
+    fixture("dd_lsh_index_inc", dir) { f =>
+      val p = f + "/ix"
+      val docs = Tables.documents(s, dir)
       graft.sources.MinhashIndex.build(
         docs.filter(col("doc_id") % 4 === 2 || col("doc_id") % 4 === 3),
         "doc_id", "text", p, k = 3, numPerm = 64, bands = 16, seed = 42,
@@ -2054,7 +2032,7 @@ object Pipeline {
         threshold = 0.8, maxBucket = -1).count() // the daily cycle's read half
       m.append(day1, "doc_id", "text")
       m
-    })
+    }
 
   /** [[ddLshIndexCheck]]'s contract over an APPENDED index
     * ([[graft.sources.MinhashIndex.Maintainer.append]]): history = half the
@@ -2064,27 +2042,8 @@ object Pipeline {
     * manifest-extension bug (a day-1 doc invisible to day-2 probes)
     * fails the hash.
     */
-  def ddLshIndexInc(s: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(s, dir)
-    val touches = col("id_a") % 4 === 0 || col("id_b") % 4 === 0
-    val probed = minhashIndexInc(s, dir)
-      .probe(docs.filter(col("doc_id") % 4 === 0), "doc_id", "text",
-        threshold = 0.8, maxBucket = -1)
-      .select("id_a", "id_b").transform(Pins.once(_))
-    val reband = Dedup.minhashLsh(docs, "doc_id", "text", k = 3,
-        numPerm = 64, bands = 16, threshold = 0.8, maxBucket = -1)
-      .filter(touches).select("id_a", "id_b")
-    val exact = Dedup.jaccardJoin(docs, "doc_id", "text", k = 3, threshold = 0.8)
-      .filter(touches).select("id_a", "id_b")
-    exact.agg(count(lit(1)).as("n_exact_new"))
-      .crossJoin(exact.join(probed, Seq("id_a", "id_b"), "left_anti")
-        .agg(count(lit(1)).as("n_missed")))
-      .crossJoin(probed.join(reband, Seq("id_a", "id_b"), "left_anti")
-        .agg(count(lit(1)).as("__extra"))
-        .crossJoin(reband.join(probed, Seq("id_a", "id_b"), "left_anti")
-          .agg(count(lit(1)).as("__gone")))
-        .select((col("__extra") + col("__gone")).as("n_diff_reband")))
-  }
+  def ddLshIndexInc(s: SparkSession, dir: String): DataFrame =
+    lshIndexContract(s, dir, minhashIndexInc(s, dir))
 
   // Persisted Hamming chunk-posting index over a PLANTED, SQL-replayable
   // 64-bit hash (families of 4 consecutive doc_ids share high bits and
@@ -2097,18 +2056,15 @@ object Pipeline {
     "((doc_id div 4) * 2654435761 % 1099511627776) * 4 + " +
       "(CASE WHEN doc_id % 4 = 3 THEN CAST(0 AS BIGINT) ELSE doc_id % 4 END)")
 
-  private val hmixReady =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.sources.HammingIndex.Maintainer]()
-
   private def hammingIndex(s: SparkSession, dir: String): graft.sources.HammingIndex.Maintainer =
-    hmixReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-hmix").toString + "/ix"
+    fixture("dd_hamming_index", dir) { f =>
+      val p = f + "/ix"
       graft.sources.HammingIndex.build(
-        Tables.documents(s, d).filter(col("doc_id") % 7 =!= 0)
+        Tables.documents(s, dir).filter(col("doc_id") % 7 =!= 0)
           .select(col("doc_id"), plantedHash.as("sig")),
         "doc_id", "sig", p, pieces = 8, nPostingFiles = 32, nDocFiles = 16)
       new graft.sources.HammingIndex.Maintainer(s, p)
-    })
+    }
 
   /** Incremental Hamming near-dup discovery over the persisted
     * chunk-posting index ([[graft.sources.HammingIndex]]): the day's
@@ -2119,7 +2075,13 @@ object Pipeline {
     * pieces makes the unlimited regime EXACT, not an S-curve).
     */
   def ddHammingIndex(s: SparkSession, dir: String): DataFrame =
-    hammingIndex(s, dir)
+    hammingBatchProbe(s, dir, hammingIndex(s, dir))
+
+  // the %7==0 batch probe both Hamming index entries hash-check; only
+  // the handle (built, or built-then-appended) differs
+  private def hammingBatchProbe(s: SparkSession, dir: String,
+      index: graft.sources.HammingIndex.Maintainer): DataFrame =
+    index
       .probe(Tables.documents(s, dir).filter(col("doc_id") % 7 === 0)
           .select(col("doc_id"), plantedHash.as("sig")),
         "doc_id", "sig", maxDist = 2, maxBucket = -1)
@@ -2129,13 +2091,10 @@ object Pipeline {
   // generation probed-then-appended, the gate probes %7==0 — so a
   // manifest-extension bug (a day-1 doc invisible to day-2 probes)
   // fails the hash against the same exact SQL replay
-  private val hmixIncReady =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.sources.HammingIndex.Maintainer]()
-
   private def hammingIndexInc(s: SparkSession, dir: String): graft.sources.HammingIndex.Maintainer =
-    hmixIncReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-hmixinc").toString + "/ix"
-      val docs = Tables.documents(s, d)
+    fixture("dd_hamming_index_inc", dir) { f =>
+      val p = f + "/ix"
+      val docs = Tables.documents(s, dir)
         .select(col("doc_id"), plantedHash.as("sig"))
       graft.sources.HammingIndex.build(
         docs.filter(col("doc_id") % 7 =!= 0 && col("doc_id") % 7 =!= 1),
@@ -2146,18 +2105,14 @@ object Pipeline {
         maxDist = 2, maxBucket = -1).count() // the daily cycle's read half
       m.append(day1, "doc_id", "sig")
       m
-    })
+    }
 
   /** [[ddHammingIndex]]'s contract through an APPENDED generation —
     * the same exact full-pair-set replay, so the probe must see the
     * appended day-1 docs as history.
     */
   def ddHammingIndexInc(s: SparkSession, dir: String): DataFrame =
-    hammingIndexInc(s, dir)
-      .probe(Tables.documents(s, dir).filter(col("doc_id") % 7 === 0)
-          .select(col("doc_id"), plantedHash.as("sig")),
-        "doc_id", "sig", maxDist = 2, maxBucket = -1)
-      .orderBy("id_a", "id_b")
+    hammingBatchProbe(s, dir, hammingIndexInc(s, dir))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "dd_lsh_index" -> ddLshIndex _,
@@ -2411,20 +2366,16 @@ object Pipeline {
       .orderBy("doc_id")
 
   // Persisted line-dedup history index ([[graft.sources.LineIndex]]),
-  // built ONCE per (JVM, sf dir) over the history two-thirds (doc_id %
-  // 3 ≠ 0) of the lined corpus and cached as its opened handle — the
-  // probe-only entry reuses it (probe never mutates; the
-  // jsonlReady/mhixReady pattern).
-  private val lineIxReady =
-    new java.util.concurrent.ConcurrentHashMap[String, graft.sources.LineIndex.Maintainer]()
-
+  // a query [[fixture]] built over the history two-thirds (doc_id %
+  // 3 ≠ 0) of the lined corpus and held as its opened handle — the
+  // probe-only entry reuses it (probe never mutates).
   private def lineIndex(s: SparkSession, dir: String): graft.sources.LineIndex.Maintainer =
-    lineIxReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-lineix").toString + "/ix"
+    fixture("dd_line_index", dir) { f =>
+      val p = f + "/ix"
       graft.sources.LineIndex.build(
-        linedDocs(s, d).filter(col("doc_id") % 3 =!= 0), "text", p)
+        linedDocs(s, dir).filter(col("doc_id") % 3 =!= 0), "text", p)
       new graft.sources.LineIndex.Maintainer(s, p)
-    })
+    }
 
   /** Disk-backed incremental line dedup: the day's batch (doc_id ≡ 0
     * mod 2) probes the PERSISTED history index. Output contract EQUALS
@@ -2444,14 +2395,13 @@ object Pipeline {
     * B2 (H ∪ kept(B1) has the same line set as H ∪ B1: every removed
     * B1 line was either in H already or kept at its first B1
     * occurrence, which the oracle exploits). Fresh index per
-    * invocation — append mutates state, so a cached index would make
-    * re-runs non-idempotent; the in-entry build is scaffolding, tagged
-    * in Bench.ScaffoldQueries.
+    * invocation, in its own [[scratchDir]] — append mutates state, so
+    * a [[fixture]] index would make re-runs non-idempotent; the
+    * in-entry build is scaffolding, tagged in Bench.ScaffoldQueries.
     */
   def ddLineIndexInc(s: SparkSession, dir: String): DataFrame = {
     val lined = linedDocs(s, dir)
-    val p = java.nio.file.Files.createTempDirectory("graft-lineix-inc")
-      .toString + "/ix"
+    val p = scratchDir("dd_line_index_inc") + "/ix"
     graft.sources.LineIndex.build(
       lined.filter(col("doc_id") % 3 =!= 0), "text", p)
     // one Maintainer for the probe→append→probe cycle (ITS documented
@@ -2702,17 +2652,14 @@ object Pipeline {
       .orderBy("shard", "seq")
   }
 
-  // One WARC fixture per (JVM, sf dir): Common Crawl-layout container
-  // files (member-per-record gzip) carrying the txWebCurate pages as
-  // HTTP responses, with three deterministic fault plants — a
-  // malformed version line (doc_id ≡ 3 mod 7), a 404 status (doc_id ≡
-  // 0 mod 11), and one torn trailing member on the g=5 shard.
-  private val warcReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
+  // One WARC [[fixture]]: Common Crawl-layout container files
+  // (member-per-record gzip) carrying the txWebCurate pages as HTTP
+  // responses, with three deterministic fault plants — a malformed
+  // version line (doc_id ≡ 3 mod 7), a 404 status (doc_id ≡ 0 mod 11),
+  // and one torn trailing member on the g=5 shard.
   private def warcFixture(s: SparkSession, dir: String): String =
-    warcReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-warc").toString
-      syntheticPages(s, d)
+    fixture("src_warc", dir) { p =>
+      syntheticPages(s, dir)
         .select(col("doc_id"), pmod(col("doc_id"), lit(8)).cast("int").as("g"),
           col("html"))
         .repartition(8, col("g"))
@@ -2765,7 +2712,7 @@ object Pipeline {
           finish()
         }
       p
-    })
+    }
 
   /** WARC ingest with quarantine ([[graft.sources.Warc]]) — the Common
     * Crawl container front door. The fixture serializes the corpus as
@@ -2898,8 +2845,6 @@ object Pipeline {
       .orderBy("id_a", "id_b")
   }
 
-  private val invidxReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Inverted-index point lookup ([[graft.sources.InvertedIndex]]):
     * documents containing BOTH query terms, resolved from the
     * range-clustered postings layout — covering files from the
@@ -2908,12 +2853,12 @@ object Pipeline {
     * files were skipped.
     */
   def srcInvidx(s: SparkSession, dir: String): DataFrame = {
-    val path = invidxReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-invidx").toString + "/ix"
+    val path = fixture("src_invidx", dir) { f =>
+      val p = f + "/ix"
       graft.sources.InvertedIndex.write(
-        Tables.documents(s, d), p, "doc_id", "text", nFiles = 16)
+        Tables.documents(s, dir), p, "doc_id", "text", nFiles = 16)
       p
-    })
+    }
     graft.sources.InvertedIndex.docsWithAll(s, path, Seq("join", "vector"))
       .orderBy("doc_id")
   }
@@ -3022,8 +2967,6 @@ object Pipeline {
     graft.ops.Probe.ols2(docs, cnt(' '), cnt('e'), length(col("text")))
   }
 
-  private val bloomskipReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Per-file Bloom-index point lookup ([[graft.sources.BloomManifest]]):
     * documents clustered on doc_id, bloom-indexed on the CONTENT hash —
     * a column the layout can't range-prune — then five content probes
@@ -3032,15 +2975,15 @@ object Pipeline {
     * that files were actually skipped.
     */
   def srcBloomskip(s: SparkSession, dir: String): DataFrame = {
-    val path = bloomskipReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-bloomskip").toString + "/docs"
+    val path = fixture("src_bloomskip", dir) { f =>
+      val p = f + "/docs"
       graft.sources.BloomManifest.write(
-        Tables.documents(s, d)
+        Tables.documents(s, dir)
           .select(col("doc_id"), col("source"),
             substring(md5(col("text")), 1, 16).as("content_key")),
         p, clusterCol = "doc_id", lookupCol = "content_key", nFiles = 16)
       p
-    })
+    }
     val probes = Tables.documents(s, dir)
       .filter(col("doc_id").isin(7L, 123L, 251L, 384L, 449L))
       .select(substring(md5(col("text")), 1, 16).as("k"))
@@ -3050,15 +2993,13 @@ object Pipeline {
       .orderBy("doc_id")
   }
 
-  private val timetravelReady = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Build-once versioned fixture shared by src_timetravel and the CDF
     * entry (the CDF only needs the path, not the summary scans).
     */
   private def timetravelFixture(s: SparkSession, dir: String): String =
-    timetravelReady.computeIfAbsent(dir, { d =>
-      val p = java.nio.file.Files.createTempDirectory("graft-timetravel").toString + "/docs"
-      val base = Tables.documents(s, d).select(col("doc_id"), col("source"), col("text"))
+    fixture("src_timetravel", dir) { f =>
+      val p = f + "/docs"
+      val base = Tables.documents(s, dir).select(col("doc_id"), col("source"), col("text"))
       graft.sources.TimeTravel.init(base, p, "doc_id", nBuckets = 16)
       val m = col("doc_id") % 10
       val b1 = base.filter(m === 0).select(lit("D").as("op"), col("doc_id"),
@@ -3071,7 +3012,7 @@ object Pipeline {
         concat(lit("new "), col("doc_id") + 20000000L).as("text"), lit(1L).as("seq"))
       graft.sources.TimeTravel.commit(s, p, b2, "doc_id", "op", "seq")
       p
-    })
+    }
 
   /** Snapshot time travel ([[graft.sources.TimeTravel]]): v0 = the
     * documents table, v1 = a CDC batch (deletes + updates), v2 = an

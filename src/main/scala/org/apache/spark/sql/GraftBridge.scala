@@ -8,8 +8,9 @@ import org.apache.spark.sql.types.{AbstractDataType, DataType}
 /** Narrow bridge to `private[sql]` Spark internals graft needs:
   * Column⇄Expression conversion (for the typed DSL),
   * AbstractDataType.acceptsType (for expression type checks), frames
-  * over a logical plan (for `graft.ops.Pins`) and a session's
-  * extensions (for `GraftSession.enable`).
+  * over a logical plan (for `graft.ops.Pins`), a session's extensions
+  * (for `GraftSession.enable`) and Spark's self-deleting temp
+  * directory (for `graft.queries.scratchRoot`).
   */
 object GraftBridge {
   def column(e: Expression): Column   = ExpressionUtils.column(e)
@@ -58,4 +59,11 @@ object GraftBridge {
     */
   def drainListenerBus(spark: SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** A new `<prefix>-<uuid>` directory in `java.io.tmpdir`, registered
+    * with Spark's shutdown-delete list: it is removed when the JVM
+    * exits, after the SparkContext stops.
+    */
+  def tempDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(namePrefix = prefix)
 }

@@ -49,7 +49,7 @@ class GraftSessionSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("enable on a session built without graft: the extent pushdown reaches the parquet scan") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-enable").toString + "/boxes"
+    val dir = scratch("graft-enable") + "/boxes"
     spark.range(100).select(col("id"), st.extentFromGeom(st.makeBBOX(
       col("id").cast("double"), col("id").cast("double"),
       col("id").cast("double") + 1, col("id").cast("double") + 1)).as("extent"))

@@ -70,7 +70,7 @@ class ReferenceParitySpec extends AnyFunSuite with SparkTestSession with Matcher
   test("ST_Intersects filters a parquet copy to the same 5 rows, with pushed extent ranges") {
     assume(haveReference)
     // STIndexSpec's parquet variant: same corpus through the columnar path
-    val pq = java.nio.file.Files.createTempDirectory("graft-parity").toString + "/polygons"
+    val pq = scratch("graft-parity") + "/polygons"
     polygons.withColumn("bbox", st.extentFromGeom(col("geom")))
       .drop("geom").withColumn("geom", st.geomFromWKT(col("wkt")))
       .write.mode("overwrite").parquet(pq)

@@ -9,6 +9,12 @@ trait SparkTestSession extends BeforeAndAfterAll { self: Suite =>
 
   lazy val spark: SparkSession = SparkTestSession.session
 
+  /** A fresh directory whose name starts with `prefix`, under graft's
+    * per-JVM scratch root (the one query fixtures live under), which
+    * Spark deletes when the test JVM exits.
+    */
+  def scratch(prefix: String): String = graft.queries.scratchDir(prefix)
+
   override def afterAll(): Unit = super.afterAll()
 }
 

@@ -82,7 +82,7 @@ class GeomFnSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   test("geometry columns round-trip through parquet as UDT") {
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-udt").toString
+    val tmp = scratch("graft-udt")
     spark.range(10).select(col("id"),
         st.makePoint(col("id").cast("double"), lit(1.0)).as("geom"))
       .write.mode("overwrite").parquet(s"$tmp/pts")

@@ -2,10 +2,11 @@ package graft.geom
 
 import java.nio.ByteOrder
 
+import graft.SparkTestSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-class NTv2Spec extends AnyFunSuite with Matchers {
+class NTv2Spec extends AnyFunSuite with SparkTestSession with Matchers {
 
   // A CONUS-window grid (lat 25..49°N, lon 125..67°W — NTv2 stores
   // arc-seconds positive WEST) with 1° cells and a shift field that is
@@ -155,7 +156,7 @@ class NTv2Spec extends AnyFunSuite with Matchers {
   }
 
   test("proj4 +nadgrids parses to a GridShifted CRS and guards compose") {
-    val dir = java.nio.file.Files.createTempDirectory("ntv2spec")
+    val dir = java.nio.file.Path.of(scratch("ntv2spec"))
     val path = dir.resolve("test.gsb")
     java.nio.file.Files.write(path, NTv2.write(bilinearGrid))
     val crs = Projections.parseCrs(s"+proj=longlat +ellps=clrk66 +nadgrids=$path")

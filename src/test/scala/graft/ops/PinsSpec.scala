@@ -72,7 +72,7 @@ class PinsSpec extends AnyFunSuite with SparkTestSession with Matchers {
         seen.add(Pins.reusable(b)); ()
       }
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-pins-fb").toString)
+        scratch("graft-pins-fb"))
       .start()
     try {
       input.addData(1L, 2L, 3L)

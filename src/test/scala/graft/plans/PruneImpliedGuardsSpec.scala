@@ -84,7 +84,7 @@ class PruneImpliedGuardsSpec extends AnyFunSuite with SparkTestSession with Matc
     * below) or a few words, cycling.
     */
   private lazy val docs: DataFrame = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-guards").toString + "/docs"
+    val dir = scratch("graft-guards") + "/docs"
     spark.range(12).select(col("id"),
       when(col("id") % 3 === 0, lit(null).cast("string"))
         .when(col("id") % 3 === 1, lit(""))

@@ -13,7 +13,7 @@ import org.scalatest.matchers.should.Matchers
 class PushdownSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   private lazy val extentParquet: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-extents").toString + "/boxes"
+    val dir = scratch("graft-extents") + "/boxes"
     spark.range(1000).select(
       col("id"),
       st.extentFromGeom(st.makeBBOX(

@@ -16,7 +16,7 @@ import org.scalatest.matchers.should.Matchers
 class AnnLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   private lazy val path = {
-    val p = java.nio.file.Files.createTempDirectory("graft-annlayout-spec").toString + "/ivf"
+    val p = scratch("graft-annlayout-spec") + "/ivf"
     AnnLayout.build(Tables.embeddings(spark, sfDir), "vec_id", "embedding",
       p, nlist = 8, iters = 2, seed = 7)
     p
@@ -56,14 +56,14 @@ class AnnLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   test("streaming append: new vectors land in their cells and serve immediately, exactly like a batch rebuild") {
     // a private copy of the layout so the append doesn't perturb the shared fixture
-    val p2 = java.nio.file.Files.createTempDirectory("graft-annlayout-app").toString + "/ivf"
+    val p2 = scratch("graft-annlayout-app") + "/ivf"
     val base = Tables.embeddings(spark, sfDir)
     AnnLayout.build(base, "vec_id", "embedding", p2, nlist = 8, iters = 2, seed = 7)
     val spark0 = spark
     import spark0.implicits._
     val input = MemoryStream[(Long, Seq[Double])](spark)
     val stream = input.toDF().toDF("vec_id", "embedding")
-    val ck = java.nio.file.Files.createTempDirectory("graft-annlayout-ck").toString
+    val ck = scratch("graft-annlayout-ck")
     val q = AnnLayout.appendStream(spark, p2, stream, "vec_id", "embedding", ck)
     try {
       // two arriving micro-batches of new vectors (ids far above the corpus)
@@ -92,7 +92,7 @@ class AnnLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("PQ layout: persisted codes reproduce the in-memory ivfPqTopK exactly; codes-only ADC scan") {
-    val p2 = java.nio.file.Files.createTempDirectory("graft-pqlayout-spec").toString + "/ivfpq"
+    val p2 = scratch("graft-pqlayout-spec") + "/ivfpq"
     val base = Tables.embeddings(spark, sfDir)
     AnnLayout.buildPq(base, "vec_id", "embedding", p2,
       nlist = 8, m = 8, ksub = 16, iters = 2, seed = 7)
@@ -119,7 +119,7 @@ class AnnLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   test("compactCells: stream-append litter compacts away, cells and results unchanged") {
     val base = Tables.embeddings(spark, sfDir)
-    val p2 = java.nio.file.Files.createTempDirectory("graft-annlayout-cpt").toString + "/ivf"
+    val p2 = scratch("graft-annlayout-cpt") + "/ivf"
     AnnLayout.build(base, "vec_id", "embedding", p2, nlist = 8, iters = 2, seed = 7)
     // litter the cells with three tiny appended batches (the streaming
     // aftermath compaction exists for)
@@ -141,7 +141,7 @@ class AnnLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
       walk(new java.io.File(root))
     }
     val before = partFiles(p2 + "/vectors")
-    val dest = java.nio.file.Files.createTempDirectory("graft-annlayout-cptd").toString + "/ivf"
+    val dest = scratch("graft-annlayout-cptd") + "/ivf"
     AnnLayout.compactCells(spark, p2, dest, targetRows = 200L)
     val after = partFiles(dest + "/vectors")
     after should be < before
@@ -155,7 +155,7 @@ class AnnLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   test("delete: tombstoned ids vanish from topK; full-probe == brute force over the SURVIVING corpus; compaction applies them physically") {
     val base = Tables.embeddings(spark, sfDir)
-    val p2 = java.nio.file.Files.createTempDirectory("graft-annlayout-del").toString + "/ivf"
+    val p2 = scratch("graft-annlayout-del") + "/ivf"
     AnnLayout.build(base, "vec_id", "embedding", p2, nlist = 8, iters = 2, seed = 7)
     // delete every 7th vector — across cells, including some true top-k members
     val doomed = base.filter(col("vec_id") % 7 === 0).select(col("vec_id"))
@@ -174,7 +174,7 @@ class AnnLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
         queries, "vec_id", "embedding", k = 10))
     // merge-on-write: compaction drops the rows, dest has no tombstones,
     // results unchanged
-    val dest = java.nio.file.Files.createTempDirectory("graft-annlayout-deld").toString + "/ivf"
+    val dest = scratch("graft-annlayout-deld") + "/ivf"
     AnnLayout.compactCells(spark, p2, dest, targetRows = 200L)
     new java.io.File(dest + "/tombstones").exists() shouldBe false
     spark.read.parquet(dest + "/vectors").count() shouldBe survivors2.count()
@@ -185,7 +185,7 @@ class AnnLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   test("delete: the PQ serving path honors tombstones too") {
     val base = Tables.embeddings(spark, sfDir)
-    val p2 = java.nio.file.Files.createTempDirectory("graft-pqlayout-del").toString + "/ivfpq"
+    val p2 = scratch("graft-pqlayout-del") + "/ivfpq"
     AnnLayout.buildPq(base, "vec_id", "embedding", p2,
       nlist = 8, m = 8, ksub = 16, iters = 2, seed = 7)
     AnnLayout.delete(spark, p2,

@@ -8,7 +8,7 @@ import org.scalatest.matchers.should.Matchers
 class BloomManifestSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   private lazy val path = {
-    val p = java.nio.file.Files.createTempDirectory("graft-bloomtest").toString + "/docs"
+    val p = scratch("graft-bloomtest") + "/docs"
     BloomManifest.write(
       Tables.documents(spark, sfDir)
         .select(col("doc_id"), substring(md5(col("text")), 1, 16).as("ck")),

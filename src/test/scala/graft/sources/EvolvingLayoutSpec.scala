@@ -23,7 +23,7 @@ class EvolvingLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers
   import org.apache.spark.sql.Row
 
   test("added column reads as null for old files; new files carry it") {
-    val p = java.nio.file.Files.createTempDirectory("graft-evolve-spec").toString + "/t"
+    val p = scratch("graft-evolve-spec") + "/t"
     EvolvingLayout.append(
       mk((0L until 50L).map(i => Row(i, s"v$i")), "id" -> LongType, "v" -> StringType), p)
     EvolvingLayout.append(
@@ -37,7 +37,7 @@ class EvolvingLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers
   }
 
   test("column-type redefinition fails loudly at plan time, not silently") {
-    val p = java.nio.file.Files.createTempDirectory("graft-evolve-bad").toString + "/t"
+    val p = scratch("graft-evolve-bad") + "/t"
     EvolvingLayout.append(mk(Seq(Row(1L, 2L)), "id" -> LongType, "v" -> LongType), p)
     EvolvingLayout.append(mk(Seq(Row(2L, "s")), "id" -> LongType, "v" -> StringType), p)
     an[Exception] should be thrownBy EvolvingLayout.read(spark, p).collect()

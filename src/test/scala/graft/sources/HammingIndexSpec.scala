@@ -25,7 +25,7 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   private lazy val batch = hashes.filter(col("doc_id") % 4 === 0)
 
   private lazy val path = {
-    val p = java.nio.file.Files.createTempDirectory("graft-hmix").toString + "/ix"
+    val p = scratch("graft-hmix") + "/ix"
     HammingIndex.build(history, "doc_id", "sig", p,
       pieces = 8, nPostingFiles = 32, nDocFiles = 8)
     p
@@ -74,7 +74,7 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("append: day-2 probe pairs against appended day-1 docs; n_hashes param grows") {
-    val p2 = java.nio.file.Files.createTempDirectory("graft-hmix-app").toString + "/ix"
+    val p2 = scratch("graft-hmix-app") + "/ix"
     val hist = hashes.filter(col("doc_id") % 4 === 2 || col("doc_id") % 4 === 3)
     val day1 = hashes.filter(col("doc_id") % 4 === 1)
     val day2 = hashes.filter(col("doc_id") % 4 === 0)
@@ -94,7 +94,7 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("delete: tombstoned history docs stop pairing; compact drops them physically and answers identically") {
-    val p2 = java.nio.file.Files.createTempDirectory("graft-hmix-del").toString + "/ix"
+    val p2 = scratch("graft-hmix-del") + "/ix"
     HammingIndex.build(history, "doc_id", "sig", p2,
       pieces = 8, nPostingFiles = 16, nDocFiles = 4)
     // a handle opened BEFORE the delete: external deletes are safe,
@@ -109,7 +109,7 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     probed.exists(p => p._1 % 4 == 1 || p._2 % 4 == 1) shouldBe false
     pairSet(opened.probe(batch, "doc_id", "sig",
       maxDist = 3, maxBucket = -1)) shouldBe probed
-    val dest = java.nio.file.Files.createTempDirectory("graft-hmix-deld").toString + "/ix"
+    val dest = scratch("graft-hmix-deld") + "/ix"
     HammingIndex.compact(spark, p2, dest, nPostingFiles = 8, nDocFiles = 2)
     new java.io.File(dest + "/tombstones").exists() shouldBe false
     pairSet(new HammingIndex.Maintainer(spark, dest).probe(batch, "doc_id", "sig",
@@ -123,7 +123,7 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   test("compact publishes only committed rows: an abandoned append's files stay invisible") {
     import spark.implicits._
-    val p2 = java.nio.file.Files.createTempDirectory("graft-hmix-crash").toString + "/ix"
+    val p2 = scratch("graft-hmix-crash") + "/ix"
     HammingIndex.build(history, "doc_id", "sig", p2,
       pieces = 8, nPostingFiles = 8, nDocFiles = 4)
     // an append that crashed after landing its docs and postings data
@@ -146,7 +146,7 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
         .probe(nearCopies, "doc_id", "sig", maxDist = 3, maxBucket = -1))
       .filter(p => p._1 >= 800000L || p._2 >= 800000L)
     namesAbandoned(p2) shouldBe empty
-    val dest = java.nio.file.Files.createTempDirectory("graft-hmix-crashd").toString + "/ix"
+    val dest = scratch("graft-hmix-crashd") + "/ix"
     HammingIndex.compact(spark, p2, dest, nPostingFiles = 8, nDocFiles = 2)
     namesAbandoned(dest) shouldBe empty
     // the near-copies do pair with those ids once the batch is really
@@ -158,7 +158,7 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("Maintainer: an appended handle == a freshly opened handle through a probe→append→probe cycle") {
-    val p2 = java.nio.file.Files.createTempDirectory("graft-hmix-mnt").toString + "/ix"
+    val p2 = scratch("graft-hmix-mnt") + "/ix"
     val hist = hashes.filter(col("doc_id") % 4 === 2 || col("doc_id") % 4 === 3)
     val day1 = hashes.filter(col("doc_id") % 4 === 1)
     val day2 = hashes.filter(col("doc_id") % 4 === 0)
@@ -188,7 +188,7 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     // 40 distinct hashes all sharing chunk 0 (low byte 0x2A) — a
     // degenerate band — plus an exact-dup family on one hash
     val boiler = (0L until 40L).map(i => (i, (i << 8) | 0x2AL))
-    val p2 = java.nio.file.Files.createTempDirectory("graft-hmix-cap").toString + "/ix"
+    val p2 = scratch("graft-hmix-cap") + "/ix"
     HammingIndex.build(boiler.toDF("doc_id", "sig"), "doc_id", "sig", p2,
       pieces = 8, nPostingFiles = 4, nDocFiles = 2)
     // batch: an exact copy of hash 0 (dist-0) and a neighbor whose
@@ -223,7 +223,7 @@ class HammingIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
       (1L, h(1, 2, 3)), (2L, h(1, 2, 9)),   // dist ≤ 2 of batch probes
       (3L, h(7, 7, 7)), (4L, h(1, 9, 3)),
       (5L, h(40, 50, 60))).toDF("doc_id", "sig")
-    val p3 = java.nio.file.Files.createTempDirectory("graft-hmix-sel").toString + "/ix"
+    val p3 = scratch("graft-hmix-sel") + "/ix"
     HammingIndex.build(hist2, "doc_id", "sig", p3,
       pieces = 8, nPostingFiles = 4, nDocFiles = 2)
     val batch3 = Seq((100L, h(1, 2, 3)), (101L, h(7, 7, 6))).toDF("doc_id", "sig")

@@ -14,9 +14,6 @@ import scala.jdk.CollectionConverters._
   */
 class IngestSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private val docSchema = StructType(Seq(
     StructField("id", LongType), StructField("txt", StringType)))
 
@@ -27,7 +24,7 @@ class IngestSpec extends AnyFunSuite with SparkTestSession with Matchers {
       Row(3L, "unicode: čžß→𝒳 and backslash \\"),
       Row(4L, null))
     val df = spark.createDataFrame(rows.asJava, docSchema)
-    val p = tmp("graft-jsonl-spec") + "/d"
+    val p = scratch("graft-jsonl-spec") + "/d"
     Jsonl.write(df, p)
     // reference data columns alongside _corrupt (SPARK-21610: a plan
     // touching only the corrupt column is rejected)
@@ -38,7 +35,7 @@ class IngestSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("Jsonl: malformed lines are quarantined with the raw line, parsed rows unaffected") {
-    val p = tmp("graft-jsonl-bad") + "/d"
+    val p = scratch("graft-jsonl-bad") + "/d"
     import spark.implicits._
     Seq(
       """{"id":1,"txt":"good"}""",
@@ -57,7 +54,7 @@ class IngestSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("Compaction: row-preserving, hits ceil(n/target) files, restores key clustering") {
-    val base = tmp("graft-compact-spec")
+    val base = scratch("graft-compact-spec")
     val small = base + "/small"; val big = base + "/big"
     val df = spark.range(1000).select(col("id"), (col("id") * 7 % 100).as("v"))
     df.repartition(32).write.parquet(small)
@@ -80,7 +77,7 @@ class IngestSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("Jsonl.readStream: quarantining ingest equals the batch twin across arriving shards") {
-    val p = tmp("graft-jsonl-stream") + "/in"
+    val p = scratch("graft-jsonl-stream") + "/in"
     new java.io.File(p).mkdirs()
     def shard(name: String, lines: Seq[String]): Unit = {
       val f = java.nio.file.Paths.get(p, name)
@@ -107,7 +104,7 @@ class IngestSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("Compaction: never fewer than one file; tiny inputs collapse to a single file") {
-    val base = tmp("graft-compact-tiny")
+    val base = scratch("graft-compact-tiny")
     val small = base + "/small"; val big = base + "/big"
     spark.range(5).write.parquet(small)
     Compaction.compactByRows(spark, small, big, "id", targetRows = 1000L) shouldBe 1
@@ -121,7 +118,7 @@ class IngestSpec extends AnyFunSuite with SparkTestSession with Matchers {
       Row(3L, "has \"quotes\" inside"),
       Row(4L, null))
     val df = spark.createDataFrame(rows.asJava, docSchema)
-    val p = tmp("graft-csv-spec") + "/d"
+    val p = scratch("graft-csv-spec") + "/d"
     Csv.write(df, p)
     val back = Csv.read(spark, p, docSchema).select("id", "txt", "_corrupt").collect()
     back.count(r => !r.isNullAt(2)) shouldBe 0
@@ -130,7 +127,7 @@ class IngestSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("Csv: a bad FIELD nulls only itself — the row's other fields survive with the raw line") {
-    val p = tmp("graft-csv-bad") + "/d"
+    val p = scratch("graft-csv-bad") + "/d"
     import spark.implicits._
     Seq("1,good", "notanumber,alsotext", "3,fine").toDF("value")
       .repartition(1).write.text(p)
@@ -146,7 +143,7 @@ class IngestSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("Csv.readStream: quarantining ingest equals the batch twin across arriving shards") {
-    val p = tmp("graft-csv-stream") + "/in"
+    val p = scratch("graft-csv-stream") + "/in"
     new java.io.File(p).mkdirs()
     def shard(name: String, lines: Seq[String]): Unit =
       java.nio.file.Files.write(java.nio.file.Paths.get(p, name),
@@ -169,7 +166,7 @@ class IngestSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   test("ORC: write→read preserves values; filters reach the ORC scan as PushedFilters") {
     import spark.implicits._
-    val p = tmp("graft-orc-spec") + "/d"
+    val p = scratch("graft-orc-spec") + "/d"
     val df = (0L until 1000L).map(i => (i, s"row$i", i % 7)).toDF("id", "txt", "grp")
     df.write.orc(p)
     val back = spark.read.orc(p)

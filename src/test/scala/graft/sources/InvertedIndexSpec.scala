@@ -8,7 +8,7 @@ import org.scalatest.matchers.should.Matchers
 class InvertedIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   private lazy val path = {
-    val p = java.nio.file.Files.createTempDirectory("graft-ixspec").toString + "/ix"
+    val p = scratch("graft-ixspec") + "/ix"
     InvertedIndex.write(Tables.documents(spark, sfDir), p, "doc_id", "text", nFiles = 8)
     p
   }

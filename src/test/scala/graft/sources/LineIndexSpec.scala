@@ -18,15 +18,12 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     rows.toDF("id", "text")
   }
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-lineix-spec").toString + "/ix"
-
   private val history = Seq(
     1L -> "seen a\nseen b",
     2L -> "seen c\nseen a")
 
   test("probe equals the in-memory dedupLinesIncremental on the same state") {
-    val path = tmp()
+    val path = scratch("graft-lineix-spec") + "/ix"
     LineIndex.build(df(history: _*), "text", path)
     val batch = df(
       10L -> "seen a\nfresh one\n\nfresh one",
@@ -42,7 +39,7 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("lifecycle probe→append→probe: a line kept in batch 1 drops from batch 2") {
-    val path = tmp()
+    val path = scratch("graft-lineix-spec") + "/ix"
     LineIndex.build(df(history: _*), "text", path)
     val b1 = df(10L -> "seen a\nfresh one")
     val m = new LineIndex.Maintainer(spark, path)
@@ -61,7 +58,7 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("replayed append duplicates digest rows but never flags: bytes, not wrong pairs") {
-    val path = tmp()
+    val path = scratch("graft-lineix-spec") + "/ix"
     LineIndex.build(df(history: _*), "text", path)
     val kept = df(10L -> "fresh one")
     new LineIndex.Maintainer(spark, path).append(kept, "text")
@@ -79,7 +76,7 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("dup-heavy distributed path (maxCollect = 0) equals the collect-and-prune path") {
-    val path = tmp()
+    val path = scratch("graft-lineix-spec") + "/ix"
     LineIndex.build(df(history: _*), "text", path)
     val batch = df(
       10L -> "seen a\nfresh one\nseen b",
@@ -94,7 +91,7 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("compact: re-clusters to nFiles, removes replayed-append duplicates, probes unchanged") {
-    val path = tmp()
+    val path = scratch("graft-lineix-spec") + "/ix"
     LineIndex.build(df(history: _*), "text", path, nFiles = 4)
     val kept = df(10L -> "fresh one")
     new LineIndex.Maintainer(spark, path).append(kept, "text")
@@ -116,7 +113,7 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("definite-novel batches skip the digest files entirely (bloom no = no join)") {
-    val path = tmp()
+    val path = scratch("graft-lineix-spec") + "/ix"
     LineIndex.build(df(history: _*), "text", path)
     // lines absent from history: with overwhelming probability all are
     // bloom-negative at m = 2^23 over 3 lines; the probe must still be
@@ -132,7 +129,7 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     r.orderBy("id").collect().map(_.toSeq).toSeq
 
   test("Maintainer (dup-heavy path): an earlier probe's result survives a later probe on the same handle") {
-    val path = tmp()
+    val path = scratch("graft-lineix-spec") + "/ix"
     LineIndex.build(df(history: _*), "text", path)
     val m = new LineIndex.Maintainer(spark, path)
     val a = df(10L -> "seen a\nfresh one", 11L -> "fresh one\nseen c")
@@ -149,7 +146,7 @@ class LineIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("Maintainer probe loop (dup-heavy path): closing each probe's Pins leaves no persistent RDD behind") {
-    val path = tmp()
+    val path = scratch("graft-lineix-spec") + "/ix"
     LineIndex.build(df(history: _*), "text", path)
     val m = new LineIndex.Maintainer(spark, path)
     val before = spark.sparkContext.getPersistentRDDs.keySet

@@ -21,8 +21,6 @@ class LocalFileSystemSpec extends AnyFunSuite with SparkTestSession with Matcher
 
   private def hadoopConf = spark.sparkContext.hadoopConfiguration
 
-  private def tmpDir(prefix: String): JPath = Files.createTempDirectory(prefix)
-
   private def graftFs(dir: JPath): FileSystem = new Path(dir.toUri).getFileSystem(hadoopConf)
 
   /** Hadoop's stock filesystems, built directly so the JVM-wide
@@ -50,7 +48,7 @@ class LocalFileSystemSpec extends AnyFunSuite with SparkTestSession with Matcher
     */
   private def chmodForks(body: => Unit): Int = {
     val rec = new jdk.jfr.Recording()
-    val dump = Files.createTempFile("graft-forks", ".jfr")
+    val dump = JPath.of(scratch("graft-forks"), "rec.jfr")
     try {
       rec.enable("jdk.ProcessStart")
       rec.start()
@@ -71,7 +69,7 @@ class LocalFileSystemSpec extends AnyFunSuite with SparkTestSession with Matcher
   }
 
   test("the fork count sees Hadoop's own chmod") {
-    val f = Files.createTempFile("graft-chmod", ".bin")
+    val f = Files.createFile(JPath.of(scratch("graft-chmod"), "f.bin"))
     try chmodForks(stockRaw.setPermission(new Path(f.toUri), new FsPermission("640"))) shouldBe 1
     finally Files.delete(f)
   }
@@ -81,13 +79,13 @@ class LocalFileSystemSpec extends AnyFunSuite with SparkTestSession with Matcher
     val rows = Seq.tabulate(2000)(id => (id.toLong, rnd.nextDouble() * 360 - 180, rnd.nextDouble() * 180 - 90))
     val df = spark.createDataFrame(rows).toDF("id", "lon", "lat")
       .withColumn("geom", st.makePoint(col("lon"), col("lat")))
-    val path = tmpDir("graft-forks").toString + "/pts"
+    val path = scratch("graft-forks") + "/pts"
     chmodForks(SpatialLayout.writeZ2(df, "geom", path, level = 12, dirLevel = 3)) shouldBe 0
     spark.read.parquet(path).count() shouldBe 2000
   }
 
   test("setPermission leaves the same modes as Hadoop's RawLocalFileSystem") {
-    val dir = tmpDir("graft-modes")
+    val dir = JPath.of(scratch("graft-modes"))
     val fs = graftFs(dir)
     val raw = stockRaw
     val cases = Seq("600", "640", "644", "700", "750", "755", "777").map(m => (m, false)) :+ ("1777", true)
@@ -105,7 +103,7 @@ class LocalFileSystemSpec extends AnyFunSuite with SparkTestSession with Matcher
   }
 
   test("created files and directories get the same umask-applied modes and .crc sidecars") {
-    val dir = tmpDir("graft-create")
+    val dir = JPath.of(scratch("graft-create"))
     def write(fs: FileSystem, name: String): Unit = {
       val out = fs.create(new Path(dir.resolve(name).toUri.toString + "/sub/data.bin"))
       try out.write(Array.tabulate[Byte](1000)(_.toByte)) finally out.close()
@@ -124,7 +122,7 @@ class LocalFileSystemSpec extends AnyFunSuite with SparkTestSession with Matcher
   }
 
   test("a flipped data byte fails the checksum on read") {
-    val dir = tmpDir("graft-crc")
+    val dir = JPath.of(scratch("graft-crc"))
     val fs = graftFs(dir)
     val p = new Path(dir.resolve("data.bin").toUri)
     val bytes = Array.tabulate[Byte](4096)(_.toByte)

@@ -17,7 +17,7 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   private lazy val batch = docs.filter(col("doc_id") % 4 === 0)
 
   private lazy val path = {
-    val p = java.nio.file.Files.createTempDirectory("graft-mhix").toString + "/ix"
+    val p = scratch("graft-mhix") + "/ix"
     // > bands files so the range clustering splits WITHIN bands — with
     // one file per band a batch (which has a key in every band) could
     // never prune; real deployments run thousands of files over 16 bands
@@ -72,7 +72,7 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("append: day-2 probe pairs against day-1 docs; probe+append == re-band over all three generations") {
-    val p2 = java.nio.file.Files.createTempDirectory("graft-mhix-app").toString + "/ix"
+    val p2 = scratch("graft-mhix-app") + "/ix"
     val hist = docs.filter(col("doc_id") % 4 === 2 || col("doc_id") % 4 === 3)
     val day1 = docs.filter(col("doc_id") % 4 === 1)
     val day2 = docs.filter(col("doc_id") % 4 === 0)
@@ -99,7 +99,7 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("delete: tombstoned history docs stop pairing; probe == re-band over the SURVIVING history; compact applies physically") {
-    val p2 = java.nio.file.Files.createTempDirectory("graft-mhix-del").toString + "/ix"
+    val p2 = scratch("graft-mhix-del") + "/ix"
     val hist = docs.filter(col("doc_id") % 4 =!= 0)
     val batch = docs.filter(col("doc_id") % 4 === 0)
     MinhashIndex.build(hist, "doc_id", "text", p2,
@@ -123,7 +123,7 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
       threshold = 0.8, maxBucket = -1)) shouldBe reband
     // merge-on-write: the compacted index answers identically,
     // tombstone-free, with the params count updated
-    val dest = java.nio.file.Files.createTempDirectory("graft-mhix-deld").toString + "/ix"
+    val dest = scratch("graft-mhix-deld") + "/ix"
     MinhashIndex.compact(spark, p2, dest, nPostingFiles = 16, nDocFiles = 4)
     new java.io.File(dest + "/tombstones").exists() shouldBe false
     VersionedDir.read(spark, s"$dest/params").head().getLong(4) shouldBe
@@ -134,7 +134,7 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   test("compact publishes only committed rows: an abandoned append's files stay invisible") {
     import spark.implicits._
-    val p2 = java.nio.file.Files.createTempDirectory("graft-mhix-crash").toString + "/ix"
+    val p2 = scratch("graft-mhix-crash") + "/ix"
     MinhashIndex.build(history, "doc_id", "text", p2,
       nPostingFiles = 16, nDocFiles = 4)
     // an append that crashed after landing its docs and postings data
@@ -160,7 +160,7 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
         .probe(nearCopies, "doc_id", "text", threshold = 0.8, maxBucket = -1))
       .filter(p => p._1 >= 800000L || p._2 >= 800000L)
     namesAbandoned(p2) shouldBe empty
-    val dest = java.nio.file.Files.createTempDirectory("graft-mhix-crashd").toString + "/ix"
+    val dest = scratch("graft-mhix-crashd") + "/ix"
     MinhashIndex.compact(spark, p2, dest, nPostingFiles = 8, nDocFiles = 2)
     namesAbandoned(dest) shouldBe empty
     VersionedDir.read(spark, s"$dest/params").head().getLong(4) shouldBe history.count()
@@ -173,7 +173,7 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("Maintainer: an appended handle == a freshly opened handle through a probe→append→probe cycle") {
-    val p2 = java.nio.file.Files.createTempDirectory("graft-mhix-mnt").toString + "/ix"
+    val p2 = scratch("graft-mhix-mnt") + "/ix"
     val hist = docs.filter(col("doc_id") % 4 === 2 || col("doc_id") % 4 === 3)
     val day1 = docs.filter(col("doc_id") % 4 === 1)
     val day2 = docs.filter(col("doc_id") % 4 === 0)
@@ -221,7 +221,7 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val clean = Seq(
       (100L, "a genuinely distinctive document about spark catalyst planning today"),
       (101L, "a genuinely distinctive document about spark catalyst planning tomorrow"))
-    val p2 = java.nio.file.Files.createTempDirectory("graft-mhix2").toString + "/ix"
+    val p2 = scratch("graft-mhix2") + "/ix"
     MinhashIndex.build((boiler ++ clean.take(1)).toDF("doc_id", "text"),
       "doc_id", "text", p2, nPostingFiles = 4, nDocFiles = 2)
     val probeBatch = (Seq((200L, boiler.head._2.replace("unique0", "uniqueX")),

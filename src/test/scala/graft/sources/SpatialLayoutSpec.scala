@@ -18,18 +18,15 @@ import org.scalatest.time.SpanSugar._
   */
 class SpatialLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private lazy val layoutPath = {
-    val path = tmpDir("graft-z2") + "/pts"
+    val path = scratch("graft-z2") + "/pts"
     val pts = graft.queries.Spatial.customerPoints(SparkTestSession.session, sfDir)
     SpatialLayout.writeZ2(pts, "geom", path, level = 12, dirLevel = 3)
     path
   }
 
   private def pointLayout(prefix: String, lonLats: Seq[(Double, Double)], dirLevel: Int): String = {
-    val path = tmpDir(prefix) + "/pts"
+    val path = scratch(prefix) + "/pts"
     val rows = lonLats.zipWithIndex.map { case ((lon, lat), id) => (id.toLong, lon, lat) }
     val df = spark.createDataFrame(rows).toDF("id", "lon", "lat")
       .withColumn("geom", st.makePoint(col("lon"), col("lat")))
@@ -133,7 +130,7 @@ class SpatialLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers 
         java.util.Arrays.asList(rows: _*),
         StructType(Seq(StructField("id", LongType), StructField("wkt", StringType))))
       .withColumn("geom", st.geomFromWKT(col("wkt"))).drop("wkt")
-    val path = tmpDir("graft-z2poly") + "/polys"
+    val path = scratch("graft-z2poly") + "/polys"
     SpatialLayout.writeZ2(df, "geom", path, level = 12, dirLevel = 3)
     path
   }

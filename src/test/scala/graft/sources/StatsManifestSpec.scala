@@ -18,7 +18,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestSession with Matchers 
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("payload", org.apache.spark.sql.types.StringType))))
-    val p = java.nio.file.Files.createTempDirectory("graft-skip-spec").toString + "/t"
+    val p = scratch("graft-skip-spec") + "/t"
     StatsManifest.write(d, p, "id", nFiles = 10)
     (p, d)
   }
@@ -59,7 +59,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestSession with Matchers 
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("payload", org.apache.spark.sql.types.StringType))))
-    val p = java.nio.file.Files.createTempDirectory("graft-skip-app").toString + "/t"
+    val p = scratch("graft-skip-app") + "/t"
     StatsManifest.write(d, p, "id", nFiles = 5)
     val before = StatsManifest.manifest(spark, p).count()
     // delta overlaps the resident range (ids 250..749)
@@ -85,7 +85,7 @@ class StatsManifestSpec extends AnyFunSuite with SparkTestSession with Matchers 
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("payload", org.apache.spark.sql.types.StringType))))
-    val p = java.nio.file.Files.createTempDirectory("graft-skip-torn").toString + "/t"
+    val p = scratch("graft-skip-torn") + "/t"
     StatsManifest.write(d, p, "id", nFiles = 3)
     val committed = StatsManifest.manifest(spark, p).collect().toSet
 

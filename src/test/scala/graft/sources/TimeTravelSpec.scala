@@ -8,7 +8,7 @@ import org.scalatest.matchers.should.Matchers
 class TimeTravelSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   private lazy val fixture: String = {
-    val p = java.nio.file.Files.createTempDirectory("graft-ttspec").toString + "/t"
+    val p = scratch("graft-ttspec") + "/t"
     import spark.implicits._
     val base = (0L until 100L).map(i => (i, s"text $i")).toDF("id", "payload")
     TimeTravel.init(base, p, "id", nBuckets = 8)
@@ -61,7 +61,7 @@ class TimeTravelSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   test("a changeset deleting every surviving row of its buckets keeps the snapshot readable") {
     import spark.implicits._
-    val p = java.nio.file.Files.createTempDirectory("graft-ttempty").toString + "/t"
+    val p = scratch("graft-ttempty") + "/t"
     // 2 keys → with 2 buckets they may share one; delete BOTH so every
     // touched bucket ends up with zero survivors
     TimeTravel.init(Seq((1L, "a"), (2L, "b")).toDF("id", "payload"),
@@ -84,7 +84,7 @@ class TimeTravelSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   test("vacuum deletes only unreferenced data; shared COW files survive expiry") {
     // an isolated fixture so the shared one stays intact for other tests
-    val p = java.nio.file.Files.createTempDirectory("graft-ttvac").toString + "/t"
+    val p = scratch("graft-ttvac") + "/t"
     import spark.implicits._
     val base = (0L until 100L).map(i => (i, s"text $i")).toDF("id", "payload")
     TimeTravel.init(base, p, "id", nBuckets = 8)
@@ -107,7 +107,7 @@ class TimeTravelSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("vacuum drops a fully-superseded version's directory") {
-    val p = java.nio.file.Files.createTempDirectory("graft-ttvac2").toString + "/t"
+    val p = scratch("graft-ttvac2") + "/t"
     import spark.implicits._
     val base = (0L until 100L).map(i => (i, s"text $i")).toDF("id", "payload")
     TimeTravel.init(base, p, "id", nBuckets = 8)

@@ -121,7 +121,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession with Matchers {
     // FileSystem.open streaming path needs one record + fixed buffers.
     val n = 2000
     val bodyLen = 80 * 1024
-    val f = java.nio.file.Files.createTempFile("graft-warc-big", ".warc.gz")
+    val f = java.nio.file.Path.of(scratch("graft-warc-big"), "big.warc.gz")
     val out = new java.io.BufferedOutputStream(
       java.nio.file.Files.newOutputStream(f), 1 << 20)
     val rnd = new java.util.Random(42)
@@ -197,7 +197,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("Spark batch read: per-file rows with src attribution") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc").toString
+    val dir = scratch("graft-warc")
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "a.warc.gz"),
       concat(Warc.gzipMember(resp(1, "<p>a</p>")), Warc.gzipMember(resp(2, "<p>b</p>"))))
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "b.warc.gz"),
@@ -213,7 +213,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   test("write → read roundtrip: WET egress comes back byte-for-byte, one file per partition") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-write").toString + "/out"
+    val dir = scratch("graft-warc-write") + "/out"
     val docs = Seq(
       (1L, "curated text one\nsecond line"),
       (2L, "unicode survives: čžß→𝒳"),
@@ -240,7 +240,7 @@ class WarcSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("readStream == batch across arriving shards (quarantine rows included)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-stream").toString
+    val dir = scratch("graft-warc-stream")
     val m2 = Warc.gzipMember(resp(2, "<p>two</p>"))
     java.nio.file.Files.write(java.nio.file.Paths.get(dir, "s1.warc.gz"),
       Warc.gzipMember(resp(1, "<p>one</p>")))

@@ -21,8 +21,6 @@ class ZOrderLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
       .toDF("a", "b", "payload")
   }
 
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString + "/t"
-
   /** Mean per-file (max−min) span of `c`, over the part files of `path`. */
   private def meanSpan(path: String, c: String): Double = {
     val files = new java.io.File(path).listFiles()
@@ -36,9 +34,9 @@ class ZOrderLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("z-order clusters BOTH axes; a linear sort clusters only its leading column") {
-    val zpath = tmp("graft-zorder-spec")
+    val zpath = scratch("graft-zorder-spec") + "/t"
     ZOrderLayout.writeZOrdered(df, zpath, Seq("a", "b"), parts = 16)
-    val lpath = tmp("graft-zorder-linear")
+    val lpath = scratch("graft-zorder-linear") + "/t"
     df.repartitionByRange(16, col("a")).sortWithinPartitions("a")
       .write.mode("overwrite").parquet(lpath)
 
@@ -58,7 +56,7 @@ class ZOrderLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
   }
 
   test("range predicates on either axis reach the scan as PushedFilters") {
-    val zpath = tmp("graft-zorder-push")
+    val zpath = scratch("graft-zorder-push") + "/t"
     ZOrderLayout.writeZOrdered(df, zpath, Seq("a", "b"), parts = 8)
     val q = ZOrderLayout.read(spark, zpath)
       .filter(col("a") >= 100L && col("a") <= 200L && col("b") >= 5000L && col("b") <= 6000L)
@@ -77,12 +75,12 @@ class ZOrderLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
   test("degenerate axes: constant column and k×bits bound fail loudly or behave") {
     // constant column → span 0 → every row grid 0: still writes and roundtrips
-    val cpath = tmp("graft-zorder-const")
+    val cpath = scratch("graft-zorder-const") + "/t"
     val cdf = df.withColumn("c", lit(7L))
     ZOrderLayout.writeZOrdered(cdf, cpath, Seq("a", "c"), parts = 4)
     ZOrderLayout.read(spark, cpath).count() shouldBe 10000L
     // too many bits for one long must be rejected
     an[IllegalArgumentException] should be thrownBy
-      ZOrderLayout.writeZOrdered(df, tmp("x"), Seq("a", "b"), parts = 4, bits = 40)
+      ZOrderLayout.writeZOrdered(df, scratch("x") + "/t", Seq("a", "b"), parts = 4, bits = 40)
   }
 }

@@ -31,7 +31,7 @@ class NearDupStreamSpec extends AnyFunSuite with SparkTestSession with Matchers 
     val t2 = docs.filter(col("doc_id") % 4 === 0)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
 
-    val path = java.nio.file.Files.createTempDirectory("graft-nds").toString + "/ix"
+    val path = scratch("graft-nds") + "/ix"
     MinhashIndex.build(hist, "doc_id", "text", path,
       nPostingFiles = 32, nDocFiles = 8)
     val histLabels = Dedup.connectedComponents(
@@ -42,7 +42,7 @@ class NearDupStreamSpec extends AnyFunSuite with SparkTestSession with Matchers 
 
     val input = MemoryStream[(Long, String)](spark)
     val q = nds.start(input.toDF().toDF("doc_id", "text"),
-      java.nio.file.Files.createTempDirectory("graft-nds-ck").toString)
+      scratch("graft-nds-ck"))
     try {
       var seen = hist
       for (batch <- Seq(t1, t2)) {
@@ -68,7 +68,7 @@ class NearDupStreamSpec extends AnyFunSuite with SparkTestSession with Matchers 
     import spark0.implicits._
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
     val hist = docs.filter(col("doc_id") % 2 === 0)
-    val path = java.nio.file.Files.createTempDirectory("graft-nds-leak").toString + "/ix"
+    val path = scratch("graft-nds-leak") + "/ix"
     MinhashIndex.build(hist, "doc_id", "text", path,
       nPostingFiles = 16, nDocFiles = 4)
     val nds = NearDupStream.empty(spark, path, "doc_id", "text")

@@ -49,7 +49,7 @@ class SigDupStreamSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val t2 = sigs.filter(col("doc_id") % 4 === 0 && col("doc_id") < 900000L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
 
-    val path = java.nio.file.Files.createTempDirectory("graft-sds").toString + "/ix"
+    val path = scratch("graft-sds") + "/ix"
     HammingIndex.build(hist, "doc_id", "sig", path,
       pieces = 8, nPostingFiles = 32, nDocFiles = 8)
     val sds = SigDupStream(spark, path, "doc_id", "sig",
@@ -57,7 +57,7 @@ class SigDupStreamSpec extends AnyFunSuite with SparkTestSession with Matchers {
 
     val input = MemoryStream[(Long, Long)](spark)
     val q = sds.start(input.toDF().toDF("doc_id", "sig"),
-      java.nio.file.Files.createTempDirectory("graft-sds-ck").toString)
+      scratch("graft-sds-ck"))
     try {
       var seen = hist
       for (batch <- Seq(t1, t2)) {
@@ -83,7 +83,7 @@ class SigDupStreamSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val sigs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), Dedup.simhash64("text").as("sig"))
     val hist = sigs.filter(col("doc_id") % 2 === 0)
-    val path = java.nio.file.Files.createTempDirectory("graft-sds-leak").toString + "/ix"
+    val path = scratch("graft-sds-leak") + "/ix"
     HammingIndex.build(hist, "doc_id", "sig", path,
       pieces = 8, nPostingFiles = 16, nDocFiles = 4)
     val sds = SigDupStream.empty(spark, path, "doc_id", "sig")

@@ -158,8 +158,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val spark0 = spark
     import spark0.implicits._
     val history = Seq((1L, "seen a\nseen b")).toDF("id", "text")
-    val path = java.nio.file.Files.createTempDirectory("graft-linestream")
-      .toString + "/ix"
+    val path = scratch("graft-linestream") + "/ix"
     graft.sources.LineIndex.build(history, "text", path)
     val stream = new LineDupStream(spark, path, "id", "text")
     val mb1 = Seq((10L, "seen a\nfresh one"), (11L, "fresh one\nfresh two"))
@@ -169,8 +168,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val q = stream.start(input.toDF().toDF("id", "text"),
       b => { got ++= b.orderBy("id").collect()
         .map(r => (r.getAs[Long]("id"), r.getAs[String]("text_dedup"))); () },
-      checkpoint = java.nio.file.Files
-        .createTempDirectory("graft-linestream-ck").toString)
+      checkpoint = scratch("graft-linestream-ck"))
     try {
       input.addData(mb1); q.processAllAvailable()
       input.addData(mb2); q.processAllAvailable()
@@ -203,10 +201,9 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession with Matchers {
     // .warc.gz shards → Warc.readStream parses per micro-batch →
     // LineDupStream probes/dedups/appends against the durable LineIndex
     val history = Seq((1L, "seen a\nseen b")).toDF("id", "text")
-    val ixPath = java.nio.file.Files.createTempDirectory("graft-warcline")
-      .toString + "/ix"
+    val ixPath = scratch("graft-warcline") + "/ix"
     graft.sources.LineIndex.build(history, "text", ixPath)
-    val shardDir = java.nio.file.Files.createTempDirectory("graft-warcline-in").toString
+    val shardDir = scratch("graft-warcline-in")
     def writeShard(name: String, recs: Seq[(Long, String)]): Unit = {
       val out = new java.io.ByteArrayOutputStream()
       recs.foreach { case (id, text) =>
@@ -228,8 +225,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val q = stream.start(docs,
       b => { got ++= b.orderBy("id").collect()
         .map(r => (r.getAs[Long]("id"), r.getAs[String]("text_dedup"))); () },
-      checkpoint = java.nio.file.Files
-        .createTempDirectory("graft-warcline-ck").toString)
+      checkpoint = scratch("graft-warcline-ck"))
     try {
       q.processAllAvailable()
       // shard 2 arrives mid-stream: its "fresh one" was first kept in
@@ -527,7 +523,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession with Matchers {
     val input = MemoryStream[(Long, Long)](spark)
     val cc = CcStream.empty(spark)
     val q = cc.start(input.toDF().toDF("id_a", "id_b"),
-      java.nio.file.Files.createTempDirectory("graft-ccstream").toString)
+      scratch("graft-ccstream"))
     try {
       var seen = Seq.empty[(Long, Long)]
       for (batch <- Seq(t1, t2, t3)) {
@@ -567,8 +563,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestSession with Matchers {
   test("LineDupStream releases each trigger's pins: persisted RDDs stay bounded by the last result (dup-heavy path)") {
     val spark0 = spark
     import spark0.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-linestream-leak")
-      .toString + "/ix"
+    val path = scratch("graft-linestream-leak") + "/ix"
     graft.sources.LineIndex.build(
       Seq((1L, "seen a\nseen b")).toDF("id", "text"), "text", path)
     // maxCollect = 0: every trigger's history hit takes the probe's
