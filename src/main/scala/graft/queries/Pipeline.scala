@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.ops.{Ann, Dedup, Graph, Multimodal, Pins, Text}
-import graft.sources.Tables
+import graft.sources.{Parquet, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1922,7 +1922,7 @@ object Pipeline {
       (small, big)
     }
     def summary(path: String, label: String): DataFrame =
-      s.read.parquet(path).agg(
+      Parquet.read(s, path).agg(
           count(lit(1)).as("n_rows"),
           countDistinct(md5(col("text"))).as("n_distinct_text"),
           sum(conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long"))

@@ -114,11 +114,11 @@ object AnnLayout {
              queries: DataFrame, qidCol: String, qvecCol: String,
              k: Int, nprobe: Int = 0, refine: Int = 10): DataFrame = {
     import graft.functions.FunctionDefs.{call, callAgg}
-    val centRows = s.read.parquet(s"$path/centroids").orderBy("list").collect()
+    val centRows = Parquet.read(s, s"$path/centroids").orderBy("list").collect()
     // nprobe = 0 → nlist/16 (the layout knows its own nlist)
     val np = if (nprobe > 0) nprobe else Ann.defaultNprobe(centRows.length)
     val cent = typedlit(centRows.map(_.getSeq[Double](1)).toSeq)
-    val cb = s.read.parquet(s"$path/codebooks").head()
+    val cb = Parquet.read(s, s"$path/codebooks").head()
     val m = cb.getInt(0)
     val flatLit = typedlit(cb.getSeq[Double](3))
 
@@ -134,7 +134,7 @@ object AnnLayout {
           zip_with(col("__qvn"), element_at(cent, col("list") + 1), (x, y) => x * y),
           lit(0.0), (a, x) => a + x))
 
-    val vectors = Tombstones.without(s, path, s.read.parquet(s"$path/vectors"))
+    val vectors = Tombstones.without(s, path, Parquet.read(s, s"$path/vectors"))
     val shortlist = vectors.select("id", "codes", "list")
       .join(broadcast(probes), "list")
       .filter(col("id") =!= col("qid"))
@@ -177,7 +177,7 @@ object AnnLayout {
                    idCol: String, vecCol: String,
                    checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
     import graft.functions.FunctionDefs.call
-    val centRows = s.read.parquet(s"$path/centroids").orderBy("list").collect()
+    val centRows = Parquet.read(s, s"$path/centroids").orderBy("list").collect()
     val cent = typedlit(centRows.map(_.getSeq[Double](1)).toSeq)
     stream.select(col(idCol).as("id"), Vectors.toDouble(col(vecCol)).as("vec"))
       .withColumn("list", call("ivf_assign", col("vec"), cent))
@@ -224,13 +224,13 @@ object AnnLayout {
   def compactCells(s: SparkSession, src: String, dest: String,
                    targetRows: Long): Unit = {
     Tombstones.clear(s, dest)
-    val df = Tombstones.without(s, src, s.read.parquet(s"$src/vectors"))
+    val df = Tombstones.without(s, src, Parquet.read(s, s"$src/vectors"))
     val n = df.count()
     val parts = math.max(1L, (n + targetRows - 1) / targetRows).toInt
     df.repartitionByRange(parts, col("list"), col("id"))
       .write.mode("overwrite").partitionBy("list").parquet(s"$dest/vectors")
     for (t <- Seq("centroids", "codebooks") if FsUtil.exists(s, s"$src/$t"))
-      s.read.parquet(s"$src/$t")
+      Parquet.read(s, s"$src/$t")
         .coalesce(1).write.mode("overwrite").parquet(s"$dest/$t")
   }
 
@@ -245,14 +245,14 @@ object AnnLayout {
            queries: DataFrame, qidCol: String, qvecCol: String,
            k: Int, nprobe: Int = 0): DataFrame = {
     import graft.functions.FunctionDefs.call
-    val centRows = s.read.parquet(s"$path/centroids")
+    val centRows = Parquet.read(s, s"$path/centroids")
       .orderBy("list").collect()
     val np = if (nprobe > 0) nprobe else Ann.defaultNprobe(centRows.length)
     val cent = typedlit(centRows.map(_.getSeq[Double](1)).toSeq)
     val probes = queries
       .select(col(qidCol).as("qid"), Vectors.toDouble(col(qvecCol)).as("__qv"))
       .withColumn("list", explode(call("ivf_probes", col("__qv"), cent, lit(np))))
-    val vectors = Tombstones.without(s, path, s.read.parquet(s"$path/vectors"))
+    val vectors = Tombstones.without(s, path, Parquet.read(s, s"$path/vectors"))
     Ann.rankTopK(
       vectors.join(broadcast(probes), "list")
         .filter(col("id") =!= col("qid"))

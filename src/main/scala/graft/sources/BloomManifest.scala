@@ -55,11 +55,11 @@ object BloomManifest {
     val bits =
       if (numBits > 0) numBits
       else {
-        val n = s.read.parquet(path).count() // footer-count, no data read
+        val n = Parquet.read(s, path).count() // footer-count, no data read
         val perFile = math.max(1L, (n + nFiles - 1) / nFiles)
         math.min(1L << 27, math.max(1L << 16, perFile * 10L)).toInt
       }
-    s.read.parquet(path)
+    Parquet.read(s, path)
       .groupBy(input_file_name().as("file"))
       .agg(FunctionDefs.callAgg("bloom_agg",
         xxhash64(col(lookupCol)),
@@ -71,7 +71,7 @@ object BloomManifest {
   }
 
   def manifest(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(s"$path/_bloom")
+    Parquet.read(s, s"$path/_bloom")
 
   /** The files whose bloom admits AT LEAST ONE of the probe values.
     * Membership runs INSIDE the manifest scan (the native

@@ -29,7 +29,7 @@ object Compaction {
     */
   def compactByRows(s: SparkSession, inPath: String, outPath: String,
                     keyCol: String, targetRows: Long): Int = {
-    val df = s.read.parquet(inPath)
+    val df = Parquet.read(s, inPath)
     val n = df.count()
     val parts = math.max(1L, (n + targetRows - 1) / targetRows).toInt
     df.repartitionByRange(parts, col(keyCol))

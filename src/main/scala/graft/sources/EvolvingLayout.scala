@@ -27,5 +27,5 @@ object EvolvingLayout {
 
   /** Read with the union schema; columns absent in a file read as null. */
   def read(s: SparkSession, path: String): DataFrame =
-    s.read.option("mergeSchema", "true").parquet(path)
+    Parquet.read(s, Map("mergeSchema" -> "true"), path)
 }

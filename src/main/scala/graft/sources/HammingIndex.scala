@@ -90,13 +90,13 @@ object HammingIndex {
     // postings derive from the STORED docs table (one pass over the
     // caller's frame, the MinhashIndex.build discipline), collapsed to
     // distinct hashes — duplicate mass costs doc rows, never postings
-    val distinctH = spark.read.parquet(s"$path/docs")
+    val distinctH = Parquet.read(spark, s"$path/docs")
       .select(col("h").as("__h")).distinct()
     StatsManifest.write(chunkKeys(distinctH, pieces),
       s"$path/postings", "key", nPostingFiles)
     // footer-count: postings hold exactly pieces rows per distinct hash
     val nHashes =
-      spark.read.parquet(s"$path/postings").count() / pieces
+      Parquet.read(spark, s"$path/postings").count() / pieces
     writeParams(spark, path, pieces, nHashes)
   }
 
@@ -126,11 +126,11 @@ object HammingIndex {
     val docs = Tombstones.without(s, src, StatsManifest.committed(s, s"$src/docs"))
     StatsManifest.write(docs, s"$dest/docs", "h", nDocFiles)
     val pieces = readParams(s, src).getInt(0)
-    val distinctH = s.read.parquet(s"$dest/docs")
+    val distinctH = Parquet.read(s, s"$dest/docs")
       .select(col("h").as("__h")).distinct()
     StatsManifest.write(chunkKeys(distinctH, pieces),
       s"$dest/postings", "key", nPostingFiles)
-    val nHashes = s.read.parquet(s"$dest/postings").count() / pieces
+    val nHashes = Parquet.read(s, s"$dest/postings").count() / pieces
     writeParams(s, dest, pieces, nHashes)
   }
 

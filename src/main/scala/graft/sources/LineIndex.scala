@@ -131,7 +131,7 @@ object LineIndex {
     val clean = cleanPins(
       StatsManifest.committed(s, s"$path/digests").dropDuplicates("hh"))
     StatsManifest.write(clean, s"$path/digests", "xx", nFiles)
-    val n = s.read.parquet(s"$path/digests").count()
+    val n = Parquet.read(s, s"$path/digests").count()
     writeParams(s, path, numHashes, n)
     cleanPins.close()
   }

@@ -107,12 +107,12 @@ object MinhashIndex {
       docs.select(col(idCol).as("id"),
         Dedup.shingles(col(textCol), k).as("sh")),
       s"$path/docs", "id", nDocFiles)
-    val stored = spark.read.parquet(s"$path/docs")
+    val stored = Parquet.read(spark, s"$path/docs")
       .withColumn("__sig", Dedup.minhashSig(col("sh"), numPerm, seed))
     val posts = Dedup.bandKeyRows(stored, "id", numPerm, bands)
       .select(combinedKey(col("__band"), col("__bkey")).as("key"), col("id"))
     StatsManifest.write(posts, s"$path/postings", "key", nPostingFiles)
-    val nDocs = spark.read.parquet(s"$path/docs").count() // footer-count
+    val nDocs = Parquet.read(spark, s"$path/docs").count() // footer-count
     writeParams(spark, path, k, numPerm, bands, seed, nDocs)
   }
 
@@ -150,7 +150,7 @@ object MinhashIndex {
     val posts = Tombstones.without(s, src, StatsManifest.committed(s, s"$src/postings"))
     StatsManifest.write(posts, s"$dest/postings", "key", nPostingFiles)
     val p = readParams(s, src)
-    val nDocs = s.read.parquet(s"$dest/docs").count()
+    val nDocs = Parquet.read(s, s"$dest/docs").count()
     writeParams(s, dest, p.getInt(0), p.getInt(1), p.getInt(2), p.getLong(3),
       nDocs)
   }

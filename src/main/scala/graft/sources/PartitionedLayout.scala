@@ -33,5 +33,5 @@ object PartitionedLayout {
   /** Read the layout; the partition column is reconstructed from
     * directory names (never stored in data pages).
     */
-  def read(s: SparkSession, path: String): DataFrame = s.read.parquet(path)
+  def read(s: SparkSession, path: String): DataFrame = Parquet.read(s, path)
 }

@@ -72,7 +72,7 @@ object SpatialLayout {
                  dirLevel: Int = 4, geomCol: String = "geom"): DataFrame = {
     val cells = Z2.coverEnvelope(xmin, ymin, xmax, ymax, dirLevel) :+ SpillKey
     val window = st.makeBBOX(lit(xmin), lit(ymin), lit(xmax), lit(ymax))
-    spark.read.option("basePath", path).parquet(windowDirs(spark, path, cells.toSet): _*)
+    Parquet.read(spark, Map("basePath" -> path), windowDirs(spark, path, cells.toSet): _*)
       .filter(col("z2p").isin(cells.map(Long.box).toIndexedSeq: _*))
       .filter(st.intersects(col("extent"), window)) // pushdown-rewritten ranges
       .filter(st.intersects(col(geomCol), window))  // exact JTS residual

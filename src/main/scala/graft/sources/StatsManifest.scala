@@ -52,7 +52,7 @@ object StatsManifest {
       .sortWithinPartitions(statCol)
       .write.mode("overwrite").parquet(path)
     val s = df.sparkSession
-    VersionedDir.write(statsOf(s.read.parquet(path), statCol), s"$path/_manifest")
+    VersionedDir.write(statsOf(Parquet.read(s, path), statCol), s"$path/_manifest")
   }
 
   def manifest(s: SparkSession, path: String): DataFrame =
@@ -91,7 +91,7 @@ object StatsManifest {
     else {
       // file-count-sized: collect the delta stats once, reuse them for
       // the merged commit AND the caller's cache extension
-      val freshRows = statsOf(s.read.parquet(fresh: _*), statCol).collect().toSeq
+      val freshRows = statsOf(Parquet.read(s, fresh: _*), statCol).collect().toSeq
       val freshDf = s.createDataFrame(
         new java.util.ArrayList(scala.jdk.CollectionConverters
           .SeqHasAsJava(freshRows).asJava),
@@ -169,8 +169,8 @@ object StatsManifest {
     * layout's schema. The one read every manifest-pruned path shares.
     */
   def readFiles(s: SparkSession, path: String, files: Seq[String]): DataFrame =
-    if (files.isEmpty) s.read.parquet(path).filter(lit(false))
-    else s.read.parquet(files: _*)
+    if (files.isEmpty) Parquet.read(s, path).filter(lit(false))
+    else Parquet.read(s, files: _*)
 
   /** Every row the committed manifest serves — and only those: data
     * files a crashed [[append]] landed without a manifest commit stay

@@ -64,7 +64,7 @@ object TimeTravel {
   }
 
   private def manifest(s: SparkSession, path: String, version: Int): DataFrame =
-    s.read.parquet(s"$path/_log/v$version")
+    Parquet.read(s, s"$path/_log/v$version")
 
   /** Apply a CDC changeset (op 'I'|'U'|'D' + seq, [[graft.ops.MergeInto]]
     * semantics) as a new snapshot. Only the buckets holding changed keys
@@ -126,7 +126,7 @@ object TimeTravel {
                           entries: Array[org.apache.spark.sql.Row]): DataFrame = {
     val byDir = entries.groupBy(_.getString(1)).view.mapValues(_.map(_.getInt(0)))
     byDir.map { case (dir, buckets) =>
-      s.read.parquet(dir)
+      Parquet.read(s, dir)
         .filter(col(BUCKET).isin(buckets.toIndexedSeq.map(b => lit(b)): _*))
         .drop(BUCKET)
     }.reduce(_ unionByName _)

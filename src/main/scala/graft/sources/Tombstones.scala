@@ -34,7 +34,7 @@ private[sources] object Tombstones {
   def without(s: SparkSession, path: String, frame: DataFrame): DataFrame =
     if (!FsUtil.exists(s, dir(path))) frame
     else frame.join(
-      broadcast(s.read.parquet(dir(path)).select("id").distinct()),
+      broadcast(Parquet.read(s, dir(path)).select("id").distinct()),
       Seq("id"), "left_anti")
 
   /** Start `path` with no deletes (a compaction destination). */

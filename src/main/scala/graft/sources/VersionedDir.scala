@@ -71,7 +71,7 @@ private[graft] object VersionedDir {
 
   /** The latest committed generation as a DataFrame. */
   def read(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(latestPath(s, dir))
+    Parquet.read(s, latestPath(s, dir))
 
   /** Version numbers of ALL generation dirs present — committed or
     * torn — ascending.

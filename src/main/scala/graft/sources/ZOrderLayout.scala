@@ -69,5 +69,5 @@ object ZOrderLayout {
       .write.mode("overwrite").parquet(path)
   }
 
-  def read(s: SparkSession, path: String): DataFrame = s.read.parquet(path)
+  def read(s: SparkSession, path: String): DataFrame = Parquet.read(s, path)
 }

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -41,7 +42,7 @@ object ScaleUp {
 
     def copyUnion(table: String, outParts: Int)(xform: (DataFrame, Int) => DataFrame): Unit =
       if (wanted(table)) {
-        val base = spark.read.parquet(s"$src/$table.parquet")
+        val base = Parquet.read(spark, s"$src/$table.parquet")
         val out = (0 until copies).map(c => xform(base, c)).reduce(_ unionByName _)
         out.repartition(outParts).write.mode("overwrite").parquet(s"$dest/$table.parquet")
         println(s"[scaleup] $table -> ${copies}x")
@@ -50,7 +51,7 @@ object ScaleUp {
 
     // fixed-size dimensions pass through unchanged
     for (t <- Seq("nation", "region") if wanted(t))
-      spark.read.parquet(s"$src/$t.parquet")
+      Parquet.read(spark, s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$dest/$t.parquet")
 
     copyUnion("customer", 8)((df, c) => df.withColumn("c_custkey", col("c_custkey") + off(c)))

@@ -1,7 +1,11 @@
 package graft
 
+import org.apache.spark.JobExecutionStatus
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.matchers.should.Matchers._
+import org.scalatest.time.SpanSugar._
 
 /** Shared local session for specs. sf0.001 keeps suites fast. */
 trait SparkTestSession extends BeforeAndAfterAll { self: Suite =>
@@ -14,6 +18,27 @@ trait SparkTestSession extends BeforeAndAfterAll { self: Suite =>
     * Spark deletes when the test JVM exits.
     */
   def scratch(prefix: String): String = graft.queries.scratchDir(prefix)
+
+  /** Spark jobs `body` launches. A marker job runs last in the same job
+    * group; status events are recorded in order, so once the marker
+    * shows as done every earlier job is recorded too.
+    */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "graft-jobs-" + java.util.UUID.randomUUID()
+    sc.setJobGroup(group, "count jobs")
+    val marker = try {
+      body
+      val f = sc.parallelize(Seq(1), 1).countAsync()
+      f.get()
+      f.jobIds.head
+    } finally sc.clearJobGroup()
+    val tracker = sc.statusTracker
+    eventually(timeout(30.seconds)) {
+      tracker.getJobInfo(marker).map(_.status) shouldBe Some(JobExecutionStatus.SUCCEEDED)
+    }
+    tracker.getJobIdsForGroup(group).count(_ != marker)
+  }
 
   override def afterAll(): Unit = super.afterAll()
 }

@@ -64,6 +64,12 @@ class MinhashIndexSpec extends AnyFunSuite with SparkTestSession with Matchers {
     hit should be < total
   }
 
+  test("opening a handle runs one job per metadata table it reads and none for their schemas") {
+    val p = path // built outside the count
+    // params.head() and the postings and docs manifests' collect()
+    jobsOf { new MinhashIndex.Maintainer(spark, p) } shouldBe 3
+  }
+
   test("dd_lsh_index_check invariants: zero missed-vs-exact, zero diff-vs-reband") {
     val r = graft.queries.Pipeline.ddLshIndexCheck(spark, sfDir).head()
     r.getLong(0) should be > 0L  // exact batch-touching pairs exist

@@ -2,15 +2,12 @@ package graft.sources
 
 import graft.SparkTestSession
 import graft.functions.st
-import org.apache.spark.JobExecutionStatus
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-import org.scalatest.time.SpanSugar._
 
 /** The Z2 layout must actually prune: fewer files read for a window
   * query than exist on disk, with identical results to a full scan, and
@@ -46,29 +43,6 @@ class SpatialLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers 
 
   private def ids(df: DataFrame): Set[Long] =
     df.select("id").collect().map(_.getLong(0)).toSet
-
-  /** Tasks of every job `body` launches. A marker job runs last in the
-    * same job group; status events are recorded in order, so once the
-    * marker shows as done every earlier job and stage is recorded too.
-    */
-  private def tasksOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = "graft-z2-" + java.util.UUID.randomUUID()
-    sc.setJobGroup(group, "count tasks")
-    val marker = try {
-      body
-      val f = sc.parallelize(Seq(1), 1).countAsync()
-      f.get()
-      f.jobIds.head
-    } finally sc.clearJobGroup()
-    val tracker = sc.statusTracker
-    eventually(timeout(30.seconds)) {
-      tracker.getJobInfo(marker).map(_.status) shouldBe Some(JobExecutionStatus.SUCCEEDED)
-    }
-    tracker.getJobIdsForGroup(group).toSeq.filter(_ != marker)
-      .flatMap(tracker.getJobInfo).flatMap(_.stageIds)
-      .flatMap(tracker.getStageInfo).map(_.numTasks).sum
-  }
 
   private def scanOf(df: org.apache.spark.sql.DataFrame): FileSourceScanExec = {
     df.collect() // execute so metrics fill
@@ -144,13 +118,16 @@ class SpatialLayoutSpec extends AnyFunSuite with SparkTestSession with Matchers 
   test("a small window lists only its directories: fewer tasks than the layout has directories") {
     val dirs = FsUtil.listPartitionDirs(spark, globalPath, "z2p").size
     dirs should be > 32
-    val tasks = tasksOf { SpatialLayout.readWindow(spark, globalPath, 10.0, 10.0, 12.0, 12.0) }
-    withClue(s"building one window ran $tasks tasks over $dirs directories") {
-      tasks should be < dirs
+    val jobs = jobsOf { SpatialLayout.readWindow(spark, globalPath, 10.0, 10.0, 12.0, 12.0) }
+    withClue(s"building one window over $dirs directories ran $jobs jobs") {
+      jobs shouldBe 0
     }
   }
 
   test("a whole-world window (> 32 directories, listed by Spark's job) returns the full scan") {
+    // more than 32 paths: Spark lists them in one job; the schema still
+    // comes from the driver, so that listing job is the only one
+    jobsOf { SpatialLayout.readWindow(spark, globalPath, -180.0, -90.0, 180.0, 90.0) } shouldBe 1
     val world = SpatialLayout.readWindow(spark, globalPath, -180.0, -90.0, 180.0, 90.0)
     val full = spark.read.parquet(globalPath)
       .filter(st.intersects(st.makeBBOX(-180.0, -90.0, 180.0, 90.0), col("geom")))
