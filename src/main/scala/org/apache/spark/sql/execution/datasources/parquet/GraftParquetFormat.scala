@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.StructType
 /** Spark's parquet format, with the schema of a non-merging read taken
   * on the driver. Without `mergeSchema` Spark reads exactly one footer,
   * but it reads it in a one-task Spark job; this format reads that same
-  * footer in the calling thread. Lives in Spark's package because
+  * footer on the driver. Lives in Spark's package because
   * `readParquetFootersInParallel` is `private[parquet]`; read through
   * `graft.sources.Parquet`, never directly.
   *
@@ -17,6 +17,8 @@ import org.apache.spark.sql.types.StructType
   * `Relation … parquet` and `FileScan parquet`) and `equals`.
   */
 class GraftParquetFormat extends ParquetFileFormat {
+
+  private val Summaries = Set(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
 
   /** With `mergeSchema` off, the file `ParquetUtils.inferSchema` picks
     * (leaves sorted by path: `_common_metadata`, else `_metadata`, else
@@ -35,10 +37,7 @@ class GraftParquetFormat extends ParquetFileFormat {
       def named(name: String) = leaves.find(_.getPath.getName == name)
       val file = named(PARQUET_COMMON_METADATA_FILE)
         .orElse(named(PARQUET_METADATA_FILE))
-        .orElse(leaves.find { f =>
-          val n = f.getPath.getName
-          n != PARQUET_COMMON_METADATA_FILE && n != PARQUET_METADATA_FILE
-        })
+        .orElse(leaves.find(f => !Summaries(f.getPath.getName)))
       val converter = new ParquetToSparkSchemaConverter(
         assumeBinaryIsString = conf.isParquetBinaryAsString,
         assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,

@@ -19,6 +19,19 @@ trait SparkTestSession extends BeforeAndAfterAll { self: Suite =>
     */
   def scratch(prefix: String): String = graft.queries.scratchDir(prefix)
 
+  /** Runs `body` with `confs` set on `session`, then restores what was
+    * there.
+    */
+  def withConf[T](session: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> session.conf.getOption(k) }
+    confs.foreach { case (k, v) => session.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => session.conf.set(k, v)
+      case (k, None) => session.conf.unset(k)
+    }
+  }
+
   /** Spark jobs `body` launches. A marker job runs last in the same job
     * group; status events are recorded in order, so once the marker
     * shows as done every earlier job is recorded too.

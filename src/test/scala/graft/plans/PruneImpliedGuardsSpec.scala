@@ -21,19 +21,11 @@ class PruneImpliedGuardsSpec extends AnyFunSuite with SparkTestSession with Matc
     * and ANSI mode, set to Spark's defaults on `session`, then restores
     * what was there.
     */
-  private def underSparkDefaults[T](session: SparkSession = spark)(body: => T): T = {
-    val confs = Seq(
+  private def underSparkDefaults[T](session: SparkSession = spark)(body: => T): T =
+    withConf(session,
       "spark.sql.optimizer.excludedRules" -> "",
       "spark.sql.constraintPropagation.enabled" -> "true",
-      "spark.sql.ansi.enabled" -> "true")
-    val saved = confs.map { case (k, _) => k -> session.conf.getOption(k) }
-    confs.foreach { case (k, v) => session.conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => session.conf.set(k, v)
-      case (k, None) => session.conf.unset(k)
-    }
-  }
+      "spark.sql.ansi.enabled" -> "true")(body)
 
   /** Every `isnotnull(E)` / `size(E) > 0` filter conjunct over a
     * computed `E` in the optimized plan.

@@ -29,16 +29,6 @@ class ParquetReadSpec extends AnyFunSuite with SparkTestSession with Matchers {
     ours.schema shouldBe spark.schema
   }
 
-  private def withConf[T](kv: (String, String)*)(body: => T): T = {
-    val before = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally before.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   /** A parquet file without Spark's schema in its footer, as a
     * non-Spark writer leaves it, so the converter's flags decide the
     * types: an unannotated binary, an INT96 and a local timestamp.
@@ -62,7 +52,7 @@ class ParquetReadSpec extends AnyFunSuite with SparkTestSession with Matchers {
   test("every corpus table reads with Spark's schema; events under nanosAsLong") {
     for (name <- Tables.names) withClue(name) {
       val nanos = if (name == "events") Seq("spark.sql.legacy.parquet.nanosAsLong" -> "true") else Nil
-      withConf(nanos: _*) {
+      withConf(spark, nanos: _*) {
         sameSchema(Tables(spark, sfDir, name), spark.read.parquet(s"$sfDir/$name.parquet"))
       }
     }
@@ -123,13 +113,13 @@ class ParquetReadSpec extends AnyFunSuite with SparkTestSession with Matchers {
       Seq("spark.sql.parquet.binaryAsString" -> "true"),
       Seq("spark.sql.parquet.inferTimestampNTZ.enabled" -> "false"))
     for (kv <- flags) withClue(kv) {
-      withConf(kv: _*) { sameSchema(Parquet.read(spark, foreignDir), spark.read.parquet(foreignDir)) }
+      withConf(spark, kv: _*) { sameSchema(Parquet.read(spark, foreignDir), spark.read.parquet(foreignDir)) }
     }
     // the flags are live: each changes a type
-    withConf("spark.sql.parquet.binaryAsString" -> "true") {
+    withConf(spark, "spark.sql.parquet.binaryAsString" -> "true") {
       Parquet.read(spark, foreignDir).schema("raw").dataType shouldBe StringType
     }
-    withConf("spark.sql.parquet.inferTimestampNTZ.enabled" -> "false") {
+    withConf(spark, "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false") {
       Parquet.read(spark, foreignDir).schema("local_ts").dataType shouldBe TimestampType
     }
     val plain = Parquet.read(spark, foreignDir).schema
@@ -147,7 +137,7 @@ class ParquetReadSpec extends AnyFunSuite with SparkTestSession with Matchers {
     jobsOf { merged = EvolvingLayout.read(spark, dir) } shouldBe 1
     sameSchema(merged, spark.read.option("mergeSchema", "true").parquet(dir))
     merged.columns.sorted shouldBe Array("id", "late")
-    withConf("spark.sql.parquet.mergeSchema" -> "true") {
+    withConf(spark, "spark.sql.parquet.mergeSchema" -> "true") {
       sameSchema(Parquet.read(spark, dir), spark.read.parquet(dir))
       Parquet.read(spark, dir).columns.sorted shouldBe Array("id", "late")
     }
